@@ -24,16 +24,24 @@ from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
 
 
 def connected_components(
-    edges_undirected: DataFrame, max_iter: int = 50
+    edges_undirected: DataFrame, max_iter: int = 50, labels: DataFrame | None = None
 ) -> DataFrame:
     """edges_undirected: both directions present (symmetrized). Returns
-    ``(id, component)`` where component = min node id in the component."""
+    ``(id, component)`` where component = min node id in the component.
+
+    ``labels``: optional seed ``(id, component)`` table that replaces the
+    own-id initial labels — the dynamic maintainers resume propagation
+    from a previous labeling (or relabel a node subset from its own ids).
+    Messages flow along edges whose ``src`` has a label row, so every
+    ``dst`` they reach should already be a label row."""
     eu = edges_undirected.select("src", "dst")
-    lbl = checkpoint(
-        eu.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
+    if labels is None:
+        labels = (
+            eu.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
+        )
+    lbl = checkpoint(labels.select("id", "component"))
     # the label table has exactly n rows every round — count once on the
     # checkpointed table and let mirror() pick broadcast vs shuffle-hash.
     n = lbl.count()

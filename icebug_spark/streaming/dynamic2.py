@@ -12,6 +12,11 @@ Model (SURVEY §1.5/§2.15): events are rows (ts, type, u, v, w); a batch is
 everything between TIME_STEP markers. Each maintainer takes (state, batch)
 → new state, recomputing only from the AFFECTED frontier rather than from
 scratch — the distributed analog of the reference's per-event updates.
+
+The maintainers ride the static kernels' one-job-per-round loops: DynCC is
+``components.connected_components`` from a seed label table, and DynBFS and
+the affected cone are carrier loops (``traversal.sssp_weighted`` /
+``multi_source_bfs`` shape). Each reads its event batch once (``_read_batch``).
 """
 
 from __future__ import annotations
@@ -19,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.operators.components import connected_components
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -34,49 +40,85 @@ def _sym(e: DataFrame) -> DataFrame:
 
 
 def apply_edge_events(edges: DataFrame, batch: DataFrame) -> DataFrame:
-    """Apply one event batch to an edge table (additions + removals,
-    last-wins within the batch by ts). Returns the new edge table."""
-    adds = batch.where(F.col("type") == "EDGE_ADDITION").select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    )
-    dels = batch.where(F.col("type") == "EDGE_REMOVAL").select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
+    """Apply one event batch to an edge table. The result holds every
+    pair of ``edges`` and of the EDGE_ADDITION events, minus every pair an
+    EDGE_REMOVAL event names: within a batch a removal wins whatever the
+    order of the events (``ts`` is not read). One read of the batch: the
+    pairs and events meet in one ``groupBy(src, dst)``, and a pair is kept
+    iff its group has no removal row. Returns the new edge table."""
+    events = batch.where(F.col("type").isin("EDGE_ADDITION", "EDGE_REMOVAL")).select(
+        F.col("u").alias("src"), F.col("v").alias("dst"),
+        (F.col("type") == "EDGE_REMOVAL").alias("rm"),
     )
     return (
-        edges.select("src", "dst")
-        .union(adds)
-        .distinct()
-        .join(dels, ["src", "dst"], "left_anti")
+        edges.select("src", "dst", F.lit(False).alias("rm"))
+        .union(events)
+        .groupBy("src", "dst")
+        .agg(F.max("rm").alias("rm"))
+        .where(~F.col("rm"))
+        .select("src", "dst")
     )
 
 
-def affected_nodes(
-    edges_new: DataFrame, batch: DataFrame, hops: int = 2
-) -> DataFrame:
+def _read_batch(batch: DataFrame, labels: DataFrame | None = None):
+    """One job over the event batch → ``(ends, n, has_removal)``. ``ends``
+    is the materialized distinct endpoint table ``(id)`` of every event —
+    with each endpoint's ``component`` from ``labels`` when given (null
+    for an endpoint outside the labeling) — ``n`` its row count; the
+    count and the removal flag ride the job as observed metrics."""
+    rm = (F.col("type") == "EDGE_REMOVAL").alias("rm")
+    ends = batch.select(F.explode(F.array("u", "v")).alias("id"), rm).groupBy("id").agg(
+        F.max("rm").alias("rm")
+    )
+    if labels is not None:
+        ends = ends.join(labels, "id", "left")
+    # a null id groups into one row that carries its events' removal flag;
+    # it is dropped after the job, and count("id") skips it
+    cp, m = checkpoint_observe(ends, F.count("id").alias("n"), F.max("rm").alias("rm"))
+    return cp.where(F.col("id").isNotNull()).drop("rm"), int(m["n"]), bool(m["rm"])
+
+
+def _cone(eu: DataFrame, seeds: DataFrame, n: int, hops: int):
+    """Nodes within ``hops`` of the ``n`` seed ids over ``eu`` (seeds
+    included) → ``(cone, rows)``. A carrier loop like
+    ``traversal.multi_source_bfs``: the reached set rides the expansion
+    shuffle flagged ``seen`` and a node is new iff its group has no
+    carrier row, so each hop is one checkpoint."""
+    state = seeds.select("id", F.lit(True).alias("frontier"))
+    rows = front = n
+    for _ in range(hops):
+        frontier = state.where(F.col("frontier"))
+        nxt = mirror(frontier, front).join(eu, frontier.id == eu.src).select(
+            F.col("dst").alias("id"), F.lit(False).alias("seen")
+        )
+        state, m = checkpoint_observe(
+            state.select("id", F.lit(True).alias("seen")).unionByName(nxt)
+            .groupBy("id").agg((~F.max("seen")).alias("frontier")),
+            F.sum(F.col("frontier").cast("long")).alias("nf"),
+        )
+        front = int(m["nf"] or 0)
+        rows += front
+        if front == 0:
+            break
+    return state.select("id"), rows
+
+
+def _invalidate(dist: DataFrame, eu: DataFrame, ends: DataFrame, n: int, hops: int):
+    """Drop the ``dist`` rows inside the batch's affected cone. The SOURCE
+    (dist == 0) is never invalidated — it anchors the re-relaxation even
+    when the cone covers the whole graph."""
+    cone, rows = _cone(eu, ends, n, hops)
+    return dist.join(
+        mirror(cone.withColumn("aff", F.lit(True)), rows), "id", "left"
+    ).where(F.col("aff").isNull() | (F.col("dist") == 0)).select("id", "dist")
+
+
+def affected_nodes(edges_new: DataFrame, batch: DataFrame, hops: int = 2) -> DataFrame:
     """AffectedNodes (``distance/AffectedNodes.hpp:17``): the k-hop
     neighborhood (in the UPDATED graph) of every event endpoint — the node
     set whose results may have changed. → (id)."""
-    eu = _sym(edges_new).localCheckpoint(eager=True)
-    frontier = (
-        batch.select(F.col("u").alias("id"))
-        .union(batch.select(F.col("v").alias("id")))
-        .where(F.col("id").isNotNull())
-        .distinct()
-    )
-    seen = frontier
-    for _ in range(hops):
-        # frontier emptiness rides the checkpoint job (observed metric)
-        frontier, m = checkpoint_observe(
-            eu.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(seen, "id", "left_anti"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        if int(m["n"] or 0) == 0:
-            break
-        seen = seen.union(frontier).localCheckpoint(eager=True)
-    return seen
+    ends, n, _ = _read_batch(batch)
+    return _cone(checkpoint(_sym(edges_new)), ends, n, hops)[0]
 
 
 def dyn_bfs_update(
@@ -90,44 +132,42 @@ def dyn_bfs_update(
     lengthen paths — detected by seeding affected nodes with +inf and
     re-relaxing from their still-settled neighbors (bounded recompute; the
     reference tracks the same 'affected' set per event)."""
-    eu = _sym(edges_new).localCheckpoint(eager=True)
-    has_removal = batch.where(F.col("type") == "EDGE_REMOVAL").limit(1).count() > 0
-
+    eu = checkpoint(_sym(edges_new))
+    ends, n, has_removal = _read_batch(batch)
     if has_removal:
-        # invalidate the affected region, keep the rest as seeds; the
-        # SOURCE (dist == 0) is never invalidated — it anchors the
-        # re-relaxation even when the cone covers the whole graph
-        aff = affected_nodes(edges_new, batch, hops=max_rounds)
-        dist = dist.join(aff, "id", "left_anti").unionByName(
-            dist.where(F.col("dist") == 0)
-        ).distinct()
-
-    cur = dist.localCheckpoint(eager=True)
+        dist = _invalidate(dist, eu, ends, n, max_rounds)
+    # Only rows whose distance changed last round relax (all in the first):
+    # an unchanged row already pushed its value, so each round ends in the
+    # state a relax of all rows gives. sssp_weighted's carrier shape: the
+    # state rides the relax shuffle flagged seen; its min is the old dist.
+    inf = F.lit(1 << 60)
+    state, m = checkpoint_observe(
+        dist.select("id", "dist", F.lit(True).alias("changed")),
+        F.count(F.lit(1)).alias("nch"),
+    )
     for _ in range(max_rounds):
-        relaxed = (
-            eu.join(cur.withColumnRenamed("id", "src").withColumnRenamed("dist", "ds"), "src")
-            .select(F.col("dst").alias("id"), (F.col("ds") + 1).alias("nd"))
+        active = state.where(F.col("changed"))
+        relax = mirror(active, int(m["nch"] or 0)).join(eu, active.id == eu.src).select(
+            F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"),
+            F.lit(False).alias("seen"),
+        )
+        merged = (
+            state.select("id", "dist", F.lit(True).alias("seen")).unionByName(relax)
             .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
+            .agg(F.min(F.when(F.col("seen"), F.col("dist"))).alias("sd"),
+                 F.min(F.when(~F.col("seen"), F.col("dist"))).alias("nd"))
         )
-        # the changed flag is computed inline during the merge (the old
-        # shape re-joined merged against cur) and its count rides the
-        # checkpoint job as an observed metric — one action per round
-        nd = F.least(
-            F.coalesce("dist", F.lit(1 << 60)), F.coalesce("nd", F.lit(1 << 60))
-        )
-        merged, m = checkpoint_observe(
-            cur.join(relaxed, "id", "full_outer").select(
+        state, m = checkpoint_observe(
+            merged.select(
                 "id",
-                nd.alias("ndist"),
-                (F.col("dist").isNull() | (nd < F.col("dist"))).alias("ch"),
+                F.least(F.coalesce("sd", inf), F.coalesce("nd", inf)).alias("dist"),
+                (F.col("sd").isNull() | (F.coalesce("nd", inf) < F.col("sd"))).alias("changed"),
             ),
-            F.sum(F.col("ch").cast("long")).alias("nch"),
+            F.sum(F.col("changed").cast("long")).alias("nch"),
         )
-        cur = merged.select("id", F.col("ndist").alias("dist"))
         if int(m["nch"] or 0) == 0:
             break
-    return cur
+    return state.select("id", "dist")
 
 
 def dyn_cc_update(
@@ -137,73 +177,32 @@ def dyn_cc_update(
     Additions: min-label propagation seeded from the merged labels (only
     components touching an added edge move). Removals: may split a
     component — the affected components are relabeled from scratch
-    (restricted recompute: only edges inside those components join the
-    loop), everything else is untouched."""
-    dels = batch.where(F.col("type") == "EDGE_REMOVAL")
-    eu = _sym(edges_new).localCheckpoint(eager=True)
-
+    (restricted recompute: only those components' nodes carry labels
+    into the loop), everything else is untouched. Both run the static
+    ``connected_components`` loop from a seed label table."""
+    eu = checkpoint(_sym(edges_new))
     # normalize label coverage to the UPDATED graph's node set: an added
     # edge may introduce endpoints the old labeling never saw (they seed
     # as their own component and merge via propagation), and endpoints
     # that lost their last edge drop out (matching a static relabel)
-    nodes = eu.select(F.col("src").alias("id")).distinct()
-    comp = nodes.join(comp, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
+    comp = checkpoint(
+        eu.select(F.col("src").alias("id")).distinct().join(comp, "id", "left")
+        .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
-
-    if dels.limit(1).count() > 0:
-        # components touched by ANY event → full relabel restricted to
-        # them. Removals may split; additions in the same batch may merge
-        # two components a removal never touched — restricting to removal
-        # endpoints alone would freeze that merge away.
-        touched = (
-            batch.select(F.col("u").alias("id"))
-            .union(batch.select(F.col("v").alias("id")))
-            .where(F.col("id").isNotNull())
-            .join(comp, "id")
-            .select("component")
-            .distinct()
-        )
-        frozen = comp.join(touched, "component", "left_anti")
-        active_nodes = comp.join(touched, "component").select("id")
-        labels = active_nodes.withColumn("component", F.col("id"))
-        active_edges = (
-            eu.join(active_nodes.withColumnRenamed("id", "src"), "src")
-            .join(active_nodes.withColumnRenamed("id", "dst"), "dst")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        frozen = None
-        labels = comp
-        active_edges = eu
-
-    cur = labels.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        prop = (
-            active_edges.join(cur.withColumnRenamed("id", "src").withColumnRenamed("component", "c"), "src")
-            .select(F.col("dst").alias("id"), "c")
-            .groupBy("id")
-            .agg(F.min("c").alias("nc"))
-        )
-        # changed flag inline + observed count — one action per round
-        nc = F.least(F.col("component"), F.coalesce("nc", F.col("component")))
-        merged, m = checkpoint_observe(
-            cur.join(prop, "id", "left").select(
-                "id",
-                nc.alias("ncomp"),
-                (nc < F.col("component")).alias("ch"),
-            ),
-            F.sum(F.col("ch").cast("long")).alias("nch"),
-        )
-        cur = merged.select("id", F.col("ncomp").alias("component"))
-        if int(m["nch"] or 0) == 0:
-            break
+    ends, n, has_removal = _read_batch(batch, comp)
+    if not has_removal:
+        return connected_components(eu, max_iter=max_rounds, labels=comp)
+    # components touched by ANY event → full relabel restricted to them.
+    # Removals may split; additions in the same batch may merge two
+    # components a removal never touched — restricting to removal
+    # endpoints alone would freeze that merge away.
+    touched = mirror(ends.select("component").where("component IS NOT NULL").distinct(), n)
+    frozen = comp.join(touched, "component", "left_anti")
+    own = comp.join(touched, "component", "left_semi").select("id", F.col("id").alias("component"))
     # frozen's anti-join on "component" moves the key column first — a
     # positional union would transpose (id, component); match by name
-    return (
-        frozen.select("id", "component").unionByName(cur.select("id", "component"))
-        if frozen is not None
-        else cur
+    return frozen.select("id", "component").unionByName(
+        connected_components(eu, max_iter=max_rounds, labels=own)
     )
 
 

@@ -344,7 +344,7 @@ def dyn_sssp_update(
     the CURRENT labels (settled nodes relax once, improvements cascade
     only through the affected cone). Removals invalidate the affected
     region first (per-event affected set, like the reference)."""
-    from icebug_spark.streaming.dynamic2 import affected_nodes
+    from icebug_spark.streaming.dynamic2 import _invalidate, _read_batch
 
     e = edges_weighted_new
     if "weight" not in e.columns:
@@ -352,14 +352,9 @@ def dyn_sssp_update(
     ew = e.select("src", "dst", "weight").union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     ).localCheckpoint(eager=True)
-    has_removal = batch.where(F.col("type") == "EDGE_REMOVAL").limit(1).count() > 0
+    ends, n, has_removal = _read_batch(batch)
     if has_removal:
-        aff = affected_nodes(edges_weighted_new.select("src", "dst"), batch, hops=max_rounds)
-        # the SOURCE (dist == 0) is never invalidated — it anchors the
-        # re-relaxation even when the affected cone covers the whole graph
-        dist = dist.join(aff, "id", "left_anti").unionByName(
-            dist.where(F.col("dist") == 0)
-        ).distinct()
+        dist = _invalidate(dist, ew, ends, n, max_rounds)
 
     # frontier-based relaxation: only nodes whose label improved last
     # round relax outward (everyone starts in the frontier — the resumed

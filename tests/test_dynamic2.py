@@ -140,6 +140,54 @@ def test_apply_edge_events_last_wins(spark):
     assert sorted(map(tuple, new.collect())) == [(1, 2)]
 
 
+def test_apply_edge_events_removal_wins_either_order(spark):
+    # a removal wins over an addition of the same pair within one batch,
+    # whatever the order of the two events
+    old = _sym_df(spark, [(0, 1)])
+    for rows in (
+        [("EDGE_ADDITION", 1, 2), ("EDGE_REMOVAL", 1, 2)],
+        [("EDGE_REMOVAL", 1, 2), ("EDGE_ADDITION", 1, 2)],
+    ):
+        new = apply_edge_events(old, _batch(spark, rows))
+        assert sorted(map(tuple, new.collect())) == [(0, 1), (1, 0)]
+
+
+def test_dyn_maintainers_mixed_batch_smoke(spark):
+    # one mixed batch through all three entry points: removing (2,3)
+    # lengthens dist(3) via the detour 1-5-6-3, removing the bridge (4,10)
+    # splits {10,11,12} off, adding (12,20) merges it with {20,21}, and
+    # adding (21,99) brings in a node new to the graph.
+    pairs = [(0, 1), (1, 2), (2, 3), (3, 4), (1, 5), (5, 6), (6, 3),
+             (4, 10), (10, 11), (11, 12), (12, 10), (20, 21)]
+    old = _sym_df(spark, pairs)
+    # the old graph's state, written out: one component with min id 0
+    # plus {20,21}, and hop distances from node 0
+    comp0 = spark.createDataFrame(
+        [(i, 0) for i in (0, 1, 2, 3, 4, 5, 6, 10, 11, 12)] + [(20, 20), (21, 20)],
+        "id LONG, component LONG",
+    )
+    dist0 = spark.createDataFrame(
+        [(0, 0), (1, 1), (2, 2), (5, 2), (3, 3), (6, 3), (4, 4), (10, 5), (11, 6), (12, 6)],
+        "id LONG, dist LONG",
+    )
+    batch = _batch(
+        spark,
+        [
+            ("EDGE_REMOVAL", 2, 3), ("EDGE_REMOVAL", 3, 2),
+            ("EDGE_REMOVAL", 4, 10), ("EDGE_REMOVAL", 10, 4),
+            ("EDGE_ADDITION", 12, 20), ("EDGE_ADDITION", 20, 12),
+            ("EDGE_ADDITION", 21, 99), ("EDGE_ADDITION", 99, 21),
+        ],
+    )
+    new = apply_edge_events(old, batch).localCheckpoint(eager=True)
+    got_c = _comps(dyn_cc_update(comp0, new, batch))
+    got_d = _dists(dyn_bfs_update(dist0, new, batch))
+    assert got_c == _comps(connected_components(new))
+    assert got_d == _dists(bfs_distances(new, source=0))
+    assert got_c[0] == 0 and got_c[10] == 10 and got_c[21] == 10 and got_c[99] == 10
+    assert got_d[3] == 4 and got_d[4] == 5 and 10 not in got_d
+
+
 def test_dyn_bfs_mixed_batch(spark):
     # remove the short edge AND add a brand-new shortcut in one batch:
     # dists must match a static recompute on the final graph.

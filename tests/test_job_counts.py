@@ -62,3 +62,55 @@ def test_cc_marginal_jobs_per_round(spark):
     j4, j10 = jobs(4), jobs(10)
     marginal = (j10 - j4) / 6.0
     assert marginal <= 4.0, f"jobs/round regressed: {marginal} (j4={j4}, j10={j10})"
+
+
+def _dyn_jobs(spark, kind: str, depth: int) -> int:
+    """Jobs of one dynamic update on the path 0..depth plus a pendant edge
+    (0, 1000) that the batch removes: the removal sends both maintainers
+    down their restricted-recompute path, whose rounds grow with depth."""
+    from icebug_spark.operators.components import connected_components
+    from icebug_spark.operators.traversal import bfs_distances
+    from icebug_spark.streaming.dynamic2 import (
+        apply_edge_events,
+        dyn_bfs_update,
+        dyn_cc_update,
+    )
+
+    sc = spark.sparkContext
+    pairs = [(i, i + 1) for i in range(depth)] + [(0, 1000)]
+    old = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src BIGINT, dst BIGINT"
+    ).localCheckpoint(eager=True)
+    batch = spark.createDataFrame(
+        [("EDGE_REMOVAL", 0, 1000), ("EDGE_REMOVAL", 1000, 0)],
+        "type STRING, u BIGINT, v BIGINT",
+    ).localCheckpoint(eager=True)
+    new = apply_edge_events(old, batch).localCheckpoint(eager=True)
+    if kind == "cc":
+        update, state = dyn_cc_update, connected_components(old)
+    else:
+        update, state = dyn_bfs_update, bfs_distances(old, 0)
+    state = state.localCheckpoint(eager=True)
+    group = f"dyn_{kind}_jobs_{depth}"
+    sc.setJobGroup(group, "probe")
+    n = len(update(state, new, batch).collect())
+    sc.setJobGroup(None, None)
+    assert n == depth + 1
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dyn_cc_marginal_jobs_per_round(spark):
+    """dyn_cc_update on a removal batch relabels the path from its own
+    ids, one connected_components round per unit of depth: at most 4
+    jobs per round. The hand-rolled loop it replaced cost ~6.8."""
+    marginal = (_dyn_jobs(spark, "cc", 10) - _dyn_jobs(spark, "cc", 4)) / 6.0
+    assert marginal <= 4.0, f"dyn_cc jobs/round regressed: {marginal}"
+
+
+def test_dyn_bfs_marginal_jobs_per_round(spark):
+    """dyn_bfs_update on a removal batch runs two loops whose rounds grow
+    with depth — the affected-cone hops and the relax rounds — so each
+    unit of depth is two rounds: at most 4 jobs per round. The old
+    two-checkpoint cone and full-outer relax cost ~7."""
+    marginal = (_dyn_jobs(spark, "bfs", 10) - _dyn_jobs(spark, "bfs", 4)) / 12.0
+    assert marginal <= 4.0, f"dyn_bfs jobs/round regressed: {marginal}"
