@@ -13,8 +13,13 @@ Parity targets (reference ``distance/``):
   negative-cycle detection;
 - ReverseBFS.hpp:16 — BFS on in-edges.
 
-Spark-first shapes: every search is a frontier-restricted join loop (the
-per-round shuffle is proportional to the wavefront, not the graph);
+Spark-first shapes: every search is a frontier-restricted loop over
+``traversal``'s two round kernels — ``expand_round`` for the BFS
+searches, ``relax_round`` for the weighted ones — so the per-round shuffle
+is proportional to the wavefront, not the graph, and each round is one
+checkpoint job whose stop-rule scalars (frontier size, targets reached,
+min active label, target label) ride that job as observed metrics. Only
+the bidirectional searches' meeting value μ is still its own ``collect``.
 Floyd-Warshall's O(n³) triple loop is re-expressed as ⌈log₂ n⌉ min-plus
 matrix squarings (each a shuffle join via the GraphBLAS-lite kernels) —
 the associative re-formulation that distributes, versus the inherently
@@ -26,25 +31,23 @@ distributed, and bidirectional halves the number of rounds.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators import algebraic
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.operators.traversal import (
+    bfs_distances,
+    expand_round,
+    level,
+    multi_source_bfs,
+    relax_round,
+)
+from icebug_spark.plans.iterate import checkpoint, mirror
 
-
-def _expand_level(
-    frontier: DataFrame, seen: DataFrame, e: DataFrame
-) -> DataFrame:
-    """One BFS level: neighbors of the frontier not yet seen → new
-    (id, dist) rows (min over parallel discoveries)."""
-    return (
-        frontier.join(e, frontier.id == e.src)
-        .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
-        .join(seen.select("id"), "id", "left_anti")
-        .groupBy("id")
-        .agg(F.min("dist").alias("dist"))
-    )
+_ST = "source BIGINT, target BIGINT, dist {}"
+_SEED = "id BIGINT, dist DOUBLE, changed BOOLEAN"
 
 
 def bidirectional_bfs(
@@ -61,97 +64,51 @@ def bidirectional_bfs(
     unreachable within ``max_hops``.
     """
     spark = edges.sparkSession
+    out = _ST.format("BIGINT")
     if source == target:
-        return spark.createDataFrame(
-            [(source, target, 0)], "source BIGINT, target BIGINT, dist BIGINT"
-        )
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+        return spark.createDataFrame([(source, target, 0)], out)
+    e = checkpoint(edges.select("src", "dst"))
     er = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    ds = spark.createDataFrame([(int(source), 0)], "id BIGINT, dist BIGINT")
-    dt = spark.createDataFrame([(int(target), 0)], "id BIGINT, dist BIGINT")
-    fs, ft = ds, dt
-    ls = lt = 0
-    s_alive = t_alive = True
-
+    # per side (forward, backward): the expand_round carrier state, the
+    # lazy union of its level slices (materialized seeds keep every later
+    # μ query on checkpoint scans), its frontier size (0 once the side is
+    # exhausted), its radius and its node count
+    state = [
+        checkpoint(
+            spark.createDataFrame([(int(v), True)], "id BIGINT, frontier BOOLEAN")
+        )
+        for v in (source, target)
+    ]
+    levels = [[level(st, 0)] for st in state]
+    rows = [1, 1]
+    radius = [0, 0]
+    size = [1, 1]
     for _ in range(max_hops):
+        ds, dt = (reduce(DataFrame.unionByName, lv) for lv in levels)
         mu = (
-            ds.join(dt.withColumnRenamed("dist", "dt"), "id")
+            ds.join(mirror(dt.withColumnRenamed("dist", "dt"), size[1]), "id")
             .agg(F.min(F.col("dist") + F.col("dt")).alias("mu"))
             .collect()[0]["mu"]
         )
-        if mu is not None and mu <= ls + lt:
-            return spark.createDataFrame(
-                [(source, target, int(mu))],
-                "source BIGINT, target BIGINT, dist BIGINT",
-            )
-        if not (s_alive or t_alive):
+        if mu is not None and mu <= sum(radius):
+            return spark.createDataFrame([(source, target, int(mu))], out)
+        if not any(rows):
             break  # both searches exhausted without bracketing: unreachable
-        expand_s = s_alive and (ls <= lt or not t_alive)
-        # frontier emptiness rides the expansion checkpoint (observed)
-        if expand_s:
-            fs, mf = checkpoint_observe(
-                _expand_level(fs, ds, e), F.count(F.lit(1)).alias("n")
-            )
-            if int(mf["n"] or 0) == 0:
-                s_alive = False
-            else:
-                ds = ds.union(fs).localCheckpoint(eager=True)
-                ls += 1
-        else:
-            ft, mf = checkpoint_observe(
-                _expand_level(ft, dt, er), F.count(F.lit(1)).alias("n")
-            )
-            if int(mf["n"] or 0) == 0:
-                t_alive = False
-            else:
-                dt = dt.union(ft).localCheckpoint(eager=True)
-                lt += 1
-    return spark.createDataFrame([], "source BIGINT, target BIGINT, dist BIGINT")
+        i = 0 if rows[0] and (radius[0] <= radius[1] or not rows[1]) else 1
+        state[i], m = expand_round(state[i], (e, er)[i], rows[i])
+        rows[i] = int(m["nf"] or 0)
+        if rows[i]:
+            radius[i] += 1
+            size[i] += rows[i]
+            levels[i].append(level(state[i], radius[i]))
+    return spark.createDataFrame([], out)
 
 
 def reverse_bfs(edges: DataFrame, source: int, max_hops: int = 60) -> DataFrame:
     """Hop distances along in-edges (reference ``distance/ReverseBFS.hpp:16``)
     — BFS on the transpose. Returns (id, dist)."""
-    from icebug_spark.operators.traversal import bfs_distances
-
     er = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return bfs_distances(er, source, max_hops)
-
-
-def _relax_rounds(e: DataFrame, dist: DataFrame):
-    """One Bellman-Ford relax round from the active rows. Returns
-    (new_dist, n_changed, min_active)."""
-    active = dist.where(F.col("changed"))
-    relax = (
-        active.join(e, active.id == e.src)
-        .select(
-            F.col("dst").alias("id"),
-            (F.col("dist") + F.col("weight")).alias("nd"),
-        )
-        .groupBy("id")
-        .agg(F.min("nd").alias("nd"))
-    )
-    joined = dist.select("id", "dist").join(relax, "id", "full")
-    new = joined.select(
-        "id",
-        F.least(
-            F.coalesce(F.col("dist"), F.lit(float("inf"))),
-            F.coalesce(F.col("nd"), F.lit(float("inf"))),
-        ).alias("dist"),
-        (
-            F.col("dist").isNull()
-            | (F.coalesce(F.col("nd"), F.lit(float("inf"))) < F.col("dist"))
-        ).alias("changed"),
-    )
-    # changed-count and min-active-label ride the checkpoint job as
-    # observed metrics — one action per relax round instead of two
-    new, m = checkpoint_observe(
-        new,
-        F.sum(F.col("changed").cast("long")).alias("n"),
-        F.min(F.when(F.col("changed"), F.col("dist"))).alias("mn"),
-    )
-    return new, int(m["n"] or 0), m["mn"]
 
 
 def bidirectional_dijkstra(
@@ -169,50 +126,46 @@ def bidirectional_dijkstra(
     Returns one row (source, target, dist DOUBLE); empty if unreachable.
     """
     spark = edges_weighted.sparkSession
+    out = _ST.format("DOUBLE")
     if source == target:
-        return spark.createDataFrame(
-            [(source, target, 0.0)], "source BIGINT, target BIGINT, dist DOUBLE"
-        )
-    e = edges_weighted.select("src", "dst", "weight").localCheckpoint(eager=True)
+        return spark.createDataFrame([(source, target, 0.0)], out)
+    e = checkpoint(edges_weighted.select("src", "dst", "weight"))
     er = e.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
     )
-    df = spark.createDataFrame(
-        [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
-    )
-    db = spark.createDataFrame(
-        [(int(target), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
-    )
-    nf = nb = 1
-    mf = mb = 0.0
-    for _ in range(max_iter):
-        mu = (
-            df.select("id", "dist")
-            .join(db.select("id", F.col("dist").alias("dt")), "id")
+    # per side (forward, backward): the relax_round state, its active
+    # rows, its min active label (riding each relax job) and a bound on
+    # its row count (every new row is a changed row)
+    state = [spark.createDataFrame([(int(v), 0.0, True)], _SEED) for v in (source, target)]
+    rows = [1, 1]
+    low = [0.0, 0.0]
+    size = [1, 1]
+    mn = F.min(F.when(F.col("changed"), F.col("dist"))).alias("mn")
+
+    def meet():
+        dt = state[1].select("id", F.col("dist").alias("dt"))
+        return (
+            state[0].join(mirror(dt, size[1]), "id")
             .agg(F.min(F.col("dist") + F.col("dt")).alias("mu"))
             .collect()[0]["mu"]
         )
-        if nf == 0 and nb == 0:
+
+    for _ in range(max_iter):
+        mu = meet()
+        if not any(rows):
             break
-        if mu is not None and mf is not None and mb is not None and mu <= mf + mb:
+        if mu is not None and None not in low and mu <= sum(low):
             break
-        if nf > 0:
-            df, nf, mf = _relax_rounds(e, df)
-        if nb > 0:
-            db, nb, mb = _relax_rounds(er, db)
-    mu = (
-        df.select("id", "dist")
-        .join(db.select("id", F.col("dist").alias("dt")), "id")
-        .agg(F.min(F.col("dist") + F.col("dt")).alias("mu"))
-        .collect()[0]["mu"]
-    )
+        for i in (0, 1):
+            if rows[i]:
+                state[i], m = relax_round(state[i], (e, er)[i], rows[i], mn)
+                rows[i], low[i] = int(m["nch"] or 0), m["mn"]
+                size[i] += rows[i]
+    else:
+        mu = meet()
     if mu is None:
-        return spark.createDataFrame(
-            [], "source BIGINT, target BIGINT, dist DOUBLE"
-        )
-    return spark.createDataFrame(
-        [(source, target, float(mu))], "source BIGINT, target BIGINT, dist DOUBLE"
-    )
+        return spark.createDataFrame([], out)
+    return spark.createDataFrame([(source, target, float(mu))], out)
 
 
 def astar(
@@ -234,61 +187,35 @@ def astar(
     Returns one row (source, target, dist DOUBLE); empty if unreachable.
     """
     spark = edges_weighted.sparkSession
+    out = _ST.format("DOUBLE")
     if source == target:
-        return spark.createDataFrame(
-            [(source, target, 0.0)], "source BIGINT, target BIGINT, dist DOUBLE"
-        )
-    e = edges_weighted.select("src", "dst", "weight").localCheckpoint(eager=True)
+        return spark.createDataFrame([(source, target, 0.0)], out)
+    e = checkpoint(edges_weighted.select("src", "dst", "weight"))
     if heuristic is not None:
-        h = heuristic.select(
-            "id", F.col("h").cast("double").alias("h")
-        ).localCheckpoint(eager=True)
-    dist = spark.createDataFrame(
-        [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
-    )
+        h = checkpoint(heuristic.select("id", F.col("h").cast("double").alias("h")))
+    dist = spark.createDataFrame([(int(source), 0.0, True)], _SEED)
+    # the target's label rides each relax job
+    tdist = F.min(F.when(F.col("id") == target, F.col("dist"))).alias("tdist")
     mu = float("inf")
+    rows = 1
     for _ in range(max_iter):
-        active = dist.where(F.col("changed"))
+        prune = None
         if heuristic is not None and mu != float("inf"):
-            active = active.join(h, "id", "left").where(
-                F.col("dist") + F.coalesce(F.col("h"), F.lit(0.0)) < F.lit(mu)
-            ).select("id", "dist", "changed")
-        relax = (
-            active.join(e, active.id == e.src)
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("weight")).alias("nd"),
-            )
-            .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        joined = dist.select("id", "dist").join(relax, "id", "full")
-        dist = joined.select(
-            "id",
-            F.least(
-                F.coalesce(F.col("dist"), F.lit(float("inf"))),
-                F.coalesce(F.col("nd"), F.lit(float("inf"))),
-            ).alias("dist"),
-            (
-                F.col("dist").isNull()
-                | (F.coalesce(F.col("nd"), F.lit(float("inf"))) < F.col("dist"))
-            ).alias("changed"),
-        ).localCheckpoint(eager=True)
-        row = dist.agg(
-            F.sum(F.col("changed").cast("int")).alias("n"),
-            F.min(F.when(F.col("id") == target, F.col("dist"))).alias("tdist"),
-        ).collect()[0]
-        if row["tdist"] is not None:
-            mu = float(row["tdist"])
-        if not row["n"]:
+
+            def prune(active):  # against the previous round's μ
+                return active.join(h, "id", "left").where(
+                    F.col("dist") + F.coalesce(F.col("h"), F.lit(0.0)) < F.lit(mu)
+                ).select("id", "dist", "changed")
+
+        dist, m = relax_round(dist, e, rows, tdist, prune=prune)
+        rows = int(m["nch"] or 0)
+        if m["tdist"] is not None:
+            mu = float(m["tdist"])
+        if not rows:
             break
     if mu == float("inf"):
-        return spark.createDataFrame(
-            [], "source BIGINT, target BIGINT, dist DOUBLE"
-        )
-    return spark.createDataFrame(
-        [(source, target, mu)], "source BIGINT, target BIGINT, dist DOUBLE"
-    )
+        return spark.createDataFrame([], out)
+    return spark.createDataFrame([(source, target, mu)], out)
 
 
 def multi_target_bfs(
@@ -299,30 +226,25 @@ def multi_target_bfs(
     whole target set is levelled. Returns (id, dist) for reached targets.
     """
     spark = edges.sparkSession
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    tset = {int(t) for t in targets}
-    t_df = spark.createDataFrame([(t,) for t in tset], "id BIGINT")
-    seen = spark.createDataFrame([(int(source), 0)], "id BIGINT, dist BIGINT")
-    frontier = seen
-    # two observed metrics replace the two per-level actions of the old
-    # shape (targets-found count, frontier emptiness): the frontier count
-    # rides the expansion checkpoint, the found-target count rides the
-    # seen-union checkpoint
+    e = checkpoint(edges.select("src", "dst"))
+    tset = sorted({int(t) for t in targets})
+    is_t = F.col("id").isin(tset)
+    state = spark.createDataFrame([(int(source), True)], "id BIGINT, frontier BOOLEAN")
+    levels = [level(state, 0)]
+    rows = 1
     found = 1 if int(source) in tset else 0
-    for _ in range(max_hops):
+    # the targets each level reaches ride its expansion job
+    hit = F.sum((F.col("frontier") & is_t).cast("long")).alias("k")
+    for h in range(1, max_hops + 1):
         if found == len(tset):
             break
-        frontier, mf = checkpoint_observe(
-            _expand_level(frontier, seen, e), F.count(F.lit(1)).alias("n")
-        )
-        if int(mf["n"] or 0) == 0:
+        state, m = expand_round(state, e, rows, hit)
+        rows = int(m["nf"] or 0)
+        if rows == 0:
             break
-        seen, ms = checkpoint_observe(
-            seen.union(frontier),
-            F.sum(F.col("id").isin(list(tset)).cast("long")).alias("k"),
-        )
-        found = int(ms["k"] or 0)
-    return seen.join(t_df, "id", "leftsemi").select("id", "dist")
+        found += int(m["k"] or 0)
+        levels.append(level(state, h))
+    return reduce(DataFrame.unionByName, levels).where(is_t)
 
 
 def multi_target_dijkstra(
@@ -337,29 +259,31 @@ def multi_target_dijkstra(
     label ≥ the costliest target label (positive weights ⇒ no active
     node can still improve a target). Returns (id, dist DOUBLE)."""
     spark = edges_weighted.sparkSession
-    e = edges_weighted.select("src", "dst", "weight").localCheckpoint(eager=True)
-    tset = {int(t) for t in targets}
-    t_df = spark.createDataFrame([(t,) for t in tset], "id BIGINT")
-    dist = spark.createDataFrame(
-        [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
+    e = checkpoint(edges_weighted.select("src", "dst", "weight"))
+    tset = sorted({int(t) for t in targets})
+    is_t = F.col("id").isin(tset)
+    dist = spark.createDataFrame([(int(source), 0.0, True)], _SEED)
+    # min active label, labelled-target count and costliest target label
+    # ride each relax job
+    stop = (
+        F.min(F.when(F.col("changed"), F.col("dist"))).alias("mn"),
+        F.sum(is_t.cast("long")).alias("k"),
+        F.max(F.when(is_t, F.col("dist"))).alias("mx"),
     )
+    rows = 1
     for _ in range(max_iter):
-        dist, n_active, min_active = _relax_rounds(e, dist)
-        if not n_active:
+        dist, m = relax_round(dist, e, rows, *stop)
+        rows = int(m["nch"] or 0)
+        if not rows:
             break
-        trow = (
-            dist.join(t_df, "id", "leftsemi")
-            .agg(F.count(F.lit(1)).alias("k"), F.max("dist").alias("mx"))
-            .collect()[0]
-        )
         if (
-            trow["k"] == len(tset)
-            and min_active is not None
-            and trow["mx"] is not None
-            and min_active >= trow["mx"]
+            int(m["k"] or 0) == len(tset)
+            and m["mn"] is not None
+            and m["mx"] is not None
+            and m["mn"] >= m["mx"]
         ):
             break
-    return dist.join(t_df, "id", "leftsemi").select("id", "dist")
+    return dist.where(is_t).select("id", "dist")
 
 
 def floyd_warshall(
@@ -382,11 +306,10 @@ def floyd_warshall(
     import math
 
     e = edges_weighted.select("src", "dst", "weight")
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n > max_nodes:
@@ -396,18 +319,17 @@ def floyd_warshall(
         )
     if max_squarings is None:
         max_squarings = max(1, math.ceil(math.log2(max(2, n)))) + 1
-    d = (
+    d = checkpoint(
         e.groupBy(F.col("src").alias("row"), F.col("dst").alias("col"))
         .agg(F.min("weight").alias("value"))
         .union(nodes.select(F.col("id").alias("row"), F.col("id").alias("col"),
                             F.lit(0.0).alias("value")))
         .groupBy("row", "col").agg(F.min("value").alias("value"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_squarings):
-        d2 = algebraic.e_wise_add(
+        d2 = checkpoint(algebraic.e_wise_add(
             algebraic.mxm(d, d, algebraic.MIN_PLUS), d, algebraic.MIN_PLUS
-        ).localCheckpoint(eager=True)
+        ))
         improved = (
             d2.join(
                 d.select("row", "col", F.col("value").alias("old")),
@@ -443,8 +365,6 @@ def apsp(edges: DataFrame, max_nodes: int = 4000, max_hops: int = 60) -> DataFra
     Size-guarded (O(n²) output). Runs ONE multi-source frontier BFS with
     all nodes as sources — the per-round join carries the source key, so
     it distributes as n concurrent BFS sharing each shuffle."""
-    from icebug_spark.operators.traversal import multi_source_bfs
-
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))

@@ -8,14 +8,114 @@ the bulk-synchronous model), ``distance/MultiTargetBFS.hpp:13``,
 Each round joins the *frontier only* (not the full distance table) against
 edges — frontier-restricted joins keep per-round shuffle proportional to
 the wavefront, the key property for scale-out BFS.
+
+Two round kernels serve the whole BFS/SSSP family, each one checkpoint
+job per round with the caller's convergence aggregates observed on it:
+
+- ``expand_round`` — one BFS level over ``(*key, id, frontier)`` state:
+  ``multi_source_bfs`` / ``bfs_distances`` here, ``pointtopoint``'s
+  ``bidirectional_bfs`` and ``multi_target_bfs``, and the affected cone of
+  ``streaming.dynamic2``;
+- ``relax_round`` — one Bellman-Ford relax round over ``(id, dist,
+  changed)`` state: ``sssp_weighted`` here, ``pointtopoint``'s
+  ``bidirectional_dijkstra``, ``multi_target_dijkstra`` and ``astar``, and
+  the DynBFS / DynSSSP maintainers (``dynamic2.dyn_bfs_update``,
+  ``dynamic3.dyn_sssp_update``).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
+
+
+def expand_round(
+    state: DataFrame, e: DataFrame, frontier_rows: int, *aggs, key=()
+) -> tuple[DataFrame, dict]:
+    """One BFS level over ``(*key, id, frontier)`` state and ``(src, dst)``
+    edges → ``(state, metrics)``; ``metrics["nf"]`` is the new frontier
+    size and ``aggs`` (Columns over the new state) ride the same job.
+
+    The frontier is ``mirror``-joined to ``e`` (``frontier_rows`` bounds
+    its size). The seen-set dedup folds into the level's aggregation
+    instead of a per-level anti-join: the state rides the same shuffle as
+    the expansion messages (carrier rows flagged ``seen``), and a node is
+    NEW exactly when its group has no carrier row. ``key`` (e.g.
+    ``("source",)``) runs one BFS per key value in the same rounds."""
+    # Without a hint the checkpointed state has no stats, so Catalyst
+    # would sort-merge and RESHUFFLE the whole edge table every round;
+    # mirror() broadcasts the vertex side while it fits and degrades to
+    # shuffle-hash past the configured cap.
+    frontier = state.where(F.col("frontier"))
+    nxt = mirror(frontier, frontier_rows).join(e, frontier.id == e.src).select(
+        *key, F.col("dst").alias("id"), F.lit(False).alias("seen")
+    )
+    merged = (
+        state.select(*key, "id", F.lit(True).alias("seen"))
+        .unionByName(nxt)
+        .groupBy(*key, "id")
+        .agg((~F.max("seen")).alias("frontier"))
+    )
+    return checkpoint_observe(
+        merged, F.sum(F.col("frontier").cast("long")).alias("nf"), *aggs
+    )
+
+
+def relax_round(
+    state: DataFrame, e: DataFrame, active_rows: int, *aggs, tol=0.0, prune=None
+) -> tuple[DataFrame, dict]:
+    """One Bellman-Ford relax round over ``(id, dist, changed)`` state and
+    ``(src, dst, weight)`` edges → ``(state, metrics)``; ``metrics["nch"]``
+    counts the changed rows and ``aggs`` ride the same job.
+
+    Only the ``changed`` rows relax (``active_rows`` bounds their count);
+    ``prune``, a DataFrame → DataFrame filter, may drop more of them. The
+    state rides the relax shuffle as carrier rows, so one ``min``
+    aggregation does the per-round merge: the carriers' min ``sd`` is the
+    old distance, the messages' min ``nd`` the best relaxation. ``least``
+    skips nulls, so BIGINT hop counts and DOUBLE weights share the kernel
+    with no typed infinity; a row is changed when it is new or improved
+    by more than ``tol``."""
+    active = state.where(F.col("changed"))
+    if prune is not None:
+        active = prune(active)
+    relax = mirror(active, active_rows).join(e, active.id == e.src).select(
+        F.col("dst").alias("id"),
+        (F.col("dist") + F.col("weight")).alias("dist"),
+        F.lit(False).alias("seen"),
+    )
+    merged = (
+        state.select("id", "dist", F.lit(True).alias("seen"))
+        .unionByName(relax)
+        .groupBy("id")
+        .agg(
+            F.min(F.when(F.col("seen"), F.col("dist"))).alias("sd"),
+            F.min(F.when(~F.col("seen"), F.col("dist"))).alias("nd"),
+        )
+    )
+    sd = F.col("sd") - tol if tol else F.col("sd")
+    # no message (nd null) → unchanged; no carrier (sd null) → new
+    changed = F.coalesce(F.col("nd") < sd, F.col("sd").isNull())
+    return checkpoint_observe(
+        merged.select(
+            "id", F.least("sd", "nd").alias("dist"), changed.alias("changed")
+        ),
+        F.sum(F.col("changed").cast("long")).alias("nch"),
+        *aggs,
+    )
+
+
+def level(state: DataFrame, h: int, key=()) -> DataFrame:
+    """The nodes ``expand_round`` settled at level ``h`` → ``(*key, id,
+    dist)``: a zero-shuffle filter of a materialized checkpoint, with the
+    hop distance a driver-known literal rather than loop state."""
+    return state.where(F.col("frontier")).select(
+        *key, "id", F.lit(h).cast("long").alias("dist")
+    )
 
 
 def bfs_distances(
@@ -31,78 +131,32 @@ def multi_source_bfs(
 ) -> DataFrame:
     """Hop distances from each source → ``(source, id, dist)``.
 
-    State carries a `frontier` marker; each round expands only frontier
-    rows. The source dimension rides along in the key, so k sources cost
-    one BFS with k× state (reference APSP strategy distributed by source).
-    """
+    ``expand_round`` levels keyed by source, so k sources cost one BFS
+    with k× state (reference APSP strategy distributed by source). The
+    hop distance is NOT loop state — the per-level exchange carries only
+    (source, id, frontier), ~1/3 fewer bytes on the LARGEST shuffles this
+    engine runs (q161's 0.15·n² settled sweep state); the output is a lazy
+    union of the per-level ``level`` slices."""
     e = edges.select("src", "dst")
     spark = edges.sparkSession
-    # de-dup up front: the old shape deduped repeated sources in its first
-    # grouped aggregation; the level-0 slice is now emitted directly
-    state = spark.createDataFrame(
-        [(s, s) for s in sorted({int(s) for s in sources})],
-        "source BIGINT, id BIGINT",
-    ).withColumn("frontier", F.lit(True))
-    state = checkpoint(state)
-    # The hop distance is NOT loop state: every new node settled at level
-    # h has dist == h, a driver-known literal — so the per-level exchange
-    # carries only (source, id, frontier), ~1/3 fewer bytes than the old
-    # (source, id, dist, frontier) rows on the LARGEST shuffles this
-    # engine runs (q161's 0.15·n² settled sweep state). The output is
-    # assembled as a lazy union of the per-level new-settler slices, each
-    # a zero-shuffle filter of an already-materialized checkpoint.
-    levels = [state.select("source", "id", F.lit(0).cast("long").alias("dist"))]
-    # Exact row counts of the frontier / seen tables are free: the
-    # per-round convergence check already counts new frontier rows, so the
-    # size-adaptive mirror() never needs an extra job.
-    frontier_rows = len(sources)
+    # de-dup up front: a repeated source would otherwise emit two level-0 rows
+    state = checkpoint(
+        spark.createDataFrame(
+            [(s, s) for s in sorted({int(s) for s in sources})],
+            "source BIGINT, id BIGINT",
+        ).withColumn("frontier", F.lit(True))
+    )
+    key = ("source",)
+    levels = [level(state, 0, key)]
+    # exact frontier sizes are free: each round observes the next one
+    rows = len(sources)
     for h in range(1, max_hops + 1):
-        # The frontier is vertex-bounded while edges are m-sized; without
-        # a hint the checkpointed state has no stats, so Catalyst would
-        # sort-merge and RESHUFFLE the whole edge table every round.
-        # mirror() broadcasts the vertex side while it fits (measured ~2x
-        # at sf0.1) and degrades to shuffle-hash past the configured cap.
-        frontier = state.where(F.col("frontier"))
-        nxt = (
-            mirror(frontier, frontier_rows).join(e, frontier.id == e.src)
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                F.lit(False).alias("seen"),
-            )
-        )
-        # Fold the seen-set dedup into the level's aggregation instead of
-        # a per-level anti-join: the state rides the same shuffle as the
-        # expansion messages (carrier rows flagged seen=true), and a node
-        # is NEW exactly when its group has no carrier row. Removes one
-        # n-row broadcast/shuffle-hash build per level (2 Exchange → 1
-        # beyond the frontier mirror); the seen rows the union adds to the
-        # exchange replace the same rows crossing the wire as a broadcast.
-        merged = (
-            state.select("source", "id", F.lit(True).alias("seen"))
-            .unionByName(nxt)
-            .groupBy("source", "id")
-            .agg(F.max(F.col("seen")).alias("old"))
-            .select("source", "id", (~F.col("old")).alias("frontier"))
-        )
-        # the frontier count rides the checkpoint job as an observed
-        # metric — one action per level, not checkpoint + count
-        state, m = checkpoint_observe(
-            merged,
-            F.sum(F.col("frontier").cast("long")).alias("nf"),
-        )
-        frontier_rows = int(m["nf"] or 0)
-        if frontier_rows == 0:
+        state, m = expand_round(state, e, rows, key=key)
+        rows = int(m["nf"] or 0)
+        if rows == 0:
             break
-        levels.append(
-            state.where(F.col("frontier")).select(
-                "source", "id", F.lit(h).cast("long").alias("dist")
-            )
-        )
-    out = levels[0]
-    for piece in levels[1:]:
-        out = out.unionByName(piece)
-    return out
+        levels.append(level(state, h, key))
+    return reduce(DataFrame.unionByName, levels)
 
 
 def sssp_weighted(
@@ -114,51 +168,16 @@ def sssp_weighted(
     the same distances on non-negative weights. Returns ``(id, dist)``."""
     e = edges_weighted.select("src", "dst", "weight")
     spark = edges_weighted.sparkSession
-    state = spark.createDataFrame([(int(source), 0.0)], ["id", "dist"]).withColumn(
-        "changed", F.lit(True)
+    state = checkpoint(
+        spark.createDataFrame(
+            [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
+        )
     )
-    state = checkpoint(state)
-    active_rows = 1
+    rows = 1
     for _ in range(max_iter):
-        # active (changed-last-round) rows are vertex-bounded; the count
-        # from the previous round's convergence check sizes mirror().
-        active = state.where(F.col("changed"))
-        relax = (
-            mirror(active, active_rows).join(e, active.id == e.src)
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("weight")).alias("dist"),
-                F.lit(False).alias("seen"),
-            )
-        )
-        # Same fusion as multi_source_bfs: the state rides the relax
-        # shuffle as carrier rows (seen=true) and the per-round full-outer
-        # join disappears into the min-aggregation — the carrier's min IS
-        # the old distance, the messages' min the best relaxation.
-        merged = (
-            state.select("id", "dist", F.lit(True).alias("seen"))
-            .unionByName(relax)
-            .groupBy("id")
-            .agg(
-                F.min(F.when(F.col("seen"), F.col("dist"))).alias("sd"),
-                F.min(F.when(~F.col("seen"), F.col("dist"))).alias("nd"),
-            )
-        )
-        # active count rides the checkpoint job (observed metric)
-        state, m = checkpoint_observe(
-            merged.select(
-                "id",
-                F.least(F.coalesce(F.col("sd"), F.lit(float("inf"))),
-                        F.coalesce(F.col("nd"), F.lit(float("inf")))).alias("dist"),
-                (
-                    F.col("sd").isNull()
-                    | (F.coalesce(F.col("nd"), F.lit(float("inf"))) < F.col("sd"))
-                ).alias("changed"),
-            ),
-            F.sum(F.col("changed").cast("long")).alias("na"),
-        )
-        active_rows = int(m["na"] or 0)
-        if active_rows == 0:
+        state, m = relax_round(state, e, rows)
+        rows = int(m["nch"] or 0)
+        if rows == 0:
             break
     return state.select("id", "dist")
 

@@ -14,9 +14,11 @@ everything between TIME_STEP markers. Each maintainer takes (state, batch)
 scratch — the distributed analog of the reference's per-event updates.
 
 The maintainers ride the static kernels' one-job-per-round loops: DynCC is
-``components.connected_components`` from a seed label table, and DynBFS and
-the affected cone are carrier loops (``traversal.sssp_weighted`` /
-``multi_source_bfs`` shape). Each reads its event batch once (``_read_batch``).
+``components.connected_components`` from a seed label table, the affected
+cone is ``traversal.expand_round`` levels, and DynBFS (like
+``dynamic3.dyn_sssp_update``) is ``traversal.relax_round`` rounds resumed
+from the current labels (``_resume``). Each reads its event batch once
+(``_read_batch``).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.components import connected_components
+from icebug_spark.operators.traversal import expand_round, relax_round
 from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
 
 
@@ -80,22 +83,12 @@ def _read_batch(batch: DataFrame, labels: DataFrame | None = None):
 
 def _cone(eu: DataFrame, seeds: DataFrame, n: int, hops: int):
     """Nodes within ``hops`` of the ``n`` seed ids over ``eu`` (seeds
-    included) → ``(cone, rows)``. A carrier loop like
-    ``traversal.multi_source_bfs``: the reached set rides the expansion
-    shuffle flagged ``seen`` and a node is new iff its group has no
-    carrier row, so each hop is one checkpoint."""
+    included) → ``(cone, rows)``: ``expand_round`` levels, one checkpoint
+    per hop."""
     state = seeds.select("id", F.lit(True).alias("frontier"))
     rows = front = n
     for _ in range(hops):
-        frontier = state.where(F.col("frontier"))
-        nxt = mirror(frontier, front).join(eu, frontier.id == eu.src).select(
-            F.col("dst").alias("id"), F.lit(False).alias("seen")
-        )
-        state, m = checkpoint_observe(
-            state.select("id", F.lit(True).alias("seen")).unionByName(nxt)
-            .groupBy("id").agg((~F.max("seen")).alias("frontier")),
-            F.sum(F.col("frontier").cast("long")).alias("nf"),
-        )
+        state, m = expand_round(state, eu, front)
         front = int(m["nf"] or 0)
         rows += front
         if front == 0:
@@ -121,6 +114,29 @@ def affected_nodes(edges_new: DataFrame, batch: DataFrame, hops: int = 2) -> Dat
     return _cone(checkpoint(_sym(edges_new)), ends, n, hops)[0]
 
 
+def _resume(
+    dist: DataFrame, ew: DataFrame, batch: DataFrame, max_rounds: int, tol=0.0
+) -> DataFrame:
+    """Shared DynBFS / DynSSSP body over ``(src, dst, weight)`` edges:
+    invalidate the removal cone, then ``relax_round`` from the current
+    labels until no label changes by more than ``tol``. Only rows whose
+    distance changed last round relax (all in the first): an unchanged
+    row already pushed its value, so each round ends in the state a relax
+    of all rows gives."""
+    ends, n, has_removal = _read_batch(batch)
+    if has_removal:
+        dist = _invalidate(dist, ew, ends, n, max_rounds)
+    state, m = checkpoint_observe(
+        dist.select("id", "dist", F.lit(True).alias("changed")),
+        F.count(F.lit(1)).alias("nch"),
+    )
+    for _ in range(max_rounds):
+        state, m = relax_round(state, ew, int(m["nch"] or 0), tol=tol)
+        if int(m["nch"] or 0) == 0:
+            break
+    return state.select("id", "dist")
+
+
 def dyn_bfs_update(
     dist: DataFrame, edges_new: DataFrame, batch: DataFrame, max_rounds: int = 30
 ) -> DataFrame:
@@ -129,45 +145,13 @@ def dyn_bfs_update(
 
     Additions only shrink distances: seed the relax loop from the affected
     endpoints' current labels and propagate improvements. Removals can
-    lengthen paths — detected by seeding affected nodes with +inf and
+    lengthen paths — detected by dropping the affected nodes' labels and
     re-relaxing from their still-settled neighbors (bounded recompute; the
-    reference tracks the same 'affected' set per event)."""
-    eu = checkpoint(_sym(edges_new))
-    ends, n, has_removal = _read_batch(batch)
-    if has_removal:
-        dist = _invalidate(dist, eu, ends, n, max_rounds)
-    # Only rows whose distance changed last round relax (all in the first):
-    # an unchanged row already pushed its value, so each round ends in the
-    # state a relax of all rows gives. sssp_weighted's carrier shape: the
-    # state rides the relax shuffle flagged seen; its min is the old dist.
-    inf = F.lit(1 << 60)
-    state, m = checkpoint_observe(
-        dist.select("id", "dist", F.lit(True).alias("changed")),
-        F.count(F.lit(1)).alias("nch"),
-    )
-    for _ in range(max_rounds):
-        active = state.where(F.col("changed"))
-        relax = mirror(active, int(m["nch"] or 0)).join(eu, active.id == eu.src).select(
-            F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"),
-            F.lit(False).alias("seen"),
-        )
-        merged = (
-            state.select("id", "dist", F.lit(True).alias("seen")).unionByName(relax)
-            .groupBy("id")
-            .agg(F.min(F.when(F.col("seen"), F.col("dist"))).alias("sd"),
-                 F.min(F.when(~F.col("seen"), F.col("dist"))).alias("nd"))
-        )
-        state, m = checkpoint_observe(
-            merged.select(
-                "id",
-                F.least(F.coalesce("sd", inf), F.coalesce("nd", inf)).alias("dist"),
-                (F.col("sd").isNull() | (F.coalesce("nd", inf) < F.col("sd"))).alias("changed"),
-            ),
-            F.sum(F.col("changed").cast("long")).alias("nch"),
-        )
-        if int(m["nch"] or 0) == 0:
-            break
-    return state.select("id", "dist")
+    reference tracks the same 'affected' set per event). Unit weights keep
+    ``dist`` BIGINT."""
+    ew = checkpoint(_sym(edges_new)).select("src", "dst", F.lit(1).alias("weight"))
+    dist = dist.select("id", F.col("dist").cast("long").alias("dist"))
+    return _resume(dist, ew, batch, max_rounds)
 
 
 def dyn_cc_update(
@@ -239,20 +223,18 @@ def dyn_katz_update(
     each term one join+groupBy, lineage checkpointed. The 'incremental'
     win in Spark comes from reusing the cached symmetrized edge table, not
     per-entry deltas. → (id, katz) 6dp."""
-    eu = _sym(edges_new).localCheckpoint(eager=True)
-    x = (
+    eu = checkpoint(_sym(edges_new))
+    x = checkpoint(
         eu.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("term", F.lit(1.0))
-        .localCheckpoint(eager=True)
     )
     terms = [x]
     for _ in range(iters):
-        x = (
+        x = checkpoint(
             eu.join(x.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg((F.lit(alpha) * F.sum("term")).alias("term"))
-            .localCheckpoint(eager=True)
         )
         terms.append(x)
     # one final aggregation over the (checkpointed) per-iteration term

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from icebug_spark.operators.matching import b_suitor_matching
 from icebug_spark.operators.traversal import multi_source_bfs
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.plans.iterate import checkpoint
 
 
 def _with_edge(eu: DataFrame, u: int, v: int) -> DataFrame:
@@ -343,65 +343,22 @@ def dyn_sssp_update(
     Insertions only improve: resume Bellman-Ford relaxation seeded from
     the CURRENT labels (settled nodes relax once, improvements cascade
     only through the affected cone). Removals invalidate the affected
-    region first (per-event affected set, like the reference)."""
-    from icebug_spark.streaming.dynamic2 import _invalidate, _read_batch
+    region first (per-event affected set, like the reference). Shares
+    dyn_bfs_update's body (``dynamic2._resume``); a label counts as
+    improved only by more than 1e-12, so float round-off cannot keep
+    the loop running."""
+    from icebug_spark.streaming.dynamic2 import _resume
 
     e = edges_weighted_new
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    ew = e.select("src", "dst", "weight").union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    ).localCheckpoint(eager=True)
-    ends, n, has_removal = _read_batch(batch)
-    if has_removal:
-        dist = _invalidate(dist, ew, ends, n, max_rounds)
-
-    # frontier-based relaxation: only nodes whose label improved last
-    # round relax outward (everyone starts in the frontier — the resumed
-    # labels must push into the invalidated cone), and the changed flag
-    # is computed IN the merge so each round is one checkpoint + one
-    # cheap scan (the old shape paid an extra join + count per round —
-    # ~2x the per-round jobs on a settled graph)
-    inf = F.lit(float("inf"))
-    cur = (
-        dist.select("id", "dist")
-        .withColumn("changed", F.lit(True))
-        .localCheckpoint(eager=True)
+    ew = checkpoint(
+        e.select("src", "dst", "weight").union(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+        )
     )
-    for _ in range(max_rounds):
-        frontier = cur.where(F.col("changed")).select("id", "dist")
-        relaxed = (
-            ew.join(
-                F.broadcast(
-                    frontier.withColumnRenamed("id", "src").withColumnRenamed(
-                        "dist", "ds"
-                    )
-                ),
-                "src",
-            )
-            .select(F.col("dst").alias("id"), (F.col("ds") + F.col("weight")).alias("nd"))
-            .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        # changed-count rides the checkpoint job (observed metric)
-        cur, m = checkpoint_observe(
-            cur.select("id", "dist")
-            .join(relaxed, "id", "full_outer")
-            .select(
-                "id",
-                F.least(
-                    F.coalesce("dist", inf), F.coalesce("nd", inf)
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.coalesce("nd", inf) < F.col("dist") - F.lit(1e-12))
-                ).alias("changed"),
-            ),
-            F.sum(F.col("changed").cast("long")).alias("nch"),
-        )
-        if int(m["nch"] or 0) == 0:
-            break
-    return cur.select("id", "dist")
+    dist = dist.select("id", F.col("dist").cast("double").alias("dist"))
+    return _resume(dist, ew, batch, max_rounds, tol=1e-12)
 
 
 class DynAPSP:

@@ -7,6 +7,8 @@ action (~1 extra job per round, ~4.5 jobs/level on BFS). These tests pin
 the marginal jobs-per-level so a reintroduced per-round action fails CI.
 """
 
+import pytest
+
 
 def _bfs_jobs(spark, depth: int) -> int:
     from icebug_spark.operators.traversal import bfs_distances
@@ -114,3 +116,49 @@ def test_dyn_bfs_marginal_jobs_per_round(spark):
     two-checkpoint cone and full-outer relax cost ~7."""
     marginal = (_dyn_jobs(spark, "bfs", 10) - _dyn_jobs(spark, "bfs", 4)) / 12.0
     assert marginal <= 4.0, f"dyn_bfs jobs/round regressed: {marginal}"
+
+
+#: marginal jobs per unit of path depth; the searches' own loops that
+#: the two round kernels replaced cost 8.0, 11.0, 8.0, 8.5 and 13.0
+_P2P_BOUNDS = {
+    "astar": 4,
+    "multi_target_dijkstra": 4,
+    "multi_target_bfs": 5,
+    "bidirectional_dijkstra": 7,
+    "bidirectional_bfs": 10,
+}
+
+
+def _p2p_jobs(spark, search: str, depth: int) -> int:
+    from icebug_spark.operators import pointtopoint as pp
+
+    sc = spark.sparkContext
+    ew = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(depth)], "src BIGINT, dst BIGINT, weight DOUBLE"
+    ).localCheckpoint(eager=True)
+    e = ew.select("src", "dst")
+    run = {
+        "astar": lambda: pp.astar(ew, 0, depth),
+        "multi_target_dijkstra": lambda: pp.multi_target_dijkstra(ew, 0, [depth]),
+        "multi_target_bfs": lambda: pp.multi_target_bfs(e, 0, [depth]),
+        "bidirectional_dijkstra": lambda: pp.bidirectional_dijkstra(ew, 0, depth),
+        "bidirectional_bfs": lambda: pp.bidirectional_bfs(e, 0, depth),
+    }[search]
+    group = f"{search}_jobs_{depth}"
+    sc.setJobGroup(group, "probe")
+    rows = run().collect()
+    sc.setJobGroup(None, None)
+    assert [r["dist"] for r in rows] == [depth]
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("search", sorted(_P2P_BOUNDS))
+def test_point_to_point_marginal_jobs_per_round(spark, search):
+    """Each unit of depth of a directed path costs each point-to-point
+    search a bounded number of jobs: one relax or expand round (its
+    checkpoint, the shuffle-map job of its aggregation and its mirror
+    broadcast) with the stop-rule scalars observed on the checkpoint, plus
+    the bidirectional searches' meeting-value collect."""
+    marginal = (_p2p_jobs(spark, search, 8) - _p2p_jobs(spark, search, 4)) / 4.0
+    bound = _P2P_BOUNDS[search]
+    assert marginal <= bound, f"{search} jobs/round regressed: {marginal} > {bound}"
