@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.graph.core import Graph
+from icebug_spark.plans.iterate import checkpoint
 
 
 def volume(g: Graph) -> float:
@@ -166,8 +167,8 @@ def topological_sort(g: Graph, max_iter: int = 10000) -> DataFrame:
     frontier peeling: layer k = nodes whose in-degree within the remaining
     graph is 0. Returns (id, layer) — a valid topological order is (layer,
     id). Raises on cycles. Rounds = DAG depth (each round one anti-join)."""
-    edges = g.edges.select("src", "dst").localCheckpoint(eager=True)
-    remaining = g.vertices.select("id").localCheckpoint(eager=True)
+    edges = checkpoint(g.edges.select("src", "dst"))
+    remaining = checkpoint(g.vertices.select("id"))
     spark = edges.sparkSession
     out = []
     layer = 0
@@ -179,12 +180,12 @@ def topological_sort(g: Graph, max_iter: int = 10000) -> DataFrame:
             raise ValueError("topological_sort: max_iter exceeded")
         has_in = edges.join(remaining.withColumnRenamed("id", "src"), "src", "leftsemi")
         blocked = has_in.select(F.col("dst").alias("id")).distinct()
-        frontier = remaining.join(blocked, "id", "left_anti").localCheckpoint(eager=True)
+        frontier = checkpoint(remaining.join(blocked, "id", "left_anti"))
         if frontier.count() == 0:
             raise ValueError("topological_sort: graph has a cycle")
         out.append(frontier.withColumn("layer", F.lit(layer).cast("long")))
-        remaining = remaining.join(frontier, "id", "left_anti").localCheckpoint(eager=True)
-        edges = edges.join(frontier.withColumnRenamed("id", "src"), "src", "left_anti").localCheckpoint(eager=True)
+        remaining = checkpoint(remaining.join(frontier, "id", "left_anti"))
+        edges = checkpoint(edges.join(frontier.withColumnRenamed("id", "src"), "src", "left_anti"))
         layer += 1
     if not out:
         return spark.createDataFrame([], "id long, layer long")
@@ -199,7 +200,7 @@ def is_bipartite(g: Graph, max_iter: int = 50) -> bool:
     layering per component — bipartite iff no edge joins nodes whose hop
     distances from their component root share parity. Implemented as
     min-label + parity propagation."""
-    eu = g.symmetrized().localCheckpoint(eager=True)
+    eu = checkpoint(g.symmetrized())
     # state: (id, root, parity) — start every node as its own root, then
     # keep the minimum (root, parity-path); converges like min-label CC
     state = eu.select(F.col("src").alias("id")).distinct().select(
@@ -234,7 +235,7 @@ def is_bipartite(g: Graph, max_iter: int = 50) -> bool:
             .limit(1)
             .count()
         )
-        state = merged.localCheckpoint(eager=True)
+        state = checkpoint(merged)
         if changed == 0:
             break
     conflict = (

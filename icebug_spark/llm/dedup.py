@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def _norm_tokens(col):
     return F.split(
@@ -124,7 +126,7 @@ def ngram_jaccard_pairs(
             .where(F.col("df") <= max_doc_freq)
             .drop("df")
         )
-    sh = sh.localCheckpoint(eager=True)
+    sh = checkpoint(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -255,7 +257,7 @@ def minhash_lsh_duplicates(
     both consumers are zero-shuffle projections of the checkpoint: the
     signatures are in-row array folds (no corpus-sized groupBy) and the
     verify-stage shingle table is an in-row dedup + explode."""
-    ga = _gram_arrays(documents, n).localCheckpoint(eager=True)
+    ga = checkpoint(_gram_arrays(documents, n))
     sig = ga.where(F.size("grams") > 0).select(
         "doc_id",
         F.array(
@@ -273,12 +275,11 @@ def minhash_lsh_duplicates(
     )
     a = band_rows.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     b = band_rows.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-    candidates = (
+    candidates = checkpoint(
         a.join(b, ["band", "bucket"])
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # Verify ONLY the candidate pairs (the whole point of LSH at scale):
     # restrict the shingle table to docs that appear in some candidate,
@@ -288,10 +289,7 @@ def minhash_lsh_duplicates(
         .union(candidates.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh = (
-        sh_all.join(cand_docs, "doc_id", "leftsemi")
-        .localCheckpoint(eager=True)
-    )
+    sh = checkpoint(sh_all.join(cand_docs, "doc_id", "leftsemi"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a2 = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b2 = sh.select(F.col("doc_id").alias("doc_b"), "shingle")

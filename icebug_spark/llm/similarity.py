@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -280,13 +282,13 @@ def _kmeans_state(
     k·dim centroid pull per round is the only driver traffic."""
     if k < 1 or iters < 0:
         raise ValueError(f"k must be >= 1 and iters >= 0, got {k}, {iters}")
-    q = embeddings.select(
+    q = checkpoint(embeddings.select(
         "vec_id",
         F.transform(
             "embedding",
             lambda x: F.round(x.cast("double") * float(scale)).cast("long"),
         ).alias("qv"),
-    ).localCheckpoint(eager=True)
+    ))
 
     def assign(cent: DataFrame) -> DataFrame:
         # the k centroids ride ONE broadcast row as an array; the argmin
@@ -319,17 +321,16 @@ def _kmeans_state(
     # init cells via the two-pass zipindex rank over the k LIMITed rows
     # — no unpartitioned window, sweep logs stay WindowExec-clean
     top = q.orderBy(F.asc("vec_id")).limit(int(k))
-    cent = (
+    cent = checkpoint(
         top.join(
             dense_index(top, ["vec_id"], out="cell", assume_distinct=True),
             "vec_id",
         )
         .select("cell", F.col("qv").alias("cv"))
-        .localCheckpoint(eager=True)
     )
     a = assign(cent)
     for _ in range(int(iters)):
-        upd = (
+        upd = checkpoint(
             a.select("cell", F.posexplode("qv").alias("dim", "val"))
             .groupBy("cell", "dim")
             .agg(
@@ -344,7 +345,6 @@ def _kmeans_state(
                     lambda s: s["cval"],
                 ).alias("cv")
             )
-            .localCheckpoint(eager=True)
         )
         a = assign(upd)
     return a
@@ -508,13 +508,13 @@ def kcenter_select(
     farthest-first shape."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    q = embeddings.select(
+    q = checkpoint(embeddings.select(
         "vec_id",
         F.transform(
             "embedding",
             lambda x: F.round(x.cast("double") * float(scale)).cast("long"),
         ).alias("qv"),
-    ).localCheckpoint(eager=True)
+    ))
 
     def d2_to(cv_col):
         return F.aggregate(

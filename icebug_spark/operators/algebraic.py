@@ -26,6 +26,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 @dataclass(frozen=True)
 class Semiring:
@@ -145,7 +147,7 @@ def algebraic_bfs(edges: DataFrame, source: int, max_hops: int = 50) -> DataFram
             relaxed.select(F.col("idx").alias("row"), F.lit(0).alias("col"), "value"),
             MIN_PLUS,
         ).select(F.col("row").alias("idx"), "value")
-        new_dist = new_dist.localCheckpoint(eager=True)
+        new_dist = checkpoint(new_dist)
         improved = (
             new_dist.join(dist.select("idx", F.col("value").alias("old")), "idx", "left")
             .where(F.col("old").isNull() | (F.col("value") < F.col("old")))

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import iterate, mirror
+from icebug_spark.plans.iterate import checkpoint, iterate, mirror
 
 
 def degree_centrality(edges: DataFrame, direction: str = "out") -> DataFrame:
@@ -79,11 +79,11 @@ def pagerank(
     # outdeg/prev through), so each round's plan scans the previous
     # round's checkpoint exactly ONCE — inside the message join — instead
     # of twice (join side + carrier union branch). Single-reference loop
-    # plans keep the localCheckpoint chain cost flat at any depth (see
+    # plans keep the checkpoint chain cost flat at any depth (see
     # plans/iterate.checkpoint_observe CAUTION and the same diagonal-carry
     # pattern in spectrum.laplacian_eigenvectors_power); they also stop
     # the lazy in-between rounds from being re-executed once per branch.
-    eplus = (
+    eplus = checkpoint(
         e.select("src", "dst", F.lit(False).alias("self"))
         .unionByName(
             nodes.select(
@@ -92,7 +92,6 @@ def pagerank(
                 F.lit(True).alias("self"),
             )
         )
-        .localCheckpoint(eager=True)
     )
 
     ranks = base.withColumn("rank", F.lit(1.0 / n)).withColumn(

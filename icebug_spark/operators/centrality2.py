@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import iterate, mirror
+from icebug_spark.plans.iterate import checkpoint, iterate, mirror
 
 
 def katz_centrality(
@@ -24,12 +24,11 @@ def katz_centrality(
     oracle expressible). Scores not normalized. → (id, katz) 6dp."""
     # loop-invariant edge projection materialized ONCE — without this
     # every round's action re-reads the source scan
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    nodes = (
+    e = checkpoint(edges.select("src", "dst"))
+    nodes = checkpoint(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     x = nodes.withColumn("katz", F.lit(float(beta)))
@@ -47,7 +46,7 @@ def katz_centrality(
             (F.lit(float(beta)) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))).alias("katz"),
         )
 
-    final = iterate(x, step, max_iter, None, checkpoint_every=2)
+    final = iterate(x, step, max_iter, checkpoint_every=2)
     return final.select("id", F.round("katz", 6).alias("katz"))
 
 
@@ -60,8 +59,8 @@ def eigenvector_centrality(
     the same principal eigenvector and always converges). →
     (id, eigen) 6dp."""
     # loop-invariant edge projection materialized ONCE
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
-    nodes = eu.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
+    nodes = checkpoint(eu.select(F.col("src").alias("id")).distinct())
     n = nodes.count()
     x = nodes.withColumn("v", F.lit(1.0))
     for _ in range(max_iter):
@@ -81,10 +80,9 @@ def eigenvector_centrality(
                 F.sqrt(F.sum(F.col("y") * F.col("y"))), F.lit(1e-300)
             ).alias("norm")
         )
-        x = (
+        x = checkpoint(
             y.crossJoin(F.broadcast(norm))
             .select("id", (F.col("y") / F.col("norm")).alias("v"))
-            .localCheckpoint(eager=True)
         )
     return x.select("id", F.round("v", 6).alias("eigen"))
 
@@ -186,11 +184,11 @@ def sigma_levels(
     checkpointed symmetric arc table. The SINGLE σ-BFS kernel behind
     both ``bfs_sigma`` (flat table) and ``brandes_deltas`` (per-level
     backward pass)."""
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     spark = edges_undirected.sparkSession
-    init = spark.createDataFrame(
+    init = checkpoint(spark.createDataFrame(
         [(int(s), int(s), 0, 1.0) for s in sources], ["source", "id", "dist", "sigma"]
-    ).localCheckpoint(eager=True)
+    ))
     levels = [init]
     settled = init.select("source", "id")
     frontier = init
@@ -262,7 +260,7 @@ def backward_deltas(spark, levels, eu) -> DataFrame:
     all_nodes = levels[0]
     for lv in levels[1:]:
         all_nodes = all_nodes.union(lv)
-    all_nodes = all_nodes.localCheckpoint(eager=True)
+    all_nodes = checkpoint(all_nodes)
 
     delta = None  # (source, id, delta)
     acc = []
@@ -287,7 +285,7 @@ def backward_deltas(spark, levels, eu) -> DataFrame:
             F.col("sigma").alias("sigma_v"),
         )
         # predecessors: edge (pid → wid) one level down, same source
-        contrib = (
+        contrib = checkpoint(
             cur.join(eu, cur.wid == eu.dst)
             .join(
                 prev,
@@ -304,7 +302,6 @@ def backward_deltas(spark, levels, eu) -> DataFrame:
             )
             .groupBy("source", "id")
             .agg(F.sum("c").alias("delta"))
-            .localCheckpoint(eager=True)
         )
         acc.append(contrib)
         delta = contrib

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.traversal import multi_source_bfs
+from icebug_spark.plans.iterate import checkpoint
 
 
 def top_harmonic_closeness(
@@ -53,7 +54,7 @@ def group_degree_greedy(eu: DataFrame, k: int = 5) -> DataFrame:
     group as (id, marginal_gain, round). Deterministic tie-break (gain
     desc, id asc). Each round = one aggregation over the remaining arcs."""
     spark = eu.sparkSession
-    arcs = eu.select("src", "dst").localCheckpoint(eager=True)
+    arcs = checkpoint(eu.select("src", "dst"))
     chosen: list[tuple[int, int, int]] = []
     # the group is a driver-known ≤k id list → isin filters instead of
     # anti-joins against a checkpointed single-column table; covered is a
@@ -115,9 +116,9 @@ def group_harmonic_greedy(eu: DataFrame, k: int = 5, max_hops: int = 16) -> Data
         r["id"]
         for r in deg.orderBy(F.col("deg").desc(), "id").limit(k * 4).collect()
     ]
-    d = multi_source_bfs(eu, pool, max_hops=max_hops).select(
+    d = checkpoint(multi_source_bfs(eu, pool, max_hops=max_hops).select(
         F.col("source").alias("c"), F.col("id").alias("v"), "dist"
-    ).localCheckpoint(eager=True)
+    ))
     chosen: list[tuple[int, float, int]] = []
     # the group's distance table dbest(v) = min over chosen c of d(c,v)
     # is DERIVED inside each round's scores plan from the checkpointed
@@ -207,10 +208,9 @@ def group_closeness_grow_shrink(
         if int(r["id"]) not in group
     ]
     sources = sorted(set(group) | set(pool))
-    d = (
+    d = checkpoint(
         multi_source_bfs(eu, sources, max_hops=max_hops)
         .select(F.col("source").alias("s"), F.col("id").alias("v"), "dist")
-        .localCheckpoint(eager=True)
     )
 
     def harmonic_of(members: list[int]) -> float:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.distances import diameter_double_sweep
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
 
 
 def approx_betweenness(
@@ -68,9 +68,9 @@ def _rk_sample(
     r = ⌈(c/ε²)·(⌊log₂(VD−2)⌋+1+ln(1/δ))⌉ capped at ``max_samples``, and
     the deterministic pair sample. → (eu, nodes, vd, r, pairs)."""
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     nodes = eu.select(F.col("src").alias("id")).distinct()
     n = nodes.count()
     vd = diameter_double_sweep(edges_undirected).collect()[0][0] or 2
@@ -116,9 +116,7 @@ def _rk_pairs(nodes: DataFrame, n: int, r: int, seed: int) -> DataFrame:
     ).where(F.col("rn2") < r).select(
         F.col("rn2").alias("pair"), F.col("id").alias("t")
     )
-    return s_side.join(t_side, "pair").where(F.col("s") != F.col("t")).localCheckpoint(
-        eager=True
-    )
+    return checkpoint(s_side.join(t_side, "pair").where(F.col("s") != F.col("t")))
 
 
 def approx_group_betweenness(
@@ -147,7 +145,7 @@ def approx_group_betweenness(
     eu, _nodes, vd, _r, pairs = _rk_sample(
         edges_undirected, eps, delta, c, max_samples, seed
     )
-    members = _sampled_path_members(eu, pairs, vd, seed).localCheckpoint(eager=True)
+    members = checkpoint(_sampled_path_members(eu, pairs, vd, seed))
 
     chosen: list[tuple[int, int, int]] = []
     remaining = members
@@ -164,9 +162,7 @@ def approx_group_betweenness(
         v, hits = int(top[0]["id"]), int(top[0]["hits"])
         chosen.append((v, hits, i))
         covered = remaining.where(F.col("id") == v).select("pair")
-        remaining = remaining.join(covered, "pair", "left_anti").localCheckpoint(
-            eager=True
-        )
+        remaining = checkpoint(remaining.join(covered, "pair", "left_anti"))
     if not chosen:
         return spark.createDataFrame([], "id BIGINT, covered_paths BIGINT, round INT")
     return spark.createDataFrame(chosen, "id BIGINT, covered_paths BIGINT, round INT")
@@ -195,8 +191,6 @@ def _sampled_path_members(
     # of this level's message σ's (σ of seen nodes is carried through
     # untouched). One job and one exchange per level, vs the old
     # checkpoint + limit(1).count + settled-union-checkpoint triple.
-    from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
-
     state = checkpoint(
         pairs.select(
             "pair",
@@ -347,10 +341,10 @@ def kadabra_betweenness(
 
     spark = edges_undirected.sparkSession
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-    nodes = eu.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+    ).distinct())
+    nodes = checkpoint(eu.select(F.col("src").alias("id")).distinct())
     n = nodes.count()
     vd = diameter_double_sweep(edges_undirected).collect()[0][0] or 2
     vd = max(int(vd), 2)
@@ -489,13 +483,13 @@ def k_path_centrality(
     by seeded hash over not-yet-visited neighbors (visited kept as an
     array column). → (id, kpath) 6dp."""
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     nodes = eu.select(F.col("src").alias("id")).distinct()
     total_walks = nodes.count() * walks_per_node
 
-    walks = nodes.crossJoin(
+    walks = checkpoint(nodes.crossJoin(
         F.broadcast(
             nodes.sparkSession.range(walks_per_node).select(F.col("id").alias("w"))
         )
@@ -506,7 +500,7 @@ def k_path_centrality(
         # per-walk length l ~ uniform{1..k} (KPathCentrality.cpp:54)
         (F.pmod(F.xxhash64(F.lit(seed), F.concat_ws("_", "id", "w")), F.lit(k)) + 1)
         .alias("l"),
-    ).localCheckpoint(eager=True)
+    ))
 
     visits = []
     cur = walks
@@ -572,9 +566,9 @@ def square_clustering(edges_undirected: DataFrame) -> DataFrame:
     Spark shape: wedge join (2-paths centered at v) then common-neighbor
     count per outer pair. → (id, square_cc) 6dp."""
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
 
     # wedges centered at v: u - v - w with u < w
     e1 = eu.select(F.col("src").alias("v"), F.col("dst").alias("u"))
@@ -643,24 +637,22 @@ def gedwalk_linear_proxy(
     cheap ranking/pruning heuristic. → (rank, id, gain)."""
     spark = edges_undirected.sparkSession
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
 
-    y = (
+    y = checkpoint(
         eu.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("t", F.lit(1.0))
-        .localCheckpoint(eager=True)
     )
     terms = []
     a = 1.0
     for _ in range(depth):
-        y = (
+        y = checkpoint(
             eu.join(y.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("t").alias("t"))
-            .localCheckpoint(eager=True)
         )
         a *= alpha
         terms.append(y.select("id", (F.lit(a) * F.col("t")).alias("term")))
@@ -734,15 +726,14 @@ def gedwalk_group(
     marginal gain, 6dp."""
     spark = edges_undirected.sparkSession
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
 
-    nodes = eu.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
-    deg = (
+    nodes = checkpoint(eu.select(F.col("src").alias("id")).distinct())
+    deg = checkpoint(
         eu.groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
     )
     if alpha is None:
         # reference default (GedWalk.cpp:122, GEOMETRIC bound strategy):
@@ -756,11 +747,10 @@ def gedwalk_group(
     pv = nodes.withColumn("p0", F.lit(1.0))
     y = nodes.withColumn("t", F.lit(1.0))
     for m in range(1, depth + 1):
-        y = (
+        y = checkpoint(
             eu.join(y.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("t").alias("t"))
-            .localCheckpoint(eager=True)
         )
         pv = pv.join(y.withColumnRenamed("t", f"p{m}"), "id", "left").na.fill(
             {f"p{m}": 0.0}
@@ -775,7 +765,7 @@ def gedwalk_group(
             F.col(f"p{lvl - m}") * F.col(f"p{m}") for m in range(lvl + 1)
         )
         bound_expr = (a * conv) if bound_expr is None else bound_expr + a * conv
-    bounds = (
+    bounds = checkpoint(
         pv.join(deg, "id")
         .select(
             "id", "d", bound_expr.alias("bound"),
@@ -783,7 +773,6 @@ def gedwalk_group(
                 F.lit(alpha**m) * F.col(f"p{m}") for m in range(1, depth + 1)
             ).alias("s"),
         )
-        .localCheckpoint(eager=True)
     )
     prev_miss = float(bounds.agg(F.sum("s")).collect()[0][0] or 0.0)
     n_all = bounds.count()
@@ -879,17 +868,16 @@ def complex_paths(
     per node: (id, round) with round=0 for seeds, null-free (unreached
     nodes omitted). Each round = one join + groupBy over active set."""
     eu = edges_undirected.select("src", "dst")
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
 
-    seeds = (
+    seeds = checkpoint(
         eu.where(F.col("src") == source)
         .select(F.col("dst").alias("id"))
         .union(eu.sparkSession.createDataFrame([(source,)], ["id"]))
         .distinct()
         .withColumn("round", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     active = seeds
     for rnd in range(1, max_rounds + 1):

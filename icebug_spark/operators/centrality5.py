@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.traversal import multi_source_bfs
+from icebug_spark.plans.iterate import checkpoint
 
 _INF = 1 << 30
 
@@ -49,10 +50,9 @@ _INF = 1 << 30
 def _distance_table(
     eu: DataFrame, sources: list[int], max_hops: int
 ) -> DataFrame:
-    return (
+    return checkpoint(
         multi_source_bfs(eu, sorted(set(int(s) for s in sources)), max_hops=max_hops)
         .select(F.col("source").alias("s"), F.col("id").alias("v"), "dist")
-        .localCheckpoint(eager=True)
     )
 
 
@@ -81,7 +81,7 @@ def _swap_local_search(
     d = _distance_table(eu, group + pool, max_hops)
 
     n_swaps = 0
-    universe = d.select("v").distinct().localCheckpoint(eager=True)
+    universe = checkpoint(d.select("v").distinct())
     for _ in range(max(0, max_swaps)):
         # Delta-restricted swap evaluation — ONE Spark job per round.
         # Removing member o and adding candidate c only changes the
@@ -103,7 +103,7 @@ def _swap_local_search(
         # (the objective is Δ plus a per-round constant).
         mdf = spark.createDataFrame([(x,) for x in group], "s BIGINT")
         cands = spark.createDataFrame([(c,) for c in pool], "s BIGINT")
-        stats = (
+        stats = checkpoint(
             universe.join(
                 d.join(F.broadcast(mdf), "s")
                 .groupBy("v")
@@ -122,7 +122,6 @@ def _swap_local_search(
                 F.get("top2", 0)["s"].alias("arg1"),
                 F.coalesce(F.get("top2", 1)["dist"], F.lit(_INF)).alias("min2"),
             )
-            .localCheckpoint(eager=True)
         )
         # A(o) rows and the candidate (B, C) rows ride ONE tagged union →
         # one groupBy → one collect: 2 Spark jobs per swap round (stats
@@ -292,8 +291,8 @@ def approx_closeness(
     assignment and every bucket is a join/aggregation; the tail sum is a
     window PARTITIONED BY pivot — nothing single-partition, k scales out."""
     spark = eu.sparkSession
-    eu = eu.select("src", "dst").localCheckpoint(eager=True)
-    nodes = eu.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+    eu = checkpoint(eu.select("src", "dst"))
+    nodes = checkpoint(eu.select(F.col("src").alias("id")).distinct())
     n = nodes.count()
     if samples is None:
         k = min(n_samples, n)
@@ -318,7 +317,7 @@ def approx_closeness(
     # the distance table) — identical pivot choice, and the hash
     # aggregate drops the full SORT of the n×k distance table the
     # row_number window paid
-    piv = (
+    piv = checkpoint(
         d.groupBy("v")
         .agg(
             F.min(
@@ -326,7 +325,6 @@ def approx_closeness(
             ).alias("sel")
         )
         .select("v", F.col("sel.s").alias("pivot"), F.col("sel.dist").alias("delta"))
-        .localCheckpoint(eager=True)
     )
     sample_df = spark.createDataFrame([(s,) for s in samples], "s BIGINT")
     # k x k pivot-to-pivot distances
@@ -465,10 +463,9 @@ def top_closeness(
     cutoff the reference's pruning loop realizes per-node).
     → (id, closeness) top-k, 6dp."""
     spark = eu.sparkSession
-    deg = (
+    deg = checkpoint(
         eu.groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
     )
     n = deg.count()
     if n <= 1:
@@ -534,11 +531,10 @@ def approx_spanning_edge(
     import math as _math
 
     spark = eu.sparkSession
-    c = (
+    c = checkpoint(
         eu.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = (
         c.select(F.col("u").alias("id")).union(c.select(F.col("v").alias("id")))

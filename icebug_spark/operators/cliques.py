@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.triangles import canonical_edges
+from icebug_spark.plans.iterate import checkpoint
 
 
 def k_cliques(edges_undirected: DataFrame, k: int) -> DataFrame:
@@ -34,7 +35,7 @@ def k_cliques(edges_undirected: DataFrame, k: int) -> DataFrame:
     exactly one order."""
     if k < 2:
         raise ValueError("k >= 2")
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
+    c = checkpoint(canonical_edges(edges_undirected))
     deg = (
         c.select(F.col("u").alias("id"))
         .union(c.select(F.col("v").alias("id")))
@@ -47,10 +48,10 @@ def k_cliques(edges_undirected: DataFrame, k: int) -> DataFrame:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = wd.select(
+    oriented = checkpoint(wd.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-    ).localCheckpoint(eager=True)
+    ))
     # cliques as (members array in orientation order, last node)
     cliques = oriented.select(F.array("x", "y").alias("m"), F.col("y").alias("last"))
     for _ in range(k - 2):
@@ -75,9 +76,9 @@ def k_cliques(edges_undirected: DataFrame, k: int) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_ok"))
             .where(F.col("n_ok") == F.size("m"))
         )
-        cliques = ok.select(
+        cliques = checkpoint(ok.select(
             F.concat("m", F.array("nxt")).alias("m"), F.col("nxt").alias("last")
-        ).localCheckpoint(eager=True)
+        ))
     return cliques.select(F.array_sort("m").alias("members"))
 
 
@@ -90,7 +91,7 @@ def maximal_cliques(edges_undirected: DataFrame, maximum_only: bool = False) -> 
     restricted to later-ordered neighbors and excluded set to
     earlier-ordered ones. Each group = one vertex's ego subgraph →
     applyInPandas (pure pandas/python BK, no external deps)."""
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
+    c = checkpoint(canonical_edges(edges_undirected))
     deg = (
         c.select(F.col("u").alias("id"))
         .union(c.select(F.col("v").alias("id")))

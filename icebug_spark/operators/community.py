@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from icebug_spark.plans.zipindex import dense_index
 
-from icebug_spark.plans.iterate import checkpoint_observe, iterate
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, iterate
 
 
 # ---------------------------------------------------------------- PLP ----
@@ -126,7 +126,7 @@ def louvain(
     e = edges_undirected
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    e = e.select("src", "dst", "weight").localCheckpoint(eager=True)
+    e = checkpoint(e.select("src", "dst", "weight"))
 
     # mapping: original id → current community (identity at start)
     mapping = e.select(F.col("src").alias("id")).union(
@@ -140,9 +140,9 @@ def louvain(
             .join(part.alias("p"), F.col("m.subset") == F.col("p.id"))
             .select(F.col("m.id").alias("id"), F.col("p.subset").alias("subset"))
         )
-        mapping = mapping.localCheckpoint(eager=True)
+        mapping = checkpoint(mapping)
         # coarsen: communities become super-nodes
-        e = coarsen(e, part).localCheckpoint(eager=True)
+        e = checkpoint(coarsen(e, part))
 
     # compact community ids densely (Partition::compact,
     # structures/Partition.hpp) — two-pass zipWithIndex, not a global
@@ -169,11 +169,11 @@ def _local_move(
     returned — more rounds can then never degrade the result, mirroring
     the reference's monotone sequential sweep (community/PLM.hpp:55)."""
     eu = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"))
-    eu = eu.localCheckpoint(eager=True)
+    eu = checkpoint(eu)
     total_w = eu.agg(F.sum("weight")).collect()[0][0] or 1.0  # = 2m
     m2 = total_w  # 2m
     deg = eu.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("deg"))
-    labels = deg.select("id", F.col("id").alias("subset")).localCheckpoint(eager=True)
+    labels = checkpoint(deg.select("id", F.col("id").alias("subset")))
 
     def _q(lbl: DataFrame) -> float:
         """Modularity of ``lbl`` over eu: Σ w_in/2m − γ·Σ vol²/(2m)²,
@@ -429,7 +429,7 @@ def nmi(pa: DataFrame, pb: DataFrame) -> DataFrame:
     """Normalized mutual information of two partitions — single row
     (nmi DOUBLE, 6dp). Reference ``community/NMIDistance.hpp:21`` reports
     the distance 1−NMI; we report NMI itself."""
-    ct = contingency(pa, pb).localCheckpoint(eager=True)
+    ct = checkpoint(contingency(pa, pb))
     n = ct.agg(F.sum("n")).collect()[0][0]
     a = ct.groupBy("subset_a").agg(F.sum("n").alias("na"))
     b = ct.groupBy("subset_b").agg(F.sum("n").alias("nb"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from icebug_spark.plans.zipindex import dense_index
 
 from icebug_spark.operators.community import _local_move, coarsen, louvain
+from icebug_spark.plans.iterate import checkpoint
 
 
 # ------------------------------------------------------------ Leiden -----
@@ -47,7 +48,7 @@ def leiden(
     e = edges_undirected
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    e = e.select("src", "dst", "weight").localCheckpoint(eager=True)
+    e = checkpoint(e.select("src", "dst", "weight"))
 
     mapping = e.select(F.col("src").alias("id")).union(
         e.select(F.col("dst").alias("id"))
@@ -57,13 +58,12 @@ def leiden(
         part = _local_move(e, gamma, move_rounds)
         refined = _refine(e, part, gamma, refine_rounds)
         # aggregate-level start labels: refined super-node → its community
-        mapping = (
+        mapping = checkpoint(
             mapping.alias("m")
             .join(refined.alias("r"), F.col("m.subset") == F.col("r.id"))
             .select(F.col("m.id").alias("id"), F.col("r.subset").alias("subset"))
-            .localCheckpoint(eager=True)
         )
-        e = coarsen(e, refined).localCheckpoint(eager=True)
+        e = checkpoint(coarsen(e, refined))
 
     # two-pass zipWithIndex dense relabel — no single-partition window
     compact = dense_index(mapping, ["subset"])
@@ -85,9 +85,9 @@ def _refine(
         .where(F.col("comm_s") == F.col("comm_d"))
         .select("src", "dst", "weight")
     )
-    intra = intra.union(
+    intra = checkpoint(intra.union(
         intra.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    ).localCheckpoint(eager=True)
+    ))
 
     labels = part.select("id").withColumn("subset", F.col("id"))
     for _ in range(rounds):
@@ -113,10 +113,9 @@ def _refine(
             )
             .select("id", F.col("sel.lbl").alias("new_subset"))
         )
-        labels = (
+        labels = checkpoint(
             labels.join(best, "id", "left")
             .select("id", F.coalesce("new_subset", "subset").alias("subset"))
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -181,20 +180,19 @@ def louvain_map_equation(
     e = edges_undirected
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    e = e.select("src", "dst", "weight").localCheckpoint(eager=True)
+    e = checkpoint(e.select("src", "dst", "weight"))
 
     mapping = e.select(F.col("src").alias("id")).union(
         e.select(F.col("dst").alias("id"))
     ).distinct().withColumn("subset", F.col("id"))
     for _level in range(levels):
         part = _local_move_mapeq(e, move_rounds)
-        mapping = (
+        mapping = checkpoint(
             mapping.alias("m")
             .join(part.alias("p"), F.col("m.subset") == F.col("p.id"))
             .select(F.col("m.id").alias("id"), F.col("p.subset").alias("subset"))
-            .localCheckpoint(eager=True)
         )
-        e = coarsen(e, part).localCheckpoint(eager=True)
+        e = checkpoint(coarsen(e, part))
 
     # two-pass zipWithIndex dense relabel — no single-partition window
     compact = dense_index(mapping, ["subset"])
@@ -210,10 +208,10 @@ def _local_move_mapeq(e: DataFrame, rounds: int) -> DataFrame:
       vol_A' = vol_A − d                vol_B' = vol_B + d
     ΔL is evaluated exactly from those (all divided by W)."""
     eu = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"))
-    eu = eu.localCheckpoint(eager=True)
+    eu = checkpoint(eu)
     W = eu.agg(F.sum("weight")).collect()[0][0] or 1.0
     deg = eu.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("deg"))
-    labels = deg.select("id", F.col("id").alias("subset")).localCheckpoint(eager=True)
+    labels = checkpoint(deg.select("id", F.col("id").alias("subset")))
 
     plogp = lambda c: F.when(c > 0, c * F.log2(c)).otherwise(F.lit(0.0))  # noqa: E731
 
@@ -282,10 +280,9 @@ def _local_move_mapeq(e: DataFrame, rounds: int) -> DataFrame:
             .where(F.col("sel.delta") < -1e-12)
             .select("id", F.col("sel.csub").alias("new_subset"))
         )
-        labels = (
+        labels = checkpoint(
             labels.join(best, "id", "left")
             .select("id", F.coalesce("new_subset", "subset").alias("subset"))
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -309,12 +306,11 @@ def lfm_cover(
     on the driver; at scale you'd batch seeds into one keyed aggregation."""
     spark = edges_undirected.sparkSession
     eu = edges_undirected.select("src", "dst")
-    eu = (
+    eu = checkpoint(
         eu.union(eu.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint(eager=True)
     )
     deg_df = (
-        eu.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(eager=True)
+        checkpoint(eu.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     )
 
     rows = []

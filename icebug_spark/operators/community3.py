@@ -24,6 +24,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 # ---------------------------------------------------------------- scoring
 
@@ -177,16 +179,15 @@ def _coarsen_with_mapping(e: DataFrame, matching: DataFrame):
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    mapping = nodes.join(m, "id", "left").select(
+    mapping = checkpoint(nodes.join(m, "id", "left").select(
         "id", F.coalesce("super", F.col("id")).alias("super")
-    ).localCheckpoint(eager=True)
-    coarse = (
+    ))
+    coarse = checkpoint(
         e.join(mapping.select(F.col("id").alias("src"), F.col("super").alias("csrc")), "src")
         .join(mapping.select(F.col("id").alias("dst"), F.col("super").alias("cdst")), "dst")
         .where(F.col("csrc") != F.col("cdst"))
         .groupBy(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
         .agg(F.sum("weight").alias("weight"))
-        .localCheckpoint(eager=True)
     )
     return coarse, mapping
 
@@ -210,7 +211,7 @@ def parallel_agglomerative(
     e = edges_weighted_undirected
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     from icebug_spark.operators.matching import local_max_matching
 
     mappings: list[DataFrame] = []
@@ -256,7 +257,7 @@ def parallel_agglomerative(
             mp.select(F.col("id").alias("super"), F.col("super").alias("super2")),
             "super",
         ).select("id", F.col("super2").alias("super"))
-        acc = acc.localCheckpoint(eager=True)
+        acc = checkpoint(acc)
     return acc.select("id", F.col("super").alias("subset"))
 
 
@@ -279,18 +280,16 @@ def lp_degree_ordered(
     update within a bucket is synchronous (documented divergence: ties
     inside one bucket, broken by smallest label as the reference's
     max_element also resolves deterministically). → (id, subset)."""
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     deg = eu.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     qs = [i / degree_buckets for i in range(1, degree_buckets)]
     cuts = deg.approxQuantile("deg", qs, 0.001) if qs else []
     bucket = F.lit(0)
     for bi, c in enumerate(cuts):
         bucket = F.when(F.col("deg") > c, bi + 1).otherwise(bucket)
-    nodes = deg.select("id", "deg", bucket.alias("bucket")).localCheckpoint(eager=True)
+    nodes = checkpoint(deg.select("id", "deg", bucket.alias("bucket")))
 
-    lbl = nodes.select("id", F.col("id").alias("lbl"), "bucket").localCheckpoint(
-        eager=True
-    )
+    lbl = checkpoint(nodes.select("id", F.col("id").alias("lbl"), "bucket"))
     for _it in range(max_iter):
         changed_total = 0
         for b in range(degree_buckets):
@@ -317,7 +316,7 @@ def lp_degree_ordered(
                 )
                 .select("id", F.col("sel.nlbl").alias("new_lbl"))
             )
-            upd = (
+            upd = checkpoint(
                 lbl.join(dominant, "id", "left")
                 .select(
                     "id",
@@ -334,7 +333,6 @@ def lp_degree_ordered(
                         & (F.col("new_lbl") != F.col("lbl"))
                     ).cast("int").alias("chg"),
                 )
-                .localCheckpoint(eager=True)
             )
             changed_total += upd.agg(F.sum("chg")).collect()[0][0] or 0
             lbl = upd.select("id", "lbl", "bucket")
@@ -364,18 +362,17 @@ def overlapping_nmi_distance(
     (onmi_distance DOUBLE 6dp)."""
     spark = cover_x.sparkSession
 
-    sx = cover_x.groupBy(F.col("subset").alias("i")).agg(
+    sx = checkpoint(cover_x.groupBy(F.col("subset").alias("i")).agg(
         F.count(F.lit(1)).alias("xi")
-    ).localCheckpoint(eager=True)
-    sy = cover_y.groupBy(F.col("subset").alias("j")).agg(
+    ))
+    sy = checkpoint(cover_y.groupBy(F.col("subset").alias("j")).agg(
         F.count(F.lit(1)).alias("yj")
-    ).localCheckpoint(eager=True)
-    inter = (
+    ))
+    inter = checkpoint(
         cover_x.select("id", F.col("subset").alias("i"))
         .join(cover_y.select("id", F.col("subset").alias("j")), "id")
         .groupBy("i", "j")
         .agg(F.count(F.lit(1)).alias("nij"))
-        .localCheckpoint(eager=True)
     )
 
     x_empty = sx.limit(1).isEmpty()
@@ -459,9 +456,9 @@ def node_structural_rand_sampled(
     pairs. → 1 row (rand_distance DOUBLE 6dp)."""
     # checkpoint BEFORE the exact-regime count so the guard doesn't
     # re-run the pa⋈pb join lineage once extra per call
-    joined = pa.select("id", F.col("subset").alias("sa")).join(
+    joined = checkpoint(pa.select("id", F.col("subset").alias("sa")).join(
         pb.select("id", F.col("subset").alias("sb")), "id"
-    ).localCheckpoint(eager=True)
+    ))
     k = int(math.isqrt(max_samples * 2)) + 2  # k*(k-1)/2 >= max_samples
     # distributed TakeOrdered top-k — not a global row_number window
     # (which single-tasks the whole node set); same sampled set. In the
@@ -471,11 +468,10 @@ def node_structural_rand_sampled(
     if k >= joined.count():
         sample = joined
     else:
-        sample = (
+        sample = checkpoint(
             joined.withColumn("h", F.xxhash64(F.lit(seed), "id"))
             .orderBy("h", "id")
             .limit(k)
-            .localCheckpoint(eager=True)
         )
     l = sample.select(
         F.col("id").alias("u"), F.col("sa").alias("sau"), F.col("sb").alias("sbu")
@@ -509,9 +505,7 @@ def graph_structural_rand_sampled(
     (rand_distance DOUBLE 6dp)."""
     # checkpoint BEFORE the exact-regime count so the guard doesn't
     # re-run whatever lineage produced edges_undirected once extra
-    e = edges_undirected.where(F.col("src") < F.col("dst")).localCheckpoint(
-        eager=True
-    )
+    e = checkpoint(edges_undirected.where(F.col("src") < F.col("dst")))
     # distributed TakeOrdered top-k over the EDGE set — the old global
     # row_number window single-tasked every edge at 1e12-edge scale. In
     # the exact regime (max_samples >= |edges|) skip the top-k: a

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.traversal import bfs_distances, multi_source_bfs
-from icebug_spark.plans.iterate import mirror
+from icebug_spark.plans.iterate import checkpoint, mirror
 
 
 def eccentricity(edges_undirected: DataFrame, sources: list[int]) -> DataFrame:
@@ -60,9 +60,7 @@ def effective_diameter(
     """Smallest h with N(h) >= ratio · N(max_h) over the source sample
     (reference EffectiveDiameter.hpp:19, ratio=0.9). Single row
     (effective_diameter BIGINT)."""
-    nf = neighborhood_function(edges_undirected, sources, max_h).localCheckpoint(
-        eager=True
-    )
+    nf = checkpoint(neighborhood_function(edges_undirected, sources, max_h))
     total = nf.agg(F.max("n_pairs")).collect()[0][0] or 0
     row = (
         nf.where(F.col("n_pairs") >= ratio * total)
@@ -84,7 +82,7 @@ def algebraic_loads(
     identical update): Jacobi over-relaxation
     x ← (1−ω)x + ω·avg(neighbors) on hash-seeded random vectors.
     → ((id, x0..x{k-1}) table, n) — n sizes downstream mirror() hints."""
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     nodes = eu.select(F.col("src").alias("id")).distinct()
     n = nodes.count()  # sizes the mirror() hints below
     cols = []
@@ -94,7 +92,7 @@ def algebraic_loads(
             / (1 << 30)
         )
         cols.append(u.alias(f"x{k}"))
-    x = nodes.select("id", *cols).localCheckpoint(eager=True)
+    x = checkpoint(nodes.select("id", *cols))
     for _ in range(rounds):
         nb = (
             # mirror(): the edge table never moves — broadcast under the
@@ -103,7 +101,7 @@ def algebraic_loads(
             .groupBy(F.col("dst").alias("id"))
             .agg(*[F.avg(f"x{k}").alias(f"a{k}") for k in range(n_systems)])
         )
-        x = (
+        x = checkpoint(
             x.join(mirror(nb, n), "id", "left")
             .select(
                 "id",
@@ -115,7 +113,6 @@ def algebraic_loads(
                     for k in range(n_systems)
                 ],
             )
-            .localCheckpoint(eager=True)
         )
     return x, n
 
@@ -131,7 +128,7 @@ def algebraic_distance(
     Jacobi over-relaxation x ← (1−ω)x + ω·avg(neighbors) on seeded random
     vectors; per-edge distance = Σ_k |x_k(u) − x_k(v)|. Deterministic via
     hash-seeded init. → (src, dst, alg_dist) 6dp."""
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     x, n = algebraic_loads(eu, n_systems, rounds, omega, seed)
     dist = None
     j = (

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.traversal import multi_source_bfs
-from icebug_spark.plans.iterate import checkpoint_observe, mirror
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
 
 _PHI = 0.77351  # Flajolet-Martin bias correction
 
@@ -71,9 +71,9 @@ def anf_sketch_iteration(
     One round: sk(v) ← sk(v) OR (OR of neighbor sketches) — a single
     groupBy with bitwise-OR zip, no per-node state on the driver."""
     # loop-invariant edge table materialized once; n sizes the hints
-    eu = eu.localCheckpoint(eager=True)
+    eu = checkpoint(eu)
     nodes = eu.select(F.col("src").alias("id")).distinct()
-    sk = _init_sketches(nodes, k, seed).localCheckpoint(eager=True)
+    sk = checkpoint(_init_sketches(nodes, k, seed))
     spark = eu.sparkSession
     # a sketch row (id + k-long array) is ~8x an (id, x) row, so scale
     # the row bound the broadcast cap compares against accordingly
@@ -123,7 +123,7 @@ def anf_effective_diameter(
 
 def hop_plot(eu: DataFrame, k: int = 32, max_h: int = 8, seed: int = 42) -> DataFrame:
     """HopPlotApproximation: (h, fraction) — N(h)/N(max_h), 4dp."""
-    nf = anf_sketch_iteration(eu, k, max_h, seed).localCheckpoint(eager=True)
+    nf = checkpoint(anf_sketch_iteration(eu, k, max_h, seed))
     total = nf.agg(F.max("n_pairs_est")).collect()[0][0] or 1.0
     return nf.select("h", F.round(F.col("n_pairs_est") / total, 4).alias("fraction"))
 
@@ -194,7 +194,7 @@ def neighborhood_function_heuristic(
     from icebug_spark.operators.distances import diameter_double_sweep
     from icebug_spark.plans.zipindex import dense_index
 
-    eu = eu.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(eu.select("src", "dst"))
     spark = eu.sparkSession
     deg = eu.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()

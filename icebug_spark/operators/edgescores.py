@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.triangles import canonical_edges, triangles
+from icebug_spark.plans.iterate import checkpoint
 
 
 def _degrees(c: DataFrame) -> DataFrame:
@@ -57,7 +58,7 @@ def edge_triangle_count(
     edge; edges in no triangle report 0. ``canon``/``kernel``: shared
     canonical-edge / oriented-adjacency artifacts (catalog memo)."""
     c = (
-        canonical_edges(edges_undirected).localCheckpoint(eager=True)
+        checkpoint(canonical_edges(edges_undirected))
         if canon is None
         else canon
     )
@@ -82,7 +83,7 @@ def edge_quadrangle_count(edges_undirected: DataFrame) -> DataFrame:
     """ChibaNishizekiQuadrangleEdgeScore: 4-cycles u-v-w-x-u through each
     canonical edge (u,v): pairs (x ∈ N(u)\\{v}, w ∈ N(v)\\{u}), x != w,
     (x,w) ∈ E. One wedge join + one closing semi-join-as-inner-join."""
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
+    c = checkpoint(canonical_edges(edges_undirected))
     adj = c.select(F.col("u").alias("node"), F.col("v").alias("nbr")).union(
         c.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
@@ -166,7 +167,7 @@ def local_degree_score(edges_undirected: DataFrame) -> DataFrame:
     neighbor degree desc; exponent e = 1 - log(rank)/log(deg(i)) (1.0 when
     deg(i)==1); per-edge score = max over the two endpoint views. The
     reference's per-node sort ≡ a ``rank()`` window (ties share rank)."""
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
+    c = checkpoint(canonical_edges(edges_undirected))
     deg = _degrees(c)
     adj = (
         c.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
@@ -397,7 +398,7 @@ def simmelian_overlap_score(edges_undirected: DataFrame, max_rank: int = 10) -> 
     """SimmelianOverlapScore (parametric simmelian backbone): rank each
     node's neighbors by embeddedness (shared triangles) desc, tie-break by
     neighbor id; score of edge (u,v) = |top-maxRank(u) ∩ top-maxRank(v)|."""
-    te = edge_triangle_count(edges_undirected).localCheckpoint(eager=True)
+    te = checkpoint(edge_triangle_count(edges_undirected))
     adj = te.select(F.col("u").alias("node"), F.col("v").alias("nbr"), "n_tri").union(
         te.select(F.col("v").alias("node"), F.col("u").alias("nbr"), "n_tri")
     )
@@ -430,10 +431,10 @@ def forest_fire_score(
     fire); here each round r is a deterministic function of (seed, r):
     one random root per round, frontier spreads while hash(u,v,seed,r,hop)
     < p, capped at log-scale hops. Driver loop over rounds (bounded)."""
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
-    adj = c.select(F.col("u").alias("node"), F.col("v").alias("nbr")).union(
+    c = checkpoint(canonical_edges(edges_undirected))
+    adj = checkpoint(c.select(F.col("u").alias("node"), F.col("v").alias("nbr")).union(
         c.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    ).localCheckpoint(eager=True)
+    ))
     nodes = adj.select(F.col("node").alias("id")).distinct()
     burns = None
     max_hops = 8
@@ -465,10 +466,10 @@ def forest_fire_score(
                 .join(visited, "node", "left_anti")
             )
             if hop % 3 == 2:
-                frontier = frontier.localCheckpoint(eager=True)
+                frontier = checkpoint(frontier)
             if frontier.isEmpty():
                 break
-            visited = visited.union(frontier).distinct().localCheckpoint(eager=True)
+            visited = checkpoint(visited.union(frontier).distinct())
     if burns is None:
         return c.select("u", "v", F.lit(0.0).alias("ff_score"))
     freq = burns.groupBy("u", "v").agg(F.count(F.lit(1)).alias("nb"))
@@ -501,7 +502,7 @@ def sparsify_local_degree(edges_undirected: DataFrame, target_ratio: float) -> D
     target_ratio fraction of edges. The cutoff comes from approxQuantile
     (distributed sketch), not a global sort — a total order over all edges
     would serialize into one task at scale."""
-    s = local_degree_score(edges_undirected).localCheckpoint(eager=True)
+    s = checkpoint(local_degree_score(edges_undirected))
     cut = s.approxQuantile("ld_score", [1.0 - target_ratio], 0.001)[0]
     return s.where(F.col("ld_score") >= cut)
 

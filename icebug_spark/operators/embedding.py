@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def random_walks(
     eu: DataFrame,
@@ -108,7 +110,7 @@ def random_walks(
         stalled = walks.join(nxt.select("walk_id"), "walk_id", "left_anti")
         walks = nxt.unionByName(stalled)
         if step % 4 == 3:
-            walks = walks.localCheckpoint(eager=True)
+            walks = checkpoint(walks)
     return walks.select("walk_id", F.col("path").alias("walk"))
 
 

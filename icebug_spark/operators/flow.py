@@ -10,7 +10,7 @@ edges that harvests ALL arc-disjoint shortest paths it finds (partial
 Dinic blocking flow) and applies them as one residual update. Round
 count is bounded by Dinic's O(V) phases rather than one-BFS-per-unit-of
 -flow; each phase is O(diameter) Spark jobs. The residual table is
-localCheckpoint'ed per round to keep lineage flat. For bulk all-pairs
+checkpointed per round to keep lineage flat. For bulk all-pairs
 flow needs, prefer the Gomory-Hu-style sampling the reference also
 lacks.
 """
@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from icebug_spark.plans.iterate import checkpoint
 
 
 def _bfs_aug_paths(
@@ -66,7 +68,7 @@ def _bfs_aug_paths(
         # one row per node continues the BFS (fattest path, deterministic
         # tie-break); sink-reaching candidates are kept SEPARATELY — one
         # per predecessor arc, fattest-first, bounded by max_paths
-        step = expanded.groupBy("node").agg(
+        step = checkpoint(expanded.groupBy("node").agg(
             F.max(F.struct("mincap", "path")).alias("best"),
             F.slice(
                 F.sort_array(
@@ -80,7 +82,7 @@ def _bfs_aug_paths(
                 1,
                 max_paths,
             ).alias("sink_paths"),
-        ).localCheckpoint(eager=True)
+        ))
         agg = step.agg(
             F.count(F.lit(1)).alias("cnt"),
             F.max(F.when(F.col("node") == sink, F.col("sink_paths"))).alias("hits"),
@@ -125,11 +127,10 @@ def edmonds_karp(
     bwd = edges_capacity.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(0.0).alias("cap")
     )
-    residual = (
+    residual = checkpoint(
         fwd.unionByName(bwd)
         .groupBy("src", "dst")
         .agg(F.sum("cap").alias("cap"))
-        .localCheckpoint(eager=True)
     )
     max_flow = 0.0
     for _ in range(max_augmentations):
@@ -148,12 +149,11 @@ def edmonds_karp(
             [(u, v, d) for (u, v), d in delta_map.items()],
             "src BIGINT, dst BIGINT, d DOUBLE",
         )
-        residual = (
+        residual = checkpoint(
             residual.join(deltas, ["src", "dst"], "left")
             .select(
                 "src", "dst", (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap")
             )
-            .localCheckpoint(eager=True)
         )
     # flow on original arcs = capacity - residual capacity (positive part)
     flow = (
@@ -168,18 +168,15 @@ def edmonds_karp(
         )
     )
     # source set: nodes reachable from source in final residual graph
-    arcs = residual.where(F.col("cap") > 1e-12).select("src", "dst").localCheckpoint(
-        eager=True
-    )
+    arcs = checkpoint(residual.where(F.col("cap") > 1e-12).select("src", "dst"))
     frontier = spark.createDataFrame([(source,)], "id BIGINT")
     reach = frontier
     for _ in range(64):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(arcs, frontier.id == arcs.src)
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(reach, "id", "left_anti")
-            .localCheckpoint(eager=True)
         )
         # frontiers are disjoint and individually checkpointed: plain
         # union keeps lineage flat with zero extra jobs per hop.

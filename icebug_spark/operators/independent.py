@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def luby_mis(
     edges_undirected: DataFrame, seed: int = 42, max_rounds: int = 60
@@ -22,9 +24,9 @@ def luby_mis(
     input). Returns (id)."""
     from icebug_spark.plans.iterate import checkpoint_observe
 
-    eu = edges_undirected.select("src", "dst").where(
+    eu = checkpoint(edges_undirected.select("src", "dst").where(
         F.col("src") != F.col("dst")
-    ).localCheckpoint(eager=True)
+    ))
     # the round-start emptiness test rides each remaining-checkpoint as
     # an observed count — no separate limit(1).count job per round
     remaining, m = checkpoint_observe(
@@ -49,14 +51,13 @@ def luby_mis(
         nb_best = er.groupBy(F.col("src").alias("id")).agg(
             F.max(F.struct(F.col("pd"), F.col("dst"))).alias("nb")
         )
-        winners = (
+        winners = checkpoint(
             pri.join(nb_best, "id", "left")
             .where(
                 F.col("nb").isNull()
                 | (F.struct(F.col("pri"), F.col("id")) > F.col("nb"))
             )
             .select("id")
-            .localCheckpoint(eager=True)
         )
         mis.append(winners)
         # drop winners + their neighbors
@@ -71,10 +72,9 @@ def luby_mis(
             F.count(F.lit(1)).alias("n"),
         )
         n_remaining = int(m["n"] or 0)
-        eu = (
+        eu = checkpoint(
             eu.join(remaining.withColumnRenamed("id", "src"), "src", "leftsemi")
             .join(remaining.withColumnRenamed("id", "dst"), "dst", "leftsemi")
-            .localCheckpoint(eager=True)
         )
     if not mis:
         return spark.createDataFrame([], "id long")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def k_core(edges_undirected: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """Node set of the k-core → (id). Input must be symmetrized.
@@ -25,7 +27,7 @@ def k_core(edges_undirected: DataFrame, k: int, max_iter: int = 50) -> DataFrame
     rebuild the edge table at all."""
     from icebug_spark.plans.iterate import checkpoint_observe
 
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     for _ in range(max_iter):
         # materialize the degree table ONCE per round with the peel test
         # observed during the checkpoint — the old shape ran the degree
@@ -39,11 +41,10 @@ def k_core(edges_undirected: DataFrame, k: int, max_iter: int = 50) -> DataFrame
         if int(m["np"] or 0) == 0:
             break
         keep = deg.where(F.col("deg") >= k).select("src")
-        eu = (
+        eu = checkpoint(
             eu.join(keep, "src", "leftsemi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "leftsemi")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
     return eu.select(F.col("src").alias("id")).distinct()
 
@@ -63,11 +64,9 @@ def core_numbers(
     high-min-degree graph the k=1..min_deg prefix disappears entirely."""
     from icebug_spark.plans.iterate import checkpoint_observe
 
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     spark = edges_undirected.sparkSession
-    remaining = eu.select(F.col("src").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
+    remaining = checkpoint(eu.select(F.col("src").alias("id")).distinct())
     parts: list[DataFrame] = []
     k = 1
     for _ in range(max_rounds):
@@ -109,10 +108,9 @@ def core_numbers(
         if n - n_peel == 0:
             break
         remaining = deg.where(F.col("deg") >= k).select("id")
-        eu = (
+        eu = checkpoint(
             eu.join(remaining.withColumnRenamed("id", "src"), "src", "leftsemi")
             .join(remaining.withColumnRenamed("id", "dst"), "dst", "leftsemi")
-            .localCheckpoint(eager=True)
         )
     if not parts:
         return spark.createDataFrame([], "id long, core long")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.traversal import multi_source_bfs
+from icebug_spark.plans.iterate import checkpoint
 
 
 def pivot_mds(
@@ -39,20 +40,20 @@ def pivot_mds(
     the usual finite surrogate). C = -1/2 · J d² J is built k×n
     distributed, the k×k Gram matrix collected, eigenvectors computed in
     numpy, and coordinates projected back distributedly."""
-    eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+    eu = checkpoint(edges_undirected.select("src", "dst"))
     deg = eu.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     pivots = [
         int(r["id"])
         for r in deg.orderBy(F.desc("deg"), "id").limit(num_pivots).collect()
     ]
     k = len(pivots)
-    d = multi_source_bfs(eu, pivots, max_hops).localCheckpoint(eager=True)
+    d = checkpoint(multi_source_bfs(eu, pivots, max_hops))
 
     nodes = eu.select(F.col("src").alias("id")).distinct()
     dmax = d.agg(F.max("dist")).collect()[0][0] or 1
     fill = float(unreached if unreached is not None else dmax + 1)
     # dense (source, id, d2) with unreached fill
-    grid = (
+    grid = checkpoint(
         nodes.crossJoin(
             d.sparkSession.createDataFrame([(p,) for p in pivots], "source BIGINT")
         )
@@ -61,20 +62,20 @@ def pivot_mds(
             "source", "id",
             F.pow(F.coalesce(F.col("dist").cast("double"), F.lit(fill)), 2).alias("d2"),
         )
-    ).localCheckpoint(eager=True)
+    )
 
     # double centering: c(p, v) = -1/2 (d2 - rowmean_p - colmean_v + total)
     rowm = grid.groupBy("source").agg(F.avg("d2").alias("rm"))
     colm = grid.groupBy("id").agg(F.avg("d2").alias("cm"))
     total = grid.agg(F.avg("d2")).collect()[0][0]
-    c = (
+    c = checkpoint(
         grid.join(F.broadcast(rowm), "source")
         .join(colm, "id")
         .select(
             "source", "id",
             (-0.5 * (F.col("d2") - F.col("rm") - F.col("cm") + F.lit(total))).alias("c"),
         )
-    ).localCheckpoint(eager=True)
+    )
 
     # k×k Gram matrix B = C Cᵀ (pivot-by-pivot, collected — k² scalars)
     a = c.select(F.col("source").alias("p"), "id", F.col("c").alias("ca"))
@@ -141,13 +142,10 @@ def maxent_stress(
     Initialized from :func:`pivot_mds` (the reference seeds from a cheap
     base layout the same way) unless ``init`` (id, coords) is given.
     """
-    from icebug_spark.plans.iterate import checkpoint
-
     eu = edges_undirected.select("src", "dst")
-    eu = (
+    eu = checkpoint(
         eu.union(eu.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     x = init if init is not None else pivot_mds(eu, dim=dim)
     x = x.select("id", F.col("coords").cast("array<double>").alias("coords"))
@@ -384,7 +382,7 @@ def num_edge_crossings(edges: DataFrame, layout: DataFrame) -> int:
     symmetrized both-directions edge table cannot double-count a
     geometric crossing."""
     pts = layout.select("id", "x", "y")
-    e = (
+    e = checkpoint(
         edges.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -393,7 +391,6 @@ def num_edge_crossings(edges: DataFrame, layout: DataFrame) -> int:
         .withColumn("eid", F.monotonically_increasing_id())
         .join(pts.select(F.col("id").alias("src"), F.col("x").alias("x1"), F.col("y").alias("y1")), "src")
         .join(pts.select(F.col("id").alias("dst"), F.col("x").alias("x2"), F.col("y").alias("y2")), "dst")
-        .localCheckpoint(eager=True)
     )
     a = e.select(
         F.col("eid").alias("ea"), F.col("src").alias("ua"), F.col("dst").alias("va"),

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.plans.skew import salted_join
 
 #: sub-keys per hot middle node when spark.icebug.saltHotDegree is set;
@@ -62,7 +63,7 @@ def _neighbor_pairs(adj: DataFrame, pair_filter=None) -> DataFrame:
         if 0 < n_hot <= cap:
             # checkpoint so the four hot-set joins below don't recompute
             # the degree aggregation once each
-            hot = F.broadcast(hot_keys.localCheckpoint(eager=True))
+            hot = F.broadcast(checkpoint(hot_keys))
             pairs = (
                 a.join(hot, "n", "left_anti")
                 .join(b.join(hot, "n", "left_anti"), "n")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.linkpred import _neighbor_pairs, common_neighbors
+from icebug_spark.plans.iterate import checkpoint
 
 
 def _deg(adj: DataFrame) -> DataFrame:
@@ -191,11 +192,10 @@ def katz_index_from(
     )
     total = None
     for l in range(1, max_path_length + 1):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(adj, "node")
             .groupBy("src", F.col("nbr").alias("node"))
             .agg(F.sum("paths").alias("paths"))
-            .localCheckpoint(eager=True)
         )
         contrib = frontier.select("src", "node", F.lit(l).alias("l"), "paths")
         total = contrib if total is None else total.union(contrib)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def local_max_matching(
     edges_weighted: DataFrame, max_rounds: int = 40
@@ -27,7 +29,7 @@ def local_max_matching(
     e = edges_weighted
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    canon = (
+    canon = checkpoint(
         e.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
@@ -36,7 +38,6 @@ def local_max_matching(
         )
         .groupBy("u", "v")
         .agg(F.max("weight").alias("weight"))
-        .localCheckpoint(eager=True)
     )
     spark = edges_weighted.sparkSession
     matched = []
@@ -205,7 +206,7 @@ def b_suitor_matching(
     e = edges_weighted
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    canon = (
+    canon = checkpoint(
         e.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
@@ -214,7 +215,6 @@ def b_suitor_matching(
         )
         .groupBy("u", "v")
         .agg(F.max("weight").alias("weight"))
-        .localCheckpoint(eager=True)
     )
     spark = edges_weighted.sparkSession
     nodes = (
@@ -229,7 +229,7 @@ def b_suitor_matching(
         )
     else:
         cap = nodes.withColumn("cap", F.lit(b))
-    cap = cap.localCheckpoint(eager=True)
+    cap = checkpoint(cap)
     matched = []
     # per-round driver-sync jobs = 4 (mutual checkpoint, cap checkpoint,
     # canon rebuild checkpoint, canon emptiness probe). The old loop ran
@@ -250,22 +250,20 @@ def b_suitor_matching(
             .where(F.col("rn") <= F.col("cap"))
             .select("u", "v", "weight")
         )
-        mutual = (
+        mutual = checkpoint(
             claims.groupBy("u", "v", "weight")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .where(F.col("cnt") == 2)
             .select("u", "v", "weight")
-            .localCheckpoint(eager=True)
         )
         matched.append(mutual)
         # consume capacity on both sides of the accepted edges
         used = mutual.select(F.col("u").alias("id")).union(
             mutual.select(F.col("v").alias("id"))
         ).groupBy("id").agg(F.count(F.lit(1)).alias("n_used"))
-        cap = (
+        cap = checkpoint(
             cap.join(used, "id", "left")
             .select("id", (F.col("cap") - F.coalesce("n_used", F.lit(0))).alias("cap"))
-            .localCheckpoint(eager=True)
         )
         # residual emptiness observed during the rebuild checkpoint — no
         # separate existence job per round

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import checkpoint_observe, mirror
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
 
 
 def boruvka_msf(
@@ -28,7 +28,7 @@ def boruvka_msf(
     Returns forest edges (src, dst, weight) canonicalized src < dst."""
     sign = -1.0 if maximum else 1.0
     # canonical undirected edges, dedup keeping min weight per pair
-    e = (
+    e = checkpoint(
         edges_weighted.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
@@ -37,14 +37,12 @@ def boruvka_msf(
         )
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    comp = (
+    comp = checkpoint(
         e.select(F.col("u").alias("id"))
         .union(e.select(F.col("v").alias("id")))
         .distinct()
         .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
     )
     n = comp.count()  # sizes the mirror() hints on the label joins
     forest = None
@@ -66,7 +64,7 @@ def boruvka_msf(
         ).union(
             labeled.select(F.col("cv").alias("comp"), "u", "v", "w", "cu", "cv")
         )
-        picked = (
+        picked = checkpoint(
             cand.groupBy("comp")
             .agg(F.min(F.struct("w", "u", "v", "cu", "cv")).alias("s"))
             .select(
@@ -77,7 +75,6 @@ def boruvka_msf(
                 F.col("s.cv").alias("cv"),
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
         forest = picked.select("u", "v", "w") if forest is None else forest.union(
             picked.select("u", "v", "w")
@@ -112,10 +109,9 @@ def boruvka_msf(
             if s_prev is not None and s_prev == s_new:
                 break
             s_prev = s_new
-        comp = (
+        comp = checkpoint(
             comp.join(lbl.withColumnRenamed("id", "comp"), "comp", "left")
             .select("id", F.coalesce("lbl", F.col("comp")).alias("comp"))
-            .localCheckpoint(eager=True)
         )
     if forest is None:
         return edges_weighted.sparkSession.createDataFrame(
@@ -152,7 +148,7 @@ def union_maximum_spanning_forest(
     standard CC loop."""
     from icebug_spark.operators.components import connected_components
 
-    canon = (
+    canon = checkpoint(
         edges_weighted.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"),
@@ -161,7 +157,6 @@ def union_maximum_spanning_forest(
         )
         .groupBy("u", "v")
         .agg(F.max("weight").alias("weight"))
-        .localCheckpoint(eager=True)
     )
     levels = sorted(
         (r["weight"] for r in canon.select("weight").distinct().collect()),

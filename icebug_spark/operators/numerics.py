@@ -24,7 +24,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import mirror, pin, pin_observe
+from icebug_spark.plans.iterate import checkpoint, mirror, pin, pin_observe
 
 
 def _sym(edges_undirected: DataFrame) -> DataFrame:
@@ -107,9 +107,9 @@ def conjugate_gradient(
     three vector pins); on a cluster each action is a full barrier, so
     this is the difference between 2 and 7 synchronization rounds per
     CG step at any scale."""
-    eu = _sym(edges_undirected).localCheckpoint(eager=True)
+    eu = checkpoint(_sym(edges_undirected))
     deg = eu.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("deg"))
-    deg = deg.localCheckpoint(eager=True)
+    deg = checkpoint(deg)
     # exact vector size, free off the checkpointed degree table — sizes
     # the mirror() hints so the n-sized vectors broadcast under the
     # vertex cap (shuffle-hash past it) instead of stat-less sort-merges
@@ -257,9 +257,7 @@ def trace_lplus(
     mean-centered ±1 probe vectors z (deterministic from xxhash64 parity
     — reproducible across runs). One CG solve per probe."""
     eu = _sym(edges_undirected)
-    all_nodes = eu.select(F.col("src").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
+    all_nodes = checkpoint(eu.select(F.col("src").alias("id")).distinct())
     total = 0.0
     for p in range(probes):
         z = all_nodes.select(
@@ -269,9 +267,7 @@ def trace_lplus(
             .alias("x"),
         )
         mean = z.agg(F.avg("x")).collect()[0][0] or 0.0
-        z = z.select("id", (F.col("x") - F.lit(mean)).alias("x")).localCheckpoint(
-            eager=True
-        )
+        z = checkpoint(z.select("id", (F.col("x") - F.lit(mean)).alias("x")))
         x = conjugate_gradient(edges_undirected, z, max_iter=max_iter)
         total += _dot(z, x)
     return total / max(probes, 1)
@@ -293,7 +289,7 @@ def electrical_closeness(
     spark = edges_undirected.sparkSession
     eu = _sym(edges_undirected)
     all_nodes = (
-        eu.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+        checkpoint(eu.select(F.col("src").alias("id")).distinct())
     )
     n = all_nodes.count()
     tr = trace_lplus(edges_undirected, probes=trace_probes, max_iter=max_iter)

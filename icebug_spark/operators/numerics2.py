@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.independent import luby_mis
-from icebug_spark.plans.iterate import pin
+from icebug_spark.plans.iterate import checkpoint, pin
 
 
 def create_augmented_graph(
@@ -92,13 +92,12 @@ def forest_centrality(
     from icebug_spark.operators.numerics import conjugate_gradient, trace_lplus
 
     aug, root = create_augmented_graph(edges_undirected)
-    aug = aug.localCheckpoint(eager=True)
+    aug = checkpoint(aug)
     spark = edges_undirected.sparkSession
-    all_nodes = (
+    all_nodes = checkpoint(
         aug.select(F.col("src").alias("id"))
         .union(aug.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_aug = all_nodes.count()
     n = n_aug - 1
@@ -112,7 +111,7 @@ def forest_centrality(
         )
         return conjugate_gradient(aug, b, max_iter=max_iter)
 
-    xr = _col_solve(root).localCheckpoint(eager=True)
+    xr = checkpoint(_col_solve(root))
     lrr = xr.where(F.col("id") == root).collect()[0]["x"]
 
     solve_ids = (
@@ -155,9 +154,9 @@ def greedy_coloring(
     Gauss-Seidel and other within-class-parallel sweeps."""
     from icebug_spark.plans.iterate import checkpoint_observe
 
-    eu = edges_undirected.select("src", "dst").where(
+    eu = checkpoint(edges_undirected.select("src", "dst").where(
         F.col("src") != F.col("dst")
-    ).localCheckpoint(eager=True)
+    ))
     # residual emptiness observed during each remaining-checkpoint — no
     # separate limit(1).count job per color round
     remaining_nodes, rm = checkpoint_observe(
@@ -175,17 +174,16 @@ def greedy_coloring(
         isolated = remaining_nodes.join(
             eu.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
         )
-        cls = mis.select("id").union(isolated).distinct().localCheckpoint(eager=True)
+        cls = checkpoint(mis.select("id").union(isolated).distinct())
         out.append(cls.withColumn("color", F.lit(c)))
         remaining_nodes, rm = checkpoint_observe(
             remaining_nodes.join(cls, "id", "left_anti"),
             F.count(F.lit(1)).alias("n"),
         )
         n_remaining = int(rm["n"] or 0)
-        eu = (
+        eu = checkpoint(
             eu.join(cls.withColumnRenamed("id", "src"), "src", "left_anti")
             .join(cls.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .localCheckpoint(eager=True)
         )
     res = out[0]
     for df in out[1:]:
@@ -213,10 +211,10 @@ def gauss_seidel_relaxation(
     e = edges_weighted
     if "weight" not in e.columns:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-    eu = e.select("src", "dst", "weight").localCheckpoint(eager=True)
+    eu = checkpoint(e.select("src", "dst", "weight"))
     if coloring is None:
         coloring = greedy_coloring(eu)
-    coloring = coloring.localCheckpoint(eager=True)
+    coloring = checkpoint(coloring)
     # greedy_coloring only sees nodes on edges: ids present in b but with
     # no incident edge would never join any color class and keep x = x0
     # instead of b_i/diag_i. They are pairwise independent — one extra
@@ -227,7 +225,7 @@ def gauss_seidel_relaxation(
         .join(coloring.select("id"), "id", "left_anti")
         .withColumn("color", F.lit((mx if mx is not None else -1) + 1))
     )
-    coloring = coloring.unionByName(isolated).localCheckpoint(eager=True)
+    coloring = checkpoint(coloring.unionByName(isolated))
     colors = sorted(r["color"] for r in coloring.select("color").distinct().collect())
 
     base = b.select("id", F.col("x").alias("b")).join(diag, "id")

@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 
 from icebug_spark.operators.matching import local_max_matching
 from icebug_spark.operators.numerics import _axpy, _dot, _sym, laplacian_mxv
-from icebug_spark.plans.iterate import mirror, pin, pin_observe
+from icebug_spark.plans.iterate import checkpoint, mirror, pin, pin_observe
 
 # Stage-boundary truncation with stats reset — see ``plans.iterate.pin``
 # for the full rationale (the round-4 regression: inherited-stats BigInt
@@ -77,10 +77,9 @@ _pin = pin
 
 def _level(eu: DataFrame):
     """(eu both-direction, deg) for one hierarchy level."""
-    deg = (
+    deg = checkpoint(
         eu.groupBy(F.col("src").alias("id"))
         .agg(F.sum("weight").alias("deg"))
-        .localCheckpoint(eager=True)
     )
     return eu, deg
 
@@ -135,7 +134,7 @@ def eliminate_low_degree(
         n_low = n_low or 0
         if n <= direct_solve_size or n_low <= min_elim_fraction * n:
             break
-        deg = deg.localCheckpoint(eager=True)
+        deg = checkpoint(deg)
         low = deg.where(F.col("nnbr") <= thr).select("id")
         # independence by local hash-rank: f survives iff no low-degree
         # neighbor has a smaller (hash, id) key
@@ -155,13 +154,13 @@ def eliminate_low_degree(
             .select(F.col("src").alias("id"))
             .distinct()
         )
-        fset = low.join(losers, "id", "left_anti").localCheckpoint(eager=True)
+        fset = checkpoint(low.join(losers, "id", "left_anti"))
         nf = fset.count()
         if nf <= min_elim_fraction * n or nf == 0:
             break
         if nf == n:  # never eliminate every node — keep one C node
             keep = fset.orderBy("id").limit(1)
-            fset = fset.join(keep, "id", "left_anti").localCheckpoint(eager=True)
+            fset = checkpoint(fset.join(keep, "id", "left_anti"))
             nf -= 1
             if nf == 0:
                 break
@@ -180,12 +179,12 @@ def eliminate_low_degree(
                 "fdeg",
             )
         )
-        pq = star.select(
+        pq = checkpoint(star.select(
             "f",
             "c",
             (F.col("weight") / F.col("fdeg")).alias("p"),
             (F.lit(1.0) / F.col("fdeg")).alias("qv"),
-        ).localCheckpoint(eager=True)
+        ))
         stages.append((pq, fset))
         # star-mesh: clique among each f's neighbors + untouched C-C edges
         a = pq.select("f", F.col("c").alias("c1"), F.col("p").alias("p1"))
@@ -204,11 +203,10 @@ def eliminate_low_degree(
             .join(fset.withColumnRenamed("id", "dst"), "dst", "left_anti")
             .select("src", "dst", "weight")
         )
-        eu = (
+        eu = checkpoint(
             cc.unionByName(clique)
             .groupBy("src", "dst")
             .agg(F.sum("weight").alias("weight"))
-            .localCheckpoint(eager=True)
         )
     return eu, stages
 
@@ -217,18 +215,17 @@ def elim_restrict(b: DataFrame, pq: DataFrame, fset: DataFrame, n: int) -> DataF
     """b'_c = b_c + Σ_f P[f,c]·b_f (exact restriction through one
     elimination stage). Returns (b_reduced, b_f) — the caller keeps b_f
     for back-substitution."""
-    bf = b.join(fset, "id", "leftsemi").localCheckpoint(eager=True)
+    bf = checkpoint(b.join(fset, "id", "leftsemi"))
     contrib = (
         pq.join(mirror(bf.withColumnRenamed("id", "f"), n), "f")
         .groupBy(F.col("c").alias("id"))
         .agg(F.sum(F.col("p") * F.col("x")).alias("x"))
     )
     bc = b.join(fset, "id", "left_anti")
-    reduced = (
+    reduced = checkpoint(
         bc.unionByName(contrib)
         .groupBy("id")
         .agg(F.sum("x").alias("x"))
-        .localCheckpoint(eager=True)
     )
     return reduced, bf
 
@@ -346,7 +343,7 @@ def _tv_relax(
             .groupBy("id")
             .agg(*[F.sum(c).alias(c) for c in cols])
         )
-    return tv.localCheckpoint(eager=True)
+    return checkpoint(tv)
 
 
 def _node_energy_stats(eu: DataFrame, tv: DataFrame, n: int) -> DataFrame:
@@ -472,7 +469,7 @@ def lamg_hierarchy(
     levels buys little once the low-degree fringe is gone), ``mapping``
     maps a level's node ids to the NEXT level's aggregate roots and
     ``coarse`` is the driver-side final Laplacian."""
-    eu = _sym(edges_weighted_undirected).localCheckpoint(eager=True)
+    eu = checkpoint(_sym(edges_weighted_undirected))
     eu, elim = eliminate_low_degree(
         eu, max_stages=elim_stages, direct_solve_size=coarsest
     )
@@ -529,9 +526,9 @@ def lamg_hierarchy(
             # pathological TVs can reject everything — fall back to the
             # ungated affinity (the reference's bins loop would likewise
             # leave these nodes undecided and retry next level)
-            gated = aff.select(
+            gated = checkpoint(aff.select(
                 F.col("src").alias("node"), F.col("dst").alias("seed"), "weight"
-            ).localCheckpoint(eager=True)
+            ))
         # pair matching on gated pairs in the adoption direction (the
         # aggregate root below is the SMALLER endpoint, so gate
         # node=greater adopting seed=lesser). tie-jitter (symmetric per
@@ -602,10 +599,9 @@ def lamg_hierarchy(
                 .select(F.col("node").alias("id"), F.col("s.seed").alias("agg"))
             )
             roots = roots.unionByName(attach)
-        mapping = (
+        mapping = checkpoint(
             nodes.join(roots, "id", "left")
             .select("id", F.coalesce("agg", F.col("id")).alias("agg"))
-            .localCheckpoint(eager=True)
         )
         from icebug_spark.plans.iterate import checkpoint_observe as _cpo
 
@@ -753,7 +749,7 @@ def lamg_solve(
         max_levels=max_levels,
         elim_stages=elim_stages,
     )
-    b = b.select("id", "x").localCheckpoint(eager=True)
+    b = checkpoint(b.select("id", "x"))
     n_rows = b.count()
     # exact low-degree elimination (restrict b through each stage; the
     # per-stage b_f slices are kept for back-substitution after PCG)
@@ -767,10 +763,10 @@ def lamg_solve(
     else:
         eu = hier.get("reduced_eu")
         if eu is None:
-            eu = _sym(edges_weighted_undirected).localCheckpoint(eager=True)
-        deg = eu.groupBy(F.col("src").alias("id")).agg(
+            eu = checkpoint(_sym(edges_weighted_undirected))
+        deg = checkpoint(eu.groupBy(F.col("src").alias("id")).agg(
             F.sum("weight").alias("deg")
-        ).localCheckpoint(eager=True)
+        ))
     b_norm = math.sqrt(max(_dot(b, b, n_rows), 0.0)) or 1.0
 
     def _precond(res: DataFrame) -> DataFrame:

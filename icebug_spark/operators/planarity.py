@@ -24,14 +24,15 @@ from collections import defaultdict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def is_planar(edges_undirected: DataFrame, max_edges: int = 100_000) -> bool:
     """True iff the (simple, undirected view of the) graph is planar."""
-    e = (
+    e = checkpoint(
         edges_undirected.where(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     agg = e.agg(
         F.count(F.lit(1)).alias("m"),

@@ -16,6 +16,7 @@ from icebug_spark.operators.components import connected_components
 from icebug_spark.operators.distances import diameter_double_sweep
 from icebug_spark.operators.linkpred import degree_assortativity
 from icebug_spark.operators.triangles import global_clustering_coefficient
+from icebug_spark.plans.iterate import checkpoint
 
 
 def profile(
@@ -31,9 +32,9 @@ def profile(
     clustering, assortativity)."""
     spark = edges_undirected.sparkSession
     eu = edges_undirected.select("src", "dst")
-    sym = eu.union(
+    sym = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
 
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     dstats = deg.agg(
@@ -97,7 +98,7 @@ def overview(g, include_clustering: bool = True) -> str:
     from icebug_spark.operators.triangles import local_clustering_coefficient
 
     spark = g.edges.sparkSession
-    eu = g.symmetrized().localCheckpoint(eager=True)
+    eu = checkpoint(g.symmetrized())
     n = g.number_of_nodes()
     m = g.edges.count()
     self_loops = g.edges.where(F.col("src") == F.col("dst")).count()

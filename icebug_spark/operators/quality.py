@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def _labeled(eu: DataFrame, partition: DataFrame) -> DataFrame:
     """(src, dst, cs, cd): arcs with both endpoint subsets."""
@@ -154,9 +156,9 @@ def partition_fragmentation(
     cluster-induced subgraph (PartitionFragmentation.hpp:13). Connected
     pieces via min-label propagation restricted to intra-cluster edges —
     all clusters converge in one shared loop."""
-    intra = _labeled(eu, partition).where(F.col("cs") == F.col("cd")).select(
+    intra = checkpoint(_labeled(eu, partition).where(F.col("cs") == F.col("cd")).select(
         F.col("cs").alias("subset"), "src", "dst"
-    ).localCheckpoint(eager=True)
+    ))
     labels = partition.select("subset", F.col("id"), F.col("id").alias("comp"))
     for _ in range(max_iter):
         nbr_min = (
@@ -167,14 +169,13 @@ def partition_fragmentation(
             .groupBy("subset", F.col("src").alias("id"))
             .agg(F.min("nc").alias("nbr_comp"))
         )
-        new_labels = (
+        new_labels = checkpoint(
             labels.join(nbr_min, ["subset", "id"], "left")
             .select(
                 "subset",
                 "id",
                 F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.join(
@@ -231,7 +232,7 @@ def permanence(eu: DataFrame, partition: DataFrame) -> DataFrame:
     (PermanenceCentrality.hpp:13). cc_int = clustering coefficient among
     v's INTERNAL neighbors; E_max = max edges to a single external
     cluster (≥1 in the denominator per the reference)."""
-    lab = _labeled(eu, partition).localCheckpoint(eager=True)
+    lab = checkpoint(_labeled(eu, partition))
     per_node = lab.groupBy(F.col("src").alias("id"), F.col("cs").alias("c")).agg(
         F.count(F.lit(1)).alias("deg"),
         F.sum(F.when(F.col("cs") == F.col("cd"), 1).otherwise(0)).alias("internal"),

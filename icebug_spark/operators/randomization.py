@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.plans.zipindex import dense_index
 
 
@@ -68,11 +69,10 @@ def edge_switching(
     versus the reference's one-at-a-time chain (EdgeSwitching.hpp:110) —
     the batch chain mixes comparably per edge-touch and is fully
     data-parallel."""
-    e = (
+    e = checkpoint(
         edges_undirected.where(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for r in range(rounds):
         # seeded random pairing via the two-pass dense index (ascending
@@ -134,18 +134,17 @@ def edge_switching(
             .select("pair")
             .distinct()
         )
-        ok = ok.join(dup_pairs, "pair", "left_anti").localCheckpoint(eager=True)
+        ok = checkpoint(ok.join(dup_pairs, "pair", "left_anti"))
         removed = ok.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
             ok.select(F.col("c").alias("u"), F.col("d").alias("v"))
         )
         added = ok.select(F.col("n1u").alias("u"), F.col("n1v").alias("v")).union(
             ok.select(F.col("n2u").alias("u"), F.col("n2v").alias("v"))
         )
-        e = (
+        e = checkpoint(
             e.join(removed, ["u", "v"], "left_anti")
             .union(added)
             .distinct()
-            .localCheckpoint(eager=True)
         )
     return e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
 
@@ -179,10 +178,10 @@ def curveball_trades(
         )
         x = paired.where(F.col("side") == 0).select("trade", F.col("id").alias("x"))
         y = paired.where(F.col("side") == 1).select("trade", F.col("id").alias("y"))
-        pairs = x.join(y, "trade").localCheckpoint(eager=True)
-        traded = pairs.select(F.col("x").alias("id")).union(
+        pairs = checkpoint(x.join(y, "trade"))
+        traded = checkpoint(pairs.select(F.col("x").alias("id")).union(
             pairs.select(F.col("y").alias("id"))
-        ).localCheckpoint(eager=True)
+        ))
         # participating arcs: traded endpoint → non-traded neighbor
         part = (
             adj.join(traded.withColumnRenamed("id", "src"), "src", "leftsemi")
@@ -229,11 +228,10 @@ def curveball_trades(
             ["src", "dst"],
             "left_anti",
         )
-        adj = (
+        adj = checkpoint(
             keep.union(fwd)
             .union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
     return adj
 

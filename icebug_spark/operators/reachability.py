@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def reachable_nodes(
     edges: DataFrame, sources: list[int], max_hops: int = 64
@@ -18,22 +20,21 @@ def reachable_nodes(
     one multi-source frontier loop, state = (source, node). Returns
     (source, n_reachable) counting the source itself."""
     spark = edges.sparkSession
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    e = checkpoint(edges.select("src", "dst").distinct())
     frontier = spark.createDataFrame(
         [(s, s) for s in sources], "source BIGINT, node BIGINT"
     )
     seen = frontier
     for _ in range(max_hops):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(e, frontier.node == e.src)
             .select("source", F.col("dst").alias("node"))
             .distinct()
             .join(seen, ["source", "node"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         if frontier.isEmpty():
             break
-        seen = seen.union(frontier).localCheckpoint(eager=True)
+        seen = checkpoint(seen.union(frontier))
     return seen.groupBy("source").agg(F.count(F.lit(1)).alias("n_reachable"))
 
 
@@ -72,11 +73,10 @@ def all_simple_paths(
     )
     done = None
     for _ in range(cutoff):
-        ext = (
+        ext = checkpoint(
             active.join(e, active.cur == e.src)
             .where(~F.array_contains(F.col("path"), F.col("dst")))
             .select(F.concat("path", F.array("dst")).alias("path"), F.col("dst").alias("cur"))
-            .localCheckpoint(eager=True)
         )
         hits = ext.where(F.col("cur") == target).select("path")
         done = hits if done is None else done.union(hits)

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
 
 
 def strongly_connected_components(
@@ -32,13 +32,12 @@ def strongly_connected_components(
 ) -> DataFrame:
     """(id, component) where component = max node id of the SCC."""
     e_all = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    nodes = (
+    nodes = checkpoint(
         e_all.select(F.col("src").alias("id"))
         .union(e_all.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e = e_all.localCheckpoint(eager=True)
+    e = checkpoint(e_all)
     spark = edges.sparkSession
     result = None
     # every loop below fuses its convergence scalar into the checkpoint's
@@ -65,16 +64,15 @@ def strongly_connected_components(
                 break
             found = trivial.select("id", F.col("id").alias("component"))
             result = found if result is None else result.union(found)
-            result = result.localCheckpoint(eager=True)
+            result = checkpoint(result)
             nodes, mn = checkpoint_observe(
                 nodes.join(trivial, "id", "left_anti"),
                 F.count(F.lit(1)).alias("n"),
             )
             n_nodes = int(mn["n"] or 0)
-            e = (
+            e = checkpoint(
                 e.join(nodes.withColumnRenamed("id", "src"), "src", "leftsemi")
                 .join(nodes.withColumnRenamed("id", "dst"), "dst", "leftsemi")
-                .localCheckpoint(eager=True)
             )
         if n_nodes == 0:
             break
@@ -99,12 +97,11 @@ def strongly_connected_components(
                 break
             prev_sum = mp["s"]
         # 2. backward reachability to the color root within the color class
-        ec = (
+        ec = checkpoint(
             e.join(color.withColumnRenamed("id", "src").withColumnRenamed("color", "c1"), "src")
             .join(color.withColumnRenamed("id", "dst").withColumnRenamed("color", "c2"), "dst")
             .where(F.col("c1") == F.col("c2"))
             .select("src", "dst", F.col("c1").alias("color"))
-            .localCheckpoint(eager=True)
         )
         scc, ms = checkpoint_observe(
             color.where(F.col("id") == F.col("color")).select("id", "color"),
@@ -127,17 +124,16 @@ def strongly_connected_components(
             prev_n = int(mg["n"] or 0)
         found = scc.select("id", F.col("color").alias("component"))
         result = found if result is None else result.union(found)
-        result = result.localCheckpoint(eager=True)
+        result = checkpoint(result)
         # 3. peel off found SCCs
         nodes, mn = checkpoint_observe(
             nodes.join(found.select("id"), "id", "left_anti"),
             F.count(F.lit(1)).alias("n"),
         )
         n_nodes = int(mn["n"] or 0)
-        e = (
+        e = checkpoint(
             e.join(nodes.withColumnRenamed("id", "src"), "src", "leftsemi")
             .join(nodes.withColumnRenamed("id", "dst"), "dst", "leftsemi")
-            .localCheckpoint(eager=True)
         )
     if result is None:
         return spark.createDataFrame([], "id long, component long")

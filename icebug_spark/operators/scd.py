@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def _degrees(eu: DataFrame) -> DataFrame:
     return eu.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
@@ -50,7 +52,7 @@ def ppr_push(
 
     Returns (seed, id, ppr) for nodes with p > 0."""
     spark = eu.sparkSession
-    deg = _degrees(eu).localCheckpoint(eager=True)
+    deg = checkpoint(_degrees(eu))
     state = spark.createDataFrame(
         [(s, s, 0.0, 1.0) for s in seeds],
         "seed BIGINT, id BIGINT, p DOUBLE, r DOUBLE",
@@ -92,7 +94,7 @@ def ppr_push(
                 (F.coalesce("r", F.lit(0.0)) + F.coalesce("dr", F.lit(0.0))).alias("r"),
             )
         )
-        state = merged.localCheckpoint(eager=True)
+        state = checkpoint(merged)
     return state.where(F.col("p") > 0).select("seed", "id", F.col("p").alias("ppr"))
 
 
@@ -113,9 +115,7 @@ def sweep_cut(eu: DataFrame, ppr: DataFrame) -> DataFrame:
         .withColumn("score", F.col("ppr") / F.greatest("deg", F.lit(1)))
     )
     w = Window.partitionBy("seed").orderBy(F.col("score").desc(), F.col("id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w)).localCheckpoint(
-        eager=True
-    )
+    ranked = checkpoint(scored.withColumn("rank", F.row_number().over(w)))
     # k(x): edges from x to nodes ranked strictly before x (same seed)
     ra = ranked.select("seed", F.col("id").alias("src"), F.col("rank").alias("rs"))
     rb = ranked.select("seed", F.col("id").alias("dst"), F.col("rank").alias("rd"))
@@ -174,16 +174,15 @@ def random_bfs_community(eu: DataFrame, seeds: list[int], hops: int = 2) -> Data
     frontier = spark.createDataFrame([(s, s) for s in seeds], "seed BIGINT, id BIGINT")
     members = frontier
     for _ in range(hops):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(eu.select(F.col("src").alias("id"), "dst"), "id")
             .select("seed", F.col("dst").alias("id"))
             .distinct()
             .join(members, ["seed", "id"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         if frontier.isEmpty():
             break
-        members = members.union(frontier).localCheckpoint(eager=True)
+        members = checkpoint(members.union(frontier))
     return members
 
 

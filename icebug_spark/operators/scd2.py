@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 _BALL_SCHEMA = "seed BIGINT, src BIGINT, dst BIGINT"
 _NODE_SCHEMA = "seed BIGINT, id BIGINT, dist BIGINT, deg BIGINT"
 _OUT_SCHEMA = "seed BIGINT, id BIGINT"
@@ -46,7 +48,7 @@ def seed_balls(eu: DataFrame, seeds: list[int], radius: int = 3):
     from icebug_spark.operators.traversal import multi_source_bfs
 
     spark = eu.sparkSession
-    e = eu.select("src", "dst").localCheckpoint(eager=True)
+    e = checkpoint(eu.select("src", "dst"))
     deg = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     ball = multi_source_bfs(e, seeds, max_hops=radius).withColumnRenamed(
         "source", "seed"
@@ -59,7 +61,7 @@ def seed_balls(eu: DataFrame, seeds: list[int], radius: int = 3):
         .join(b_dst, ["seed", "dst"])
         .select("seed", "src", "dst")
     )
-    return nodes.localCheckpoint(eager=True), edges.localCheckpoint(eager=True)
+    return checkpoint(nodes), checkpoint(edges)
 
 
 def _build_local(edge_pdf, node_pdf):

@@ -39,6 +39,7 @@ from icebug_spark.operators.edgescores import (
     simmelian_overlap_score,
 )
 from icebug_spark.operators.triangles import canonical_edges
+from icebug_spark.plans.iterate import checkpoint
 
 
 def local_similarity_score(edges_undirected: DataFrame) -> DataFrame:
@@ -51,7 +52,7 @@ def local_similarity_score(edges_undirected: DataFrame) -> DataFrame:
     the edge keeps the max of its two endpoint exponents.
     Output: (u, v, ls_score) rounded 6dp.
     """
-    te = edge_triangle_count(edges_undirected).localCheckpoint(eager=True)
+    te = checkpoint(edge_triangle_count(edges_undirected))
     deg = _degrees(te)
     sim = (
         te.join(deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), "u")
@@ -148,7 +149,7 @@ def random_node_edge_score(
     which perturbs late-order statistics only). Score = (rank-1)/m in
     [0,1), matching the reference's numRemoved/m encoding.
     """
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
+    c = checkpoint(canonical_edges(edges_undirected))
     deg = _degrees(c)
     counts = c.agg(
         F.count(F.lit(1)).alias("m"),

@@ -37,6 +37,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def dense_adjacency(
     edges_undirected: DataFrame, max_nodes: int = 4096, weighted: bool = False
@@ -160,10 +162,9 @@ def laplacian_eigenvectors_power(
     wcol = (
         F.col("weight").cast("double") if weighted else F.lit(1.0)
     ).alias("value")
-    eu = (
+    eu = checkpoint(
         edges_undirected.where(F.col("src") != F.col("dst"))
         .select(F.col("src").alias("row"), F.col("dst").alias("col"), wcol)
-        .localCheckpoint(eager=True)
     )
     deg = eu.groupBy("row").agg(F.sum("value").alias("d"))
     sigma = 2.0 * (deg.agg(F.max("d")).collect()[0][0] or 1.0)
@@ -174,10 +175,10 @@ def laplacian_eigenvectors_power(
     else:
         diag = deg.select("row", F.col("d").alias("value"))
         off = eu.select("row", "col", (-F.col("value")).alias("value"))
-    m = off.unionByName(
+    m = checkpoint(off.unionByName(
         diag.select("row", F.col("row").alias("col"), "value")
-    ).localCheckpoint(eager=True)
-    nodes = deg.select(F.col("row").alias("idx")).localCheckpoint(eager=True)
+    ))
+    nodes = checkpoint(deg.select(F.col("row").alias("idx")))
     n = nodes.count()
     spark = edges_undirected.sparkSession
     if n == 0:
@@ -192,13 +193,13 @@ def laplacian_eigenvectors_power(
     found_vals: list[float] = []
     for comp in range(k):
         # deterministic start, orthogonal-ish to previous components
-        x = nodes.select(
+        x = checkpoint(nodes.select(
             "idx",
             (
                 F.pmod(F.xxhash64(F.col("idx"), F.lit(comp)), F.lit(1000003))
                 .cast("double") / 1000003.0 + 0.1
             ).alias("value"),
-        ).localCheckpoint(eager=True)
+        ))
         lam = 0.0
         for it in range(max_iter):
             # deflate: x -= (x·v_j) v_j
@@ -266,7 +267,7 @@ def laplacian_eigenvectors_power(
         nrm = np.sqrt(dot(x, x))
         if nrm > 0:
             x = x.select("idx", (F.col("value") / F.lit(float(nrm))).alias("value"))
-        x = x.localCheckpoint(eager=True)
+        x = checkpoint(x)
         found_vecs.append(x)
         found_vals.append(sigma - lam if reverse else lam)
 
@@ -326,8 +327,6 @@ def spectral_partition(
     import math
 
     from pyspark.sql import Window
-
-    from icebug_spark.plans.iterate import checkpoint
 
     if count < 1:
         raise ValueError("count must be >= 1")

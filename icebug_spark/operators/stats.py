@@ -36,6 +36,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 _DENOM = 1_000_000_007
 
 
@@ -166,9 +168,9 @@ def approx_avg_local_clustering(
     from icebug_spark.plans.zipindex import dense_index
 
     eu = edges_undirected.select("src", "dst").where(F.col("src") != F.col("dst"))
-    eu = eu.union(
+    eu = checkpoint(eu.union(
         eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     spark = eu.sparkSession
 
     adj = eu.groupBy(F.col("src").alias("id")).agg(
@@ -176,7 +178,7 @@ def approx_avg_local_clustering(
     )
     eligible = adj.where(F.size("nbrs") >= 2)
     idx_map = dense_index(eligible, ["id"], out="index", assume_distinct=True)
-    indexed = eligible.join(idx_map, "id").localCheckpoint(eager=True)
+    indexed = checkpoint(eligible.join(idx_map, "id"))
     n_eligible = indexed.count()
     if n_eligible == 0:
         return spark.createDataFrame([(0.0,)], "avg_cc DOUBLE")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def canonical_edges(edges_undirected: DataFrame) -> DataFrame:
     """Undirected edge set as u < v rows (self-loops dropped)."""
@@ -85,12 +87,12 @@ def build_triangle_kernel(
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
     )
     if not small:
-        oriented = oriented.localCheckpoint(eager=True)
+        oriented = checkpoint(oriented)
     adj = oriented.groupBy("x").agg(
         F.sort_array(F.collect_list("y")).alias("nbrs")
     )
     if materialize or not small:
-        adj = adj.localCheckpoint(eager=True)
+        adj = checkpoint(adj)
     return oriented, adj, small
 
 
@@ -114,7 +116,7 @@ def triangles(
     data movement)."""
     if kernel is None:
         c = (
-            canonical_edges(edges_undirected).localCheckpoint(eager=True)
+            checkpoint(canonical_edges(edges_undirected))
             if canon is None
             else canon
         )
@@ -148,7 +150,7 @@ def triangle_count(
     triangle rows)."""
     if kernel is None:
         c = (
-            canonical_edges(edges_undirected).localCheckpoint(eager=True)
+            checkpoint(canonical_edges(edges_undirected))
             if canon is None
             else canon
         )
@@ -209,12 +211,12 @@ def global_clustering_coefficient(edges_undirected: DataFrame) -> DataFrame:
 
     One canonical edge set and ONE triangle enumeration feed all three
     aggregates (total count, per-node counts, wedge count)."""
-    c = canonical_edges(edges_undirected).localCheckpoint(eager=True)
+    c = checkpoint(canonical_edges(edges_undirected))
     deg = _canon_degrees(c)
     wedges = deg.agg(
         F.sum(F.col("deg") * (F.col("deg") - 1) / 2).alias("n_wedges")
     )
-    tri_df = triangles(edges_undirected, canon=c).localCheckpoint(eager=True)
+    tri_df = checkpoint(triangles(edges_undirected, canon=c))
     tri = tri_df.agg(F.count(F.lit(1)).alias("n_triangles"))
     lcc = local_clustering_coefficient(edges_undirected, canon=c, tri=tri_df)
     avg = lcc.agg(F.avg("lcc").alias("avg_lcc"))
@@ -243,7 +245,7 @@ def local_clustering_coefficient(
     optionally the triangle list) can be passed in so callers share one
     materialization across the coefficient family."""
     c = (
-        canonical_edges(edges_undirected).localCheckpoint(eager=True)
+        checkpoint(canonical_edges(edges_undirected))
         if canon is None
         else canon
     )

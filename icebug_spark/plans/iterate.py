@@ -5,7 +5,12 @@ components, BFS frontier, k-core peeling, Borůvka, Luby, suitor matching…)
 are OpenMP loops over in-memory arrays. In Spark each round is a join +
 aggregation; unbounded lineage growth and plan-explosion are the scale
 hazards, so the runner truncates lineage with a checkpoint every few
-rounds. Two checkpoint modes:
+rounds.
+
+This module is the only place that decides how lineage is truncated:
+every eager materialization in the package goes through ``checkpoint``
+or ``pin`` (and their ``*_observe`` variants), so every one of them
+honours the checkpoint mode. Two modes:
 
 - ``localCheckpoint`` (default): cheap, executor-local, right for the
   local test path. No fault tolerance — an executor loss kills the job.
@@ -19,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: default row bound under which node-keyed loop state is broadcast.
@@ -63,8 +68,36 @@ def mirror(state: DataFrame, rows_bound: int) -> DataFrame:
     return F.broadcast(state)
 
 
+#: test/debug hook: when set to a list, ``checkpoint`` and ``pin`` append
+#: each DataFrame's physical-plan string before truncating it. This
+#: exposes the PER-ROUND loop plans (join strategy, Exchange count,
+#: bucketed scans) that eager checkpointing would otherwise discard —
+#: the plan proof that a bucketed edge table elides its Exchange inside
+#: a real algorithm loop lives on this hook (tests/test_bucketing.py).
+PLAN_CAPTURE: list[str] | None = None
+
+
+def _reliable(df: DataFrame) -> bool:
+    """Whether ``df``'s session asks for reliable checkpoints, after
+    recording its physical plan when ``PLAN_CAPTURE`` is on — the one
+    place either is read."""
+    if PLAN_CAPTURE is not None:
+        PLAN_CAPTURE.append(
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+    flag = df.sparkSession.conf.get("spark.icebug.reliableCheckpoint", "false")
+    return flag.lower() == "true"
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager lineage truncation honouring the reliable-checkpoint flag."""
+    if _reliable(df):
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def pin(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint with the inherited plan statistics RESET to
+    """Eager checkpoint with the inherited plan statistics RESET to
     fresh leaf stats — the stage-boundary truncation for SOLVER loops
     whose stages join a vector against itself (directly or through an
     MxV that references it twice).
@@ -84,7 +117,7 @@ def pin(df: DataFrame) -> DataFrame:
     vector joins do); plain loop states that rely on inherited stats for
     auto-broadcast should keep using ``checkpoint``."""
     spark = df.sparkSession
-    jdf = df._jdf.localCheckpoint(True)
+    jdf = df._jdf.checkpoint(True) if _reliable(df) else df._jdf.localCheckpoint(True)
     try:
         # fresh LogicalRDD over the SAME materialized InternalRow
         # partitions — zero conversion (private[sql] is public at the
@@ -97,31 +130,6 @@ def pin(df: DataFrame) -> DataFrame:
         # InternalRow<->Row conversion per partition, still distributed)
         jnew = spark._jsparkSession.createDataFrame(jdf.toJavaRDD(), jdf.schema())
     return DataFrame(jnew, spark)
-
-
-#: test/debug hook: when set to a list, ``checkpoint`` appends each
-#: DataFrame's physical-plan string before truncating it. This exposes
-#: the PER-ROUND loop plans (join strategy, Exchange count, bucketed
-#: scans) that eager checkpointing would otherwise discard — the plan
-#: proof that a bucketed edge table elides its Exchange inside a real
-#: algorithm loop lives on this hook (tests/test_bucketing.py).
-PLAN_CAPTURE: list[str] | None = None
-
-
-def checkpoint(df: DataFrame) -> DataFrame:
-    """Eager lineage truncation honouring the reliable-checkpoint flag."""
-    if PLAN_CAPTURE is not None:
-        PLAN_CAPTURE.append(
-            df._jdf.queryExecution().executedPlan().toString()
-        )
-    spark = df.sparkSession
-    reliable = (
-        spark.conf.get("spark.icebug.reliableCheckpoint", "false").lower()
-        == "true"
-    )
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def checkpoint_observe(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
@@ -154,34 +162,16 @@ def checkpoint_observe(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
     aggregation (see ``spectrum.laplacian_eigenvectors_power`` and the
     pagerank ``eplus`` diagonal-carry for the pattern), or ``pin`` to
     reset the stats."""
-    from pyspark.sql import Observation
-
-    if PLAN_CAPTURE is not None:
-        PLAN_CAPTURE.append(
-            df._jdf.queryExecution().executedPlan().toString()
-        )
-    spark = df.sparkSession
     obs = Observation()
-    observed = df.observe(obs, *aggs)
-    reliable = (
-        spark.conf.get("spark.icebug.reliableCheckpoint", "false").lower()
-        == "true"
-    )
-    if reliable:
-        cp = observed.checkpoint(eager=True)
-    else:
-        cp = observed.localCheckpoint(eager=True)
-    return cp, obs.get
+    return checkpoint(df.observe(obs, *aggs)), obs.get
 
 
 def pin_observe(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
-    """``pin`` (stats-resetting eager localCheckpoint) with aggregates
+    """``pin`` (stats-resetting eager checkpoint) with aggregates
     observed during the pinning action — the solver-loop variant of
     ``checkpoint_observe``: one Spark job yields both the materialized
     stage state and every scalar the driver needs to build the next
     stage's plan (α/β literals, stopping residuals)."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     return pin(df.observe(obs, *aggs)), obs.get
 
@@ -190,39 +180,32 @@ def iterate(
     state: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
     max_iter: int,
-    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
     checkpoint_every: int = 2,
     observe: Callable[[], list] | None = None,
     observed_converged: Callable[[dict], bool] | None = None,
 ) -> DataFrame:
-    """Run ``state = step(state, i)`` up to ``max_iter`` times.
+    """Run ``state = step(state, i)`` up to ``max_iter`` times,
+    checkpointing every ``checkpoint_every`` rounds. Checkpointing is
+    eager so each round's work is done once and the plan stays O(1) deep.
 
-    ``converged(old, new) -> bool`` is evaluated after each step (it may
-    trigger Spark actions; for cheap convergence checks aggregate a single
-    'changed' count). Checkpointing is eager so each round's work is done
-    once and the plan stays O(1) deep.
-
-    ``observe`` + ``observed_converged``: the fused alternative — a
-    thunk returning aggregate Columns computed DURING each checkpoint's
-    materializing action (``checkpoint_observe``), and a predicate over
-    the resulting metrics dict. One Spark job per checkpoint round
-    instead of checkpoint + convergence action; only evaluated at
-    checkpoint boundaries (between boundaries the state is lazy, so a
-    metric there would re-execute the plan).
+    ``observe`` + ``observed_converged``: a thunk returning aggregate
+    Columns computed DURING each checkpoint's materializing action
+    (``checkpoint_observe``), and a predicate over the resulting metrics
+    dict that stops the loop. One Spark job per checkpoint round instead
+    of checkpoint + convergence action; only evaluated at checkpoint
+    boundaries (between boundaries the state is lazy, so a metric there
+    would re-execute the plan).
     """
     state = checkpoint(state)
     for i in range(max_iter):
-        new = step(state, i)
+        state = step(state, i)
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             if observe is not None:
-                new, metrics = checkpoint_observe(new, *observe())
+                state, metrics = checkpoint_observe(state, *observe())
                 if observed_converged is not None and observed_converged(
                     metrics
                 ):
-                    return new
+                    return state
             else:
-                new = checkpoint(new)
-        if converged is not None and converged(state, new):
-            return new
-        state = new
+                state = checkpoint(state)
     return state

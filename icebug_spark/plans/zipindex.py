@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def running_sums(
     values: DataFrame,
@@ -33,12 +35,10 @@ def running_sums(
     order_exprs = [
         F.col(c).desc() if descending else F.col(c).asc() for c in order_cols
     ]
-    v = (
-        values.repartitionByRange(*order_exprs)
-        # materialize so spark_partition_id is stable across the totals
-        # pass and the window pass (range boundaries come from a sample)
-        .localCheckpoint(eager=True)
-        .withColumn("__pid", F.spark_partition_id())
+    # materialize so spark_partition_id is stable across the totals
+    # pass and the window pass (range boundaries come from a sample)
+    v = checkpoint(values.repartitionByRange(*order_exprs)).withColumn(
+        "__pid", F.spark_partition_id()
     )
     spark = v.sparkSession
     per = {
@@ -80,12 +80,10 @@ def dense_index(
     v = values.select(*cols)
     if not assume_distinct:
         v = v.distinct()
-    v = (
-        v.repartitionByRange(*[F.col(c) for c in cols])
-        # materialize so spark_partition_id is stable across the count
-        # pass and the rank pass (range boundaries come from a sample)
-        .localCheckpoint(eager=True)
-        .withColumn("__pid", F.spark_partition_id())
+    # materialize so spark_partition_id is stable across the count
+    # pass and the rank pass (range boundaries come from a sample)
+    v = checkpoint(v.repartitionByRange(*[F.col(c) for c in cols])).withColumn(
+        "__pid", F.spark_partition_id()
     )
     spark = v.sparkSession
     counts = sorted(

@@ -34,6 +34,7 @@ from icebug_spark.operators.flow import edmonds_karp
 from icebug_spark.operators.randomization import edge_switching
 from icebug_spark.operators.reachability import reachable_nodes
 from icebug_spark.operators.triangles import global_clustering_coefficient
+from icebug_spark.plans.iterate import checkpoint
 
 _ADJN_SQL = f"SELECT src AS node, dst AS nbr FROM ({EU_SQL}) WHERE src <> dst"
 _CE_SQL = f"SELECT src AS u, dst AS v FROM ({EU_SQL}) WHERE src < dst"
@@ -242,9 +243,7 @@ def q69(spark: SparkSession, sf: str) -> DataFrame:
         .collect()
     )
     s, t = hubs[0]["src"], sinks[0]["dst"]
-    cap = ew.select("src", "dst", F.col("weight").alias("capacity")).localCheckpoint(
-        eager=True
-    )
+    cap = checkpoint(ew.select("src", "dst", F.col("weight").alias("capacity")))
     res = edmonds_karp(cap, s, t)
     # MIN-CUT CERTIFICATE: by max-flow/min-cut duality the computed flow
     # is optimal iff the capacity of the cut (source_set -> complement) in
@@ -300,15 +299,12 @@ def q70(spark: SparkSession, sf: str) -> DataFrame:
     degree, and the uncapped sf0.01 graph (avg degree ~80) blows the
     applyInPandas shuffle; the cap keeps every ego subgraph bounded while
     exercising the identical code path (mirrored in the oracle)."""
-    eu = (
+    eu = checkpoint(
         _eu(spark, sf)
         .where((F.col("src") < _Q70_CAP) & (F.col("dst") < _Q70_CAP))
-        .localCheckpoint(eager=True)
     )
-    mc = maximal_cliques(eu).localCheckpoint(eager=True)
-    cid = mc.withColumn("cid", F.monotonically_increasing_id()).localCheckpoint(
-        eager=True
-    )
+    mc = checkpoint(maximal_cliques(eu))
+    cid = checkpoint(mc.withColumn("cid", F.monotonically_increasing_id()))
     memb = cid.select("cid", F.explode("members").alias("id"))
     pairs = (
         memb.alias("a")
@@ -328,7 +324,7 @@ def q70(spark: SparkSession, sf: str) -> DataFrame:
     )
     # the certificate must never be vacuous: if the hash sample happens to
     # select nothing (small clique census), check every clique instead —
-    # cid is localCheckpointed and tiny, so the count is free.
+    # cid is checkpointed and tiny, so the count is free.
     if samp.limit(1).count() == 0:
         samp = cid
     smemb = samp.select("cid", F.explode("members").alias("id"))
@@ -375,10 +371,9 @@ def q114(spark: SparkSession, sf: str) -> DataFrame:
 
     from icebug_spark.operators.numerics3 import lamg_solve
 
-    eu = (
+    eu = checkpoint(
         _eu(spark, sf)
         .where((F.col("src") < 60) & (F.col("dst") < 60))
-        .localCheckpoint(eager=True)
     )
     # ONE collect feeds hubs, the node list, AND the closed-form truth
     # below — the certificate instance is 60 nodes by construction, and

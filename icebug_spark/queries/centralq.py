@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from icebug_spark.catalog import E_SQL, EU_SQL, derived_edges, symmetrize, derived_edges_undirected
 from icebug_spark.operators import centrality2, distances
+from icebug_spark.plans.iterate import checkpoint
 
 _KATZ_ALPHA = 0.05
 _KATZ_ITER = 8
@@ -291,9 +292,7 @@ def q51(spark: SparkSession, sf: str) -> DataFrame:
     all distances finite and non-negative, and symmetric — ad(u,v) must
     equal ad(v,u) exactly. The arc count is SQL-computable."""
     eu = derived_edges_undirected(spark, sf)
-    ad = distances.algebraic_distance(eu, n_systems=2, rounds=3).localCheckpoint(
-        eager=True
-    )
+    ad = checkpoint(distances.algebraic_distance(eu, n_systems=2, rounds=3))
     sym_mismatch = (
         ad.alias("a")
         .join(
@@ -341,14 +340,13 @@ def q97(spark: SparkSession, sf: str) -> DataFrame:
     from icebug_spark.queries.algebraicq import FULLSCALE
 
     id_cap, rounds = (120, 4) if FULLSCALE else (80, 3)
-    eu = (
+    eu = checkpoint(
         derived_edges_undirected(spark, sf)
         .where((F.col("src") < id_cap) & (F.col("dst") < id_cap))
-        .localCheckpoint(eager=True)
     )
-    kb = kadabra_betweenness(
+    kb = checkpoint(kadabra_betweenness(
         eu, err=0.1, delta=0.1, max_rounds=rounds
-    ).localCheckpoint(eager=True)
+    ))
     ids = [r[0] for r in eu.select(F.col("src").alias("id")).distinct().collect()]
     n = len(ids)
     exact = betweenness_sampled(eu, ids, max_hops=12).select(
@@ -389,15 +387,14 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     budget, (d) the group is nonempty and within size k."""
     from icebug_spark.operators.centrality4 import approx_group_betweenness
 
-    eu = (
+    eu = checkpoint(
         derived_edges_undirected(spark, sf)
         .where((F.col("src") < 150) & (F.col("dst") < 150))
-        .localCheckpoint(eager=True)
     )
     k, max_samples = 4, 80
-    g = approx_group_betweenness(
+    g = checkpoint(approx_group_betweenness(
         eu, k=k, eps=0.1, delta=0.1, max_samples=max_samples
-    ).localCheckpoint(eager=True)
+    ))
     nxt = g.select(
         "round", F.col("covered_paths").alias("gain")
     ).withColumnRenamed("round", "r2")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from icebug_spark.catalog import EU_SQL, derived_edges, derived_edges_undirected
 from icebug_spark.operators import community3
+from icebug_spark.plans.iterate import checkpoint
 
 
 def _eu(spark: SparkSession, sf: str) -> DataFrame:
@@ -32,7 +33,7 @@ def q98(spark: SparkSession, sf: str) -> DataFrame:
     """Δmodularity edge score on the unweighted undirected derived graph
     (reference scoring/ModularityScoring.hpp:60-90); top-500 arcs by
     score for a bounded, fully-ordered result."""
-    eu = _eu(spark, sf).localCheckpoint(eager=True)
+    eu = checkpoint(_eu(spark, sf))
     scored = community3.modularity_scoring(eu)
     return (
         scored.select("src", "dst", F.round("score", 9).alias("score"))
@@ -81,7 +82,7 @@ def q99(spark: SparkSession, sf: str) -> DataFrame:
     between two deterministic hash covers of the derived graph's nodes —
     full value oracle (reference community/OverlappingNMIDistance.cpp)."""
     eu = _eu(spark, sf)
-    nodes = _nodes(eu).localCheckpoint(eager=True)
+    nodes = checkpoint(_nodes(eu))
     n = nodes.count()
     cx, cy = _covers(nodes)
     return community3.overlapping_nmi_distance(cx, cy, n, normalization="max")
@@ -150,7 +151,7 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
     the sampled estimate equals the exact Rand distance between the id%5
     and id%4 hash partitions — full value oracle."""
     eu = _eu(spark, sf)
-    nodes = _nodes(eu).where(F.col("id") < 60).localCheckpoint(eager=True)
+    nodes = checkpoint(_nodes(eu).where(F.col("id") < 60))
     pa = nodes.select("id", (F.col("id") % 5).alias("subset"))
     pb = nodes.select("id", (F.col("id") % 4).alias("subset"))
     return community3.node_structural_rand_sampled(pa, pb, max_samples=5200)
@@ -169,7 +170,7 @@ def q101(spark: SparkSession, sf: str) -> DataFrame:
     """SampledGraphStructuralRandMeasure in the exact regime (max_samples
     >= |edges|): Rand distance over every connected pair src<dst between
     the id%6 and id%4 partitions — full value oracle."""
-    eu = _eu(spark, sf).localCheckpoint(eager=True)
+    eu = checkpoint(_eu(spark, sf))
     nodes = _nodes(eu)
     pa = nodes.select("id", (F.col("id") % 6).alias("subset"))
     pb = nodes.select("id", (F.col("id") % 4).alias("subset"))
@@ -195,7 +196,7 @@ def q102(spark: SparkSession, sf: str) -> DataFrame:
     (id%7), modeling node deletions in a dynamic graph. Full value
     oracle."""
     eu = _eu(spark, sf)
-    nodes = _nodes(eu).localCheckpoint(eager=True)
+    nodes = checkpoint(_nodes(eu))
     pa = nodes.select("id", (F.col("id") % 10).alias("subset"))
     pb = nodes.where(F.col("id") < 8000).select(
         "id", (F.col("id") % 7).alias("subset")
@@ -229,9 +230,9 @@ def q103(spark: SparkSession, sf: str) -> DataFrame:
     partition — every node exactly one label — with labels drawn from
     node ids, and at least one community. Semantics golden-tested in
     tests/test_community3.py."""
-    eu = _eu(spark, sf).localCheckpoint(eager=True)
-    part = community3.lp_degree_ordered(eu, max_iter=6, degree_buckets=4
-                                        ).localCheckpoint(eager=True)
+    eu = checkpoint(_eu(spark, sf))
+    part = checkpoint(community3.lp_degree_ordered(eu, max_iter=6, degree_buckets=4
+                                        ))
     n_nodes = eu.select(F.col("src").alias("id")).distinct().count()
     node_ids = eu.select(F.col("src").alias("subset")).distinct()
     bad_labels = part.select("subset").distinct().join(
@@ -257,15 +258,13 @@ def q104(spark: SparkSession, sf: str) -> DataFrame:
     score→match→coarsen levels: n_nodes is exact (SQL-computable), the
     partition is valid, agglomeration is genuine (fewer communities than
     nodes), and no community exceeds the node count."""
-    eu = _eu(spark, sf).localCheckpoint(eager=True)
+    eu = checkpoint(_eu(spark, sf))
     # 2 levels prove genuine agglomeration at half the match/coarsen cost
     # match_rounds=3: a partial local-max matching agglomerates correctly
     # (operator docstring) and the certificate below is round-count
     # independent — each extra round is pure driver-job floor on this
     # modularity-structureless graph (~53 positive pairs at sf0.01)
-    part = community3.parallel_agglomerative(eu, max_levels=2, match_rounds=3).localCheckpoint(
-        eager=True
-    )
+    part = checkpoint(community3.parallel_agglomerative(eu, max_levels=2, match_rounds=3))
     n_nodes = eu.select(F.col("src").alias("id")).distinct().count()
     sizes = part.groupBy("subset").agg(F.count(F.lit(1)).alias("size"))
     return sizes.agg(
@@ -291,10 +290,8 @@ def q105(spark: SparkSession, sf: str) -> DataFrame:
     clusters (max-flow values have no SQL twin; semantics golden-tested;
     n_nodes is exact and SQL-computable)."""
     eu = _eu(spark, sf)
-    small = eu.where((F.col("src") < 60) & (F.col("dst") < 60)).localCheckpoint(
-        eager=True
-    )
-    part = community3.cut_clustering(small, alpha=0.3).localCheckpoint(eager=True)
+    small = checkpoint(eu.where((F.col("src") < 60) & (F.col("dst") < 60)))
+    part = checkpoint(community3.cut_clustering(small, alpha=0.3))
     n_nodes = small.select(F.col("src").alias("id")).distinct().count()
     sizes = part.groupBy("subset").agg(F.count(F.lit(1)).alias("size"))
     return sizes.agg(

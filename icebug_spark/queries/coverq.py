@@ -34,6 +34,7 @@ from icebug_spark.operators.centrality import harmonic_closeness_sampled
 from icebug_spark.operators.distances import neighborhood_function
 from icebug_spark.operators.reachability import all_simple_paths
 from icebug_spark.operators.traversal import bfs_distances
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.streaming.dynamic2 import affected_nodes, dyn_bfs_update
 
 #: disjoint-id offset for the bipartite-by-construction DAG variants
@@ -324,7 +325,7 @@ FROM d GROUP BY dist ORDER BY dist
 # isn't SQL-reproducible, so the oracle pins the invariants.
 def q126(spark: SparkSession, sf: str) -> DataFrame:
     ew = derived_weighted_edges(spark, sf)
-    m = matching.b_suitor_matching(ew, b=1).localCheckpoint(eager=True)
+    m = checkpoint(matching.b_suitor_matching(ew, b=1))
     both = m.select(F.col("u").alias("id")).union(m.select(F.col("v").alias("id")))
     overmatched = (
         both.groupBy("id").agg(F.count(F.lit(1)).alias("k")).where(F.col("k") > 1).count()
@@ -354,7 +355,7 @@ Q126_SQL = (
 # (no unmatched edge whose BOTH endpoints still have spare capacity).
 def q127(spark: SparkSession, sf: str) -> DataFrame:
     ew = derived_weighted_edges(spark, sf)
-    m = matching.b_suitor_matching(ew, b=2).localCheckpoint(eager=True)
+    m = checkpoint(matching.b_suitor_matching(ew, b=2))
     both = m.select(F.col("u").alias("id")).union(m.select(F.col("v").alias("id")))
     counts = both.groupBy("id").agg(F.count(F.lit(1)).alias("k"))
     overmatched = counts.where(F.col("k") > 2).count()
@@ -394,7 +395,7 @@ Q127_SQL = (
 # pairs.
 def q128(spark: SparkSession, sf: str) -> DataFrame:
     ew = derived_weighted_edges(spark, sf)
-    m = matching.local_max_matching(ew).localCheckpoint(eager=True)
+    m = checkpoint(matching.local_max_matching(ew))
     coarse = matching.matching_coarsening(ew, m)
     total_fine = ew.agg(F.sum("weight")).collect()[0][0]
     total_coarse = coarse.agg(F.sum("weight")).collect()[0][0] or 0.0
@@ -450,14 +451,13 @@ _Q129_REFINES = 2 if FULLSCALE else 1
 
 
 def q129(spark: SparkSession, sf: str) -> DataFrame:
-    eu = (
+    eu = checkpoint(
         _eu(spark, sf)
         .where((F.col("src") < _Q129_CAP) & (F.col("dst") < _Q129_CAP))
-        .localCheckpoint(eager=True)
     )
-    part = community2.leiden(
+    part = checkpoint(community2.leiden(
         eu, levels=2, move_rounds=_Q129_MOVES, refine_rounds=_Q129_REFINES
-    ).localCheckpoint(eager=True)
+    ))
     # certificate stats fused: ONE aggregate over part (rows/ids/comms),
     # ONE over the degree table (n_nodes rides the same agg as the
     # singleton-modularity terms) — was five separate count jobs
@@ -618,14 +618,13 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
     # itself) are excluded: Tarjan's adjacency drops self-loops, so the
     # SQL twin must never count one as a forest edge
     eu = _eu(spark, sf).where(F.col("src") != F.col("dst"))
-    forest = (
+    forest = checkpoint(
         eu.groupBy("src")
         .agg(F.min("dst").alias("dst"))
         .select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_edges = forest.count()
     n_bridges = bridges(forest).count()

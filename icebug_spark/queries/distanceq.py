@@ -17,6 +17,7 @@ from icebug_spark.operators.distances2 import (
     landmark_labels,
     spsp,
 )
+from icebug_spark.plans.iterate import checkpoint
 
 # shared BFS-distance recursive CTE over EU (bounded hops)
 _EU_INLINE = (
@@ -93,8 +94,8 @@ _ANF_H = 6
 
 
 def q82(spark: SparkSession, sf: str) -> DataFrame:
-    nf = anf_sketch_iteration(_eu(spark, sf), k=32, max_h=_ANF_H, seed=42
-                              ).localCheckpoint(eager=True)
+    nf = checkpoint(anf_sketch_iteration(_eu(spark, sf), k=32, max_h=_ANF_H, seed=42
+                              ))
     # h−1 self-join instead of an unpartitioned lag window: same
     # monotonicity check, hop-bounded rows, zero WindowExec warnings in
     # sweep logs (a REAL single-partition window would stand out)
@@ -115,9 +116,7 @@ Q82_SQL = f"SELECT {_ANF_H + 1} AS n_hops, TRUE AS all_positive, TRUE AS monoton
 
 
 def q83(spark: SparkSession, sf: str) -> DataFrame:
-    hp = hop_plot(_eu(spark, sf), k=32, max_h=_ANF_H, seed=42).localCheckpoint(
-        eager=True
-    )
+    hp = checkpoint(hop_plot(_eu(spark, sf), k=32, max_h=_ANF_H, seed=42))
     # h−1 self-join instead of an unpartitioned lag window (see q82)
     prev = hp.select((F.col("h") + 1).alias("h"), F.col("fraction").alias("pf"))
     flags = hp.join(prev, "h", "left").select(

@@ -24,6 +24,7 @@ from icebug_spark.catalog import (
     derived_edges_undirected,
     derived_weighted_edges,
 )
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.queries.pointq import EWU_SQL, _bf_unrolled_sql, _ewu
 
 _KATZ_ALPHA = 0.001  # alpha * lambda_max < 1 on the symmetrized graph
@@ -109,7 +110,7 @@ def q135(spark: SparkSession, sf: str) -> DataFrame:
     removed = ((s % 19) == 0) & ~((s % 23) == 0)
     old = ewu.where(~added)
     d0 = sssp_weighted(old, 1)
-    final = ewu.where(~removed).localCheckpoint(eager=True)
+    final = checkpoint(ewu.where(~removed))
     batch = (
         ewu.where(added)
         .select(
@@ -248,7 +249,7 @@ def q138(spark: SparkSession, sf: str) -> DataFrame:
     big = (row["tot"] or 1.0) + 1.0
     dyn = DynamicBSuitorMatcher(ew, b=1)
     dyn.insert_edge(int(lo), int(hi), float(big))
-    mid = dyn.matching.localCheckpoint(eager=True)
+    mid = checkpoint(dyn.matching)
     dominating_matched = (
         mid.where(
             (F.least("u", "v") == int(lo)) & (F.greatest("u", "v") == int(hi))
@@ -256,7 +257,7 @@ def q138(spark: SparkSession, sf: str) -> DataFrame:
         == 1
     )
     dyn.remove_edge(int(lo), int(hi))
-    m = dyn.matching.localCheckpoint(eager=True)
+    m = checkpoint(dyn.matching)
     # certificate stats fused into TWO aggregates (was four counts):
     # per-node multiplicities + row count in one, edge-existence +
     # dominating-pair presence in one left-join aggregate
@@ -320,9 +321,7 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
     from icebug_spark.operators.centrality4 import k_path_centrality
 
     eu = _eu(spark, sf)
-    kp = k_path_centrality(eu, k=4, walks_per_node=4, seed=11).localCheckpoint(
-        eager=True
-    )
+    kp = checkpoint(k_path_centrality(eu, k=4, walks_per_node=4, seed=11))
     row = kp.agg(
         F.min("kpath").alias("mn"),
         F.max("kpath").alias("mx"),

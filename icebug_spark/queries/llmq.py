@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from icebug_spark.catalog import table
 from icebug_spark.llm import dedup, mixing, multimodal, similarity, textstats, tokenize
+from icebug_spark.plans.iterate import checkpoint
 
 
 def dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
@@ -213,14 +214,14 @@ def minhash_lsh_q(spark: SparkSession, sf: str) -> DataFrame:
     construction — a broken banding/verify stage emits a pair the exact
     join refutes), and all values clear the threshold."""
     docs = table(spark, sf, "documents")
-    got = dedup.minhash_lsh_duplicates(
+    got = checkpoint(dedup.minhash_lsh_duplicates(
         docs, n=3, num_hashes=16, bands=4, threshold=0.2
-    ).localCheckpoint(eager=True)
+    ))
     # max_doc_freq=None: the certificate's ground truth must be the fully
     # exact pair set, not the capped at-scale default
-    exact = dedup.ngram_jaccard_pairs(
+    exact = checkpoint(dedup.ngram_jaccard_pairs(
         docs, n=3, threshold=0.2, max_doc_freq=None
-    ).localCheckpoint(eager=True)
+    ))
     joined = got.join(
         exact.withColumnRenamed("jaccard", "exact_j"), ["doc_a", "doc_b"], "left"
     )
@@ -244,7 +245,7 @@ def simhash_q(spark: SparkSession, sf: str) -> DataFrame:
     signature — bit-majority over identical token streams must agree; a
     broken vote/packing flips the boolean."""
     docs = table(spark, sf, "documents")
-    sigs = dedup.simhash(docs).localCheckpoint(eager=True)
+    sigs = checkpoint(dedup.simhash(docs))
     fp = docs.select(
         "doc_id",
         F.md5(
@@ -275,10 +276,8 @@ def ann_candidates_q(spark: SparkSession, sf: str) -> DataFrame:
     canonical (a < b). Bucket membership itself hashes with xxhash64 and
     is not SQL-expressible."""
     emb = table(spark, sf, "embeddings")
-    got = similarity.ann_candidates(emb, planes=12, min_cosine=0.3).localCheckpoint(
-        eager=True
-    )
-    exact = _exact_cosine_pairs(emb, 0.3).localCheckpoint(eager=True)
+    got = checkpoint(similarity.ann_candidates(emb, planes=12, min_cosine=0.3))
+    exact = checkpoint(_exact_cosine_pairs(emb, 0.3))
     joined = got.join(
         exact.withColumnRenamed("cosine", "exact_c"), ["vec_a", "vec_b"], "left"
     )
@@ -491,10 +490,10 @@ def near_dup_embeddings_q(spark: SparkSession, sf: str) -> DataFrame:
     embeddings have no true dups (max pairwise cosine ~0.43); 0.3 keeps
     the high-similarity tail non-empty."""
     emb = table(spark, sf, "embeddings")
-    got = similarity.embedding_near_duplicates(
+    got = checkpoint(similarity.embedding_near_duplicates(
         emb, min_cosine=0.3, planes=8
-    ).localCheckpoint(eager=True)
-    exact = _exact_cosine_pairs(emb, 0.3).localCheckpoint(eager=True)
+    ))
+    exact = checkpoint(_exact_cosine_pairs(emb, 0.3))
     joined = got.join(
         exact.withColumnRenamed("cosine", "exact_c"), ["vec_a", "vec_b"], "left"
     )

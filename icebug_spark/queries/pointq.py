@@ -26,6 +26,7 @@ from icebug_spark.catalog import (
 )
 from icebug_spark.operators import pointtopoint as pp
 from icebug_spark.operators.traversal import bfs_distances
+from icebug_spark.plans.iterate import checkpoint
 
 _SRC = 1
 _DST = 42
@@ -46,11 +47,10 @@ _BF_ROUNDS = 14  # ≥ max edge count of any weighted shortest path here
 def _ewu(spark: SparkSession, sf: str) -> DataFrame:
     ew = derived_weighted_edges(spark, sf)
     rev = ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    return (
+    return checkpoint(
         ew.union(rev)
         .groupBy("src", "dst")
         .agg(F.min("weight").alias("weight"))
-        .localCheckpoint(eager=True)
     )
 
 

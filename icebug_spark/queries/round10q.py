@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icebug_spark.catalog import derived_edges_undirected
+from icebug_spark.plans.iterate import checkpoint
 
 
 _SUB_EU_CACHE: dict[tuple[str, str], DataFrame] = {}
@@ -30,14 +31,13 @@ def _sub_eu(spark: SparkSession, sf: str) -> DataFrame:
     # q165 build it once between them
     key = (spark.sparkContext.applicationId, sf)
     if key not in _SUB_EU_CACHE:
-        _SUB_EU_CACHE[key] = (
+        _SUB_EU_CACHE[key] = checkpoint(
             derived_edges_undirected(spark, sf)
             .where(
                 (F.col("src") % 5 == 0)
                 & (F.col("dst") % 5 == 0)
                 & (F.col("src") != F.col("dst"))
             )
-            .localCheckpoint(eager=True)
         )
     return _SUB_EU_CACHE[key]
 
@@ -181,7 +181,7 @@ def q165(spark: SparkSession, sf: str) -> DataFrame:
     ):
         # each score table is computed ONCE: the ratio search, the kept
         # count, and the brute-force histogram all read the checkpoint
-        scored = score_fn(eu).localCheckpoint(eager=True)
+        scored = checkpoint(score_fn(eu))
         kept = sparsify_to_size(
             scored, col, _RATIO, above=True, int_domain=domain
         ).count()

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icebug_spark.catalog import E_SQL, EU_SQL, derived_edges_undirected
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.queries.edgescoreq import _TRI_SQL
 
 
@@ -108,9 +109,9 @@ def q155(spark: SparkSession, sf: str) -> DataFrame:
     seed_group = [
         int(r["id"]) for r in _nodes(eu).orderBy("id").limit(_GC_K).collect()
     ]
-    res = group_closeness_local_search(
+    res = checkpoint(group_closeness_local_search(
         eu, seed_group, candidate_factor=3, max_hops=8
-    ).localCheckpoint(eager=True)
+    ))
     # seed-group farness, computed independently of the operator (same
     # hop bound); the LocalSwaps variant shares this kernel verbatim and
     # is covered by its golden (tests/test_round9_ops.py)
@@ -211,7 +212,7 @@ def q157(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy("id")
         .limit(10)
     )
-    ball = (
+    ball = checkpoint(
         d1.union(
             eu.join(d1.withColumnRenamed("id", "src"), "src")
             .where(F.col("dst") % 13 < 3)
@@ -219,14 +220,13 @@ def q157(spark: SparkSession, sf: str) -> DataFrame:
         )
         .union(spark.createDataFrame([(int(root),)], "id BIGINT"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sub = (
         eu.join(ball.withColumnRenamed("id", "src"), "src")
         .join(ball.withColumnRenamed("id", "dst"), "dst")
         .select("src", "dst")
     )
-    scores = approx_spanning_edge(sub, eps=0.35).localCheckpoint(eager=True)
+    scores = checkpoint(approx_spanning_edge(sub, eps=0.35))
     # node count of the graph the sampler actually walked (canonical
     # non-loop edges' endpoints) — every UST has exactly n_c - 1 edges
     n_c = (
@@ -305,7 +305,7 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
     ids = _nodes(eu).agg(F.min("id"), F.max("id")).collect()[0]
     dyn.insert_edge(int(ids[0]), int(ids[1]))
 
-    pairs = dyn.pairs.select("pair", "s", "t").localCheckpoint(eager=True)
+    pairs = checkpoint(dyn.pairs.select("pair", "s", "t"))
     sources = sorted(int(r["s"]) for r in pairs.select("s").distinct().collect())
     d = multi_source_bfs(dyn.eu, sources, max_hops=dyn.vd + 2).select(
         F.col("source").alias("s"), F.col("id").alias("t"), "dist"
@@ -502,7 +502,7 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
         out = dense.select(F.lit("dense").alias("fmt"), "id", "subset").unionByName(
             pairs.select(F.lit("pairs").alias("fmt"), "id", "subset")
         )
-        return out.orderBy("fmt", "id").localCheckpoint(eager=True)
+        return checkpoint(out.orderBy("fmt", "id"))
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -534,8 +534,8 @@ def q163(spark: SparkSession, sf: str) -> DataFrame:
         spark, n=56, avg_degree=4.0, move_each_step=0.7, move_distance=0.4,
         seed=17, bands=8
     )
-    e0 = gen.initial_edges().localCheckpoint(eager=True)
-    ev = gen.generate(1).localCheckpoint(eager=True)
+    e0 = checkpoint(gen.initial_edges())
+    ev = checkpoint(gen.generate(1))
     has_removals = ev.where(F.col("type") == "EDGE_REMOVAL").count() > 0
 
     def sym(e):
@@ -546,7 +546,7 @@ def q163(spark: SparkSession, sf: str) -> DataFrame:
     comp0 = connected_components(sym(e0))
     batch = ev.where(F.col("type") != "TIME_STEP").select("type", "u", "v")
     gen_final = gen.edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    comp = dyn_cc_update(comp0, sym(gen_final), batch).localCheckpoint(eager=True)
+    comp = checkpoint(dyn_cc_update(comp0, sym(gen_final), batch))
     static = connected_components(sym(gen_final))
     cdiff = comp.withColumn("l", F.lit(1)).join(
         static.withColumn("r", F.lit(1)), ["id", "component"], "full"

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from icebug_spark.catalog import EU_SQL, derived_edges, derived_edges_undirected
 from icebug_spark.operators.embedding import random_walks
 from icebug_spark.operators.scd import pagerank_nibble, set_conductance
+from icebug_spark.plans.iterate import checkpoint
 
 _SEEDS = [1, 2, 3, 4, 5]
 
@@ -20,12 +21,8 @@ def q62(spark: SparkSession, sf: str) -> DataFrame:
     seed, is non-empty, and its sweep-cut conductance is a valid ratio in
     (0, 1]. A broken push/sweep flips a boolean; the oracle expects one
     all-TRUE row per seed."""
-    eu = derived_edges_undirected(spark, sf).localCheckpoint(
-        eager=True
-    )
-    members = pagerank_nibble(eu, _SEEDS, alpha=0.15, eps=1e-4).localCheckpoint(
-        eager=True
-    )
+    eu = checkpoint(derived_edges_undirected(spark, sf))
+    members = checkpoint(pagerank_nibble(eu, _SEEDS, alpha=0.15, eps=1e-4))
     sizes = members.groupBy("seed").agg(
         F.count(F.lit(1)).alias("size"),
         F.max((F.col("id") == F.col("seed")).cast("int")).alias("has_seed"),
@@ -59,13 +56,11 @@ def q63(spark: SparkSession, sf: str) -> DataFrame:
     SQL-expressible; a broken bias/step would emit an invalid transition
     and flip the boolean."""
     eu = derived_edges_undirected(spark, sf)
-    small = eu.where((F.col("src") < 500) & (F.col("dst") < 500)).localCheckpoint(
-        eager=True
-    )
+    small = checkpoint(eu.where((F.col("src") < 500) & (F.col("dst") < 500)))
     # walk_length 6: the certificate validates EVERY transition either
     # way; two fewer hop-join rounds keeps the sweep budget down
-    walks = random_walks(small, walk_length=6, walks_per_node=1, seed=42
-                         ).localCheckpoint(eager=True)
+    walks = checkpoint(random_walks(small, walk_length=6, walks_per_node=1, seed=42
+                         ))
     hops = walks.select(
         F.posexplode(
             F.arrays_zip(
@@ -102,9 +97,7 @@ def _restricted_eu(spark: SparkSession, sf: str, cap: int = 400) -> DataFrame:
     regime they are built for, not a scalability workaround: the batched
     ball extraction itself is one BFS regardless of graph size)."""
     eu = derived_edges_undirected(spark, sf)
-    return eu.where((F.col("src") < cap) & (F.col("dst") < cap)).localCheckpoint(
-        eager=True
-    )
+    return checkpoint(eu.where((F.col("src") < cap) & (F.col("dst") < cap)))
 
 
 _SCD_SEEDS = [101, 102, 103]
@@ -115,7 +108,7 @@ def _scd_props(eu: DataFrame, members: DataFrame, seeds: list[int], weak: bool =
     seed ∈ C, and (unless weak) every non-seed member has ≥1 neighbor
     inside C (expansion never adds a node with no tie to the community).
     ``weak`` (TwoPhaseL) additionally allows the documented empty result."""
-    m = members.localCheckpoint(eager=True)
+    m = checkpoint(members)
     ms = m.select("seed", F.col("id").alias("src"))
     md = m.select("seed", F.col("id").alias("dst"))
     internal = eu.join(ms, "src").join(md, ["seed", "dst"])
@@ -196,9 +189,9 @@ def q96(spark: SparkSession, sf: str) -> DataFrame:
     from icebug_spark.operators.scd2 import combined_scd, ground_truth_comparison
 
     eu = _restricted_eu(spark, sf)
-    members = combined_scd(
+    members = checkpoint(combined_scd(
         eu, _SCD_SEEDS, first="clique", second="gce_m", radius=2, max_size=20
-    ).localCheckpoint(eager=True)
+    ))
     nodes = eu.select(F.col("src").alias("id")).distinct()
     gt = nodes.select("id", (F.col("id") % 5).alias("subset"))
     scored = ground_truth_comparison(members, gt)

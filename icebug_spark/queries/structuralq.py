@@ -30,6 +30,7 @@ from icebug_spark.operators.independent import luby_mis
 from icebug_spark.operators.matching import local_max_matching
 from icebug_spark.operators.msf import boruvka_msf
 from icebug_spark.operators.scc import strongly_connected_components
+from icebug_spark.plans.iterate import checkpoint
 
 # Shared CC-count fragment: recursive min-label closure over eu.
 _CC_SQL = """
@@ -80,9 +81,9 @@ def q39(spark: SparkSession, sf: str) -> DataFrame:
     components(G)). c(MSF) is recomputed with the engine's CC operator —
     an independent code path from Borůvka. The oracle derives n and c(G)
     itself and expects n − c edges + TRUE."""
-    ew = derived_weighted_edges(spark, sf).localCheckpoint(eager=True)
-    eu = symmetrize(ew.select("src", "dst")).localCheckpoint(eager=True)
-    msf = boruvka_msf(ew).localCheckpoint(eager=True)
+    ew = checkpoint(derived_weighted_edges(spark, sf))
+    eu = checkpoint(symmetrize(ew.select("src", "dst")))
+    msf = checkpoint(boruvka_msf(ew))
 
     cc_g = connected_components(eu)
     n_nodes = cc_g.count()
@@ -124,10 +125,8 @@ def q40(spark: SparkSession, sf: str) -> DataFrame:
     (anti-join of non-members against N(set) must be empty). Both checks
     are plain joins over the engine's own output — a wrong set flips a
     boolean and hash-mismatches the oracle's expected (TRUE, TRUE, TRUE)."""
-    eu = derived_edges_undirected(spark, sf).localCheckpoint(
-        eager=True
-    )
-    mis = luby_mis(eu).localCheckpoint(eager=True)
+    eu = checkpoint(derived_edges_undirected(spark, sf))
+    mis = checkpoint(luby_mis(eu))
     nodes = eu.select(F.col("src").alias("id")).distinct()
 
     mis_src = mis.withColumnRenamed("id", "src")
@@ -160,8 +159,8 @@ def q41(spark: SparkSession, sf: str) -> DataFrame:
     matched pair is a real edge; maximal = no graph edge has both
     endpoints unmatched (local-max produces a maximal matching). Oracle
     expects all TRUE."""
-    ew = derived_weighted_edges(spark, sf).localCheckpoint(eager=True)
-    m = local_max_matching(ew).localCheckpoint(eager=True)
+    ew = checkpoint(derived_weighted_edges(spark, sf))
+    m = checkpoint(local_max_matching(ew))
 
     endpoints = m.select(F.col("u").alias("id")).union(
         m.select(F.col("v").alias("id"))
@@ -241,17 +240,16 @@ def q113(spark: SparkSession, sf: str) -> DataFrame:
 
     from icebug_spark.operators.layout import pivot_mds
 
-    eu = (
+    eu = checkpoint(
         derived_edges_undirected(spark, sf)
         .where((F.col("src") < 120) & (F.col("dst") < 120))
-        .localCheckpoint(eager=True)
     )
     # small pivot count + few anneal rounds: the certificate checks shape
     # invariants, not layout quality — keep it inside the sweep budget
     init = pivot_mds(eu, dim=2, num_pivots=8)
-    out = maxent_stress(
+    out = checkpoint(maxent_stress(
         eu, dim=2, iterations=3, sample_size=24, init=init
-    ).localCheckpoint(eager=True)
+    ))
     per = out.select(
         "id",
         F.size("coords").alias("d"),
@@ -312,11 +310,11 @@ def q148(spark: SparkSession, sf: str) -> DataFrame:
 
     # src != dst: EU carries self-loops (customer id == supplier id);
     # a loop is uncolorable and the operator drops them too
-    eu = derived_edges_undirected(spark, sf).where(
+    eu = checkpoint(derived_edges_undirected(spark, sf).where(
         (F.col("src") % 5 == 0) & (F.col("dst") % 5 == 0)
         & (F.col("src") != F.col("dst"))
-    ).localCheckpoint(eager=True)
-    col = spectral_coloring(eu).localCheckpoint(eager=True)
+    ))
+    col = checkpoint(spectral_coloring(eu))
     cu = col.select(F.col("id").alias("src"), F.col("color").alias("cu"))
     cv = col.select(F.col("id").alias("dst"), F.col("color").alias("cv"))
     # one certificate job instead of four sequential scalar actions
@@ -399,10 +397,10 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
 
     from icebug_spark.operators.spectrum import laplacian_eigenvectors
 
-    eu = derived_edges_undirected(spark, sf).where(
+    eu = checkpoint(derived_edges_undirected(spark, sf).where(
         (F.col("src") % 5 == 0) & (F.col("dst") % 5 == 0)
         & (F.col("src") != F.col("dst"))
-    ).localCheckpoint(eager=True)
+    ))
     vals, vec_df = laplacian_eigenvectors(eu)
     n_cc = (
         connected_components(eu)

@@ -44,6 +44,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.sources.generators2 import (
     hyperbolic_points,
     hyperbolic_threshold_edges,
@@ -272,7 +273,7 @@ class DynamicHyperbolic:
                 / 1_000_000_007.0
             )
 
-        self.pts = pts.select(
+        self.pts = checkpoint(pts.select(
             "id",
             "phi",
             "r",
@@ -282,8 +283,8 @@ class DynamicHyperbolic:
             (
                 (u01(F.lit(seed), "id", F.lit(3)) * 2 - 1) * scale * move_distance
             ).alias("mv_rad"),
-        ).localCheckpoint(eager=True)
-        self.edges = self._edges(self.pts).localCheckpoint(eager=True)
+        ))
+        self.edges = checkpoint(self._edges(self.pts))
         self.step_no = 0
 
     def _edges(self, pts: DataFrame) -> DataFrame:
@@ -340,8 +341,8 @@ class DynamicHyperbolic:
         seq_base = 0
         for _ in range(n_steps):
             self.step_no += 1
-            new_pts = self._move(self.pts, self.step_no).localCheckpoint(eager=True)
-            new_edges = self._edges(new_pts).localCheckpoint(eager=True)
+            new_pts = checkpoint(self._move(self.pts, self.step_no))
+            new_edges = checkpoint(self._edges(new_pts))
             added = new_edges.join(self.edges, ["u", "v"], "left_anti")
             removed = self.edges.join(new_edges, ["u", "v"], "left_anti")
             ev = (

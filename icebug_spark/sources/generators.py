@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icebug_spark.graph.core import Graph
+from icebug_spark.plans.iterate import checkpoint
 
 _DENOM = 1 << 30
 
@@ -204,10 +205,9 @@ def barabasi_albert_batched(
     lo = m_per_node + 1
     while lo < n:
         hi = min(n, lo + batch)
-        prev_targets = (
+        prev_targets = checkpoint(
             edges.select(F.col("src").alias("t"))
             .union(edges.select(F.col("dst").alias("t")))
-            .localCheckpoint(eager=True)
         )
         cnt = prev_targets.count()
         news = (
@@ -230,8 +230,6 @@ def barabasi_albert_batched(
             .select("src", F.col("t").alias("dst"))
             .where(F.col("src") != F.col("t"))
         )
-        edges = edges.union(new_edges.select("src", "dst")).distinct().localCheckpoint(
-            eager=True
-        )
+        edges = checkpoint(edges.union(new_edges.select("src", "dst")).distinct())
         lo = hi
     return Graph(edges, directed=False)

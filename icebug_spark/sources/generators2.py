@@ -25,6 +25,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 
 def _u01(*cols):
     """Deterministic uniform(0,1) from xxhash64 of the given columns."""
@@ -86,7 +88,7 @@ def hyperbolic_threshold_edges(
     dynamic hyperbolic generators."""
     band_w = 2 * math.pi / bands
     pts = pts.withColumn("band", F.floor(F.col("phi") / band_w).cast("int"))
-    pts = pts.localCheckpoint(eager=True)
+    pts = checkpoint(pts)
 
     # adjacent-band candidate pairs (wrap-around); hyperbolic closeness
     # needs small angular gap unless radii are tiny, so +-1 band plus the

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icebug_spark.graph.core import Graph
+from icebug_spark.plans.iterate import checkpoint
 
 _DENOM = 1_000_000_007
 
@@ -58,7 +59,7 @@ def clustered_random_graph(
     nodes = spark.range(n).select(
         "id", (F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(k))).alias("cluster")
     )
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = checkpoint(nodes)
     a = nodes.select(F.col("id").alias("src"), F.col("cluster").alias("cu"))
     b = nodes.select(F.col("id").alias("dst"), F.col("cluster").alias("cv"))
     pairs = a.crossJoin(b).where(F.col("src") < F.col("dst"))
@@ -131,7 +132,7 @@ def mocnik_graph(
     pos_cols = [
         _u01(F.lit(seed), F.col("id"), F.lit(d)).alias(f"x{d}") for d in range(dim)
     ]
-    pts = spark.range(n).select("id", *pos_cols).localCheckpoint(eager=True)
+    pts = checkpoint(spark.range(n).select("id", *pos_cols))
     xs = [f"x{d}" for d in range(dim)]
 
     def _sqdist(a_pref: str, b_pref: str) -> F.Column:
@@ -176,9 +177,7 @@ def mocnik_graph(
         .select("u", *[f"u{x}" for x in xs])
     )
     nn2 = _nn_from(F.broadcast(strag).crossJoin(b.drop("cell")))
-    nn = (
-        nn1.join(nn2.select("u"), "u", "left_anti").unionByName(nn2)
-    ).localCheckpoint(eager=True)
+    nn = checkpoint(nn1.join(nn2.select("u"), "u", "left_anti").unionByName(nn2))
 
     # edge candidates: ±ceil(k) cells for grid-resolved points
     reach = max(int(math.ceil(k)), 1)
@@ -260,9 +259,7 @@ def pubweb_graph(
         x = F.when(in_area, F.pmod(F.lit(cx) + F.cos(angle) * dist, F.lit(1.0))).otherwise(x)
         y = F.when(in_area, F.pmod(F.lit(cy) + F.sin(angle) * dist, F.lit(1.0))).otherwise(y)
 
-    pts = spark.range(n).select("id", x.alias("x"), y.alias("y")).localCheckpoint(
-        eager=True
-    )
+    pts = checkpoint(spark.range(n).select("id", x.alias("x"), y.alias("y")))
     return Graph(
         _pubweb_mutual_knn_edges(pts, neigh_rad, max_neigh),
         directed=False,
@@ -418,14 +415,13 @@ class DynamicPubWebGenerator:
             dist = u2 * r
             x = F.when(in_area, F.pmod(F.lit(cx) + F.cos(angle) * dist, F.lit(1.0))).otherwise(x)
             y = F.when(in_area, F.pmod(F.lit(cy) + F.sin(angle) * dist, F.lit(1.0))).otherwise(y)
-        self.points = (
+        self.points = checkpoint(
             spark.range(n)
             .select("id", x.alias("x"), y.alias("y"))
-            .localCheckpoint(eager=True)
         )
-        self.edges = _pubweb_mutual_knn_edges(
+        self.edges = checkpoint(_pubweb_mutual_knn_edges(
             self.points, neigh_rad, max_neigh
-        ).localCheckpoint(eager=True)
+        ))
         self.next_id = n
         self.step = 0
 
@@ -510,11 +506,10 @@ class DynamicPubWebGenerator:
             n_churn = int(n_cur * 0.05)
 
             # churn out: seeded-hash node sample; incident edges first
-            doomed = (
+            doomed = checkpoint(
                 self.points.select("id")
                 .orderBy(_u01(F.lit(self.seed), F.lit("dyndel"), F.lit(self.step), F.col("id")))
                 .limit(n_churn)
-                .localCheckpoint(eager=True)
             )
             incident = self.edges.join(
                 doomed.withColumnRenamed("id", "src"), "src", "left_semi"
@@ -531,19 +526,18 @@ class DynamicPubWebGenerator:
                 F.col("id")
             )
             emit(node_events(new_ids, "NODE_ADDITION"))
-            pts2 = (
+            pts2 = checkpoint(
                 self.points.join(doomed, "id", "left_anti")
                 .unionByName(self._insert_coords(new_ids))
-                .localCheckpoint(eager=True)
             )
 
             # recompute eligibility; diff against the surviving old edges
             old = self.edges.join(
                 doomed.withColumnRenamed("id", "src"), "src", "left_anti"
             ).join(doomed.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            new = _pubweb_mutual_knn_edges(
+            new = checkpoint(_pubweb_mutual_knn_edges(
                 pts2, self.neigh_rad, self.max_neigh
-            ).localCheckpoint(eager=True)
+            ))
             o = old.select("src", "dst", F.col("weight").alias("wo"))
             nw = new.select("src", "dst", F.col("weight").alias("wn"))
             d = o.join(nw, ["src", "dst"], "full")

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from icebug_spark.llm.similarity import _dot, _norm2, srp_buckets
+from icebug_spark.plans.iterate import checkpoint
 
 EMB_SCHEMA = "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
 
@@ -50,10 +51,9 @@ class StreamingAnnIndex:
         return f"{self.state_table}__index"
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        nb = (
+        nb = checkpoint(
             srp_buckets(batch_df, self.planes)
             .join(batch_df.select("vec_id", "embedding"), "vec_id")
-            .localCheckpoint(eager=True)
         )
         if self.state_table is not None:
             spark = batch_df.sparkSession
@@ -78,9 +78,9 @@ class StreamingAnnIndex:
                 )
             self.index = spark.table(self._state_name).drop("batch_id")
         else:
-            self.index = (
+            self.index = checkpoint(
                 nb if self.index is None else self.index.unionByName(nb)
-            ).localCheckpoint(eager=True)
+            )
         self.n_batches += 1
 
     def topk(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from icebug_spark.llm.dedup import band_buckets
+from icebug_spark.plans.iterate import checkpoint
 
 DOC_SCHEMA = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
@@ -154,21 +155,21 @@ class StreamingLshDedup:
         return new_pairs.distinct()
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        nb = band_buckets(
+        nb = checkpoint(band_buckets(
             batch_df, self.n, self.num_hashes, self.bands
-        ).localCheckpoint(eager=True)
+        ))
         if self.state_table is not None:
             self._process_persisted(batch_df.sparkSession, nb, batch_id)
         else:
             new_pairs = self._new_pairs(nb, self.state)
-            self.pairs = (
+            self.pairs = checkpoint(
                 new_pairs
                 if self.pairs is None
                 else self.pairs.unionByName(new_pairs)
-            ).localCheckpoint(eager=True)
-            self.state = (
+            )
+            self.state = checkpoint(
                 nb if self.state is None else self.state.unionByName(nb)
-            ).localCheckpoint(eager=True)
+            )
         self.n_batches += 1
 
     def _process_persisted(
@@ -307,7 +308,7 @@ class StreamingSubstrDedup:
     def _batch_grams(self, batch_df: DataFrame) -> DataFrame:
         from icebug_spark.llm.dedup import _kgram_starts
 
-        return _kgram_starts(batch_df, self.k).localCheckpoint(eager=True)
+        return checkpoint(_kgram_starts(batch_df, self.k))
 
     @staticmethod
     def _batch_tokens(batch_df: DataFrame) -> DataFrame:
@@ -375,16 +376,16 @@ class StreamingSubstrDedup:
             merged, cov = self._new_covered(
                 nbg, self.occ, self.counts, self.covered
             )
-            self.counts = merged.localCheckpoint(eager=True)
-            self.covered = (
+            self.counts = checkpoint(merged)
+            self.covered = checkpoint(
                 cov if self.covered is None else self.covered.unionByName(cov)
-            ).localCheckpoint(eager=True)
-            self.occ = (
+            )
+            self.occ = checkpoint(
                 nbg if self.occ is None else self.occ.unionByName(nbg)
-            ).localCheckpoint(eager=True)
-            self.tokens = (
+            )
+            self.tokens = checkpoint(
                 nbt if self.tokens is None else self.tokens.unionByName(nbt)
-            ).localCheckpoint(eager=True)
+            )
         self.n_batches += 1
 
     # --- persisted backend (cluster shape) ---------------------------

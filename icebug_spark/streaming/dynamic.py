@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
+
 EVENT_TYPES = [
     "NODE_ADDITION",
     "NODE_REMOVAL",
@@ -133,7 +135,7 @@ def replay_by_timestep(edges: DataFrame, events: DataFrame) -> list[DataFrame]:
     cur = edges
     for lo, hi in zip(bounds[:-1], bounds[1:]):
         batch = events.where((F.col("seq") > lo) & (F.col("seq") < hi))
-        cur = apply_events(cur, batch).localCheckpoint(eager=True)
+        cur = checkpoint(apply_events(cur, batch))
         states.append(cur)
     return states
 

@@ -42,7 +42,7 @@ from icebug_spark.plans.iterate import checkpoint
 def _with_edge(eu: DataFrame, u: int, v: int) -> DataFrame:
     spark = eu.sparkSession
     add = spark.createDataFrame([(u, v), (v, u)], "src BIGINT, dst BIGINT")
-    return eu.select("src", "dst").union(add).distinct().localCheckpoint(eager=True)
+    return checkpoint(eu.select("src", "dst").union(add).distinct())
 
 
 def _affected_sources(dist: DataFrame, u: int, v: int, min_gap: int) -> DataFrame:
@@ -67,7 +67,7 @@ class DynBetweenness:
     samples for the affected pairs; we re-run the affected sources)."""
 
     def __init__(self, edges_undirected: DataFrame, sources: list[int], max_hops: int = 20):
-        self.eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+        self.eu = checkpoint(edges_undirected.select("src", "dst"))
         self.sources = [int(s) for s in sources]
         self.max_hops = max_hops
         dist, deltas = self._recompute(self.sources)
@@ -110,15 +110,13 @@ class DynBetweenness:
             [(s,) for s in aff_ids], "source BIGINT"
         )
         new_dist, new_deltas = self._recompute(aff_ids)
-        self.dist = (
+        self.dist = checkpoint(
             self.dist.join(F.broadcast(aff_df), "source", "left_anti")
             .unionByName(new_dist)
-            .localCheckpoint(eager=True)
         )
-        self.deltas = (
+        self.deltas = checkpoint(
             self.deltas.join(F.broadcast(aff_df), "source", "left_anti")
             .unionByName(new_deltas)
-            .localCheckpoint(eager=True)
         )
         return len(aff_ids)
 
@@ -147,13 +145,11 @@ class DynBetweennessOneNode:
     ):
         from icebug_spark.operators.centrality2 import bfs_sigma
 
-        self.eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+        self.eu = checkpoint(edges_undirected.select("src", "dst"))
         self.x = int(x)
         self.sources = [int(s) for s in sources]
         self.max_hops = max_hops
-        self.tab = bfs_sigma(self.eu, self.sources, max_hops).localCheckpoint(
-            eager=True
-        )
+        self.tab = checkpoint(bfs_sigma(self.eu, self.sources, max_hops))
 
     def score(self) -> float:
         """Current bc(x) over ordered (u, v) pairs from the maintained
@@ -202,10 +198,9 @@ class DynBetweennessOneNode:
             [(s,) for s in aff_ids], "source BIGINT"
         )
         new_tab = bfs_sigma(self.eu, aff_ids, self.max_hops)
-        self.tab = (
+        self.tab = checkpoint(
             self.tab.join(F.broadcast(aff_df), "source", "left_anti")
             .unionByName(new_tab)
-            .localCheckpoint(eager=True)
         )
         return len(aff_ids)
 
@@ -218,13 +213,11 @@ class DynTopHarmonicCloseness:
 
     def __init__(self, edges_undirected: DataFrame, sources: list[int], k: int = 10,
                  max_hops: int = 20):
-        self.eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+        self.eu = checkpoint(edges_undirected.select("src", "dst"))
         self.sources = [int(s) for s in sources]
         self.k = k
         self.max_hops = max_hops
-        self.dist = multi_source_bfs(self.eu, self.sources, max_hops).localCheckpoint(
-            eager=True
-        )
+        self.dist = checkpoint(multi_source_bfs(self.eu, self.sources, max_hops))
 
     def _harmonic(self, dist: DataFrame) -> DataFrame:
         return (
@@ -249,10 +242,9 @@ class DynTopHarmonicCloseness:
             [(s,) for s in aff_ids], "source BIGINT"
         )
         new_dist = multi_source_bfs(self.eu, aff_ids, self.max_hops)
-        self.dist = (
+        self.dist = checkpoint(
             self.dist.join(F.broadcast(aff_df), "source", "left_anti")
             .unionByName(new_dist)
-            .localCheckpoint(eager=True)
         )
         return len(aff_ids)
 
@@ -278,17 +270,17 @@ class DynamicBSuitorMatcher:
         e = edges_weighted
         if "weight" not in e.columns:
             e = e.select("src", "dst", F.lit(1.0).alias("weight"))
-        self.edges = e.select("src", "dst", "weight").localCheckpoint(eager=True)
+        self.edges = checkpoint(e.select("src", "dst", "weight"))
         self.b = b
-        self.matching = b_suitor_matching(self.edges, b=b).localCheckpoint(eager=True)
+        self.matching = checkpoint(b_suitor_matching(self.edges, b=b))
 
     def _repair(self, touched: list[int]) -> None:
         """Drop the touched endpoints' matches, re-match the spare
         region (see class docstring)."""
         m = self.matching
-        kept = m.where(
+        kept = checkpoint(m.where(
             ~F.col("u").isin(touched) & ~F.col("v").isin(touched)
-        ).localCheckpoint(eager=True)
+        ))
         used = (
             kept.select(F.col("u").alias("id"))
             .union(kept.select(F.col("v").alias("id")))
@@ -309,14 +301,14 @@ class DynamicBSuitorMatcher:
             .join(spare.withColumnRenamed("id", "dst"), "dst", "leftsemi")
         )
         new_m = b_suitor_matching(sub, b=self.b, capacities=caps)
-        self.matching = kept.unionByName(new_m).localCheckpoint(eager=True)
+        self.matching = checkpoint(kept.unionByName(new_m))
 
     def insert_edge(self, u: int, v: int, weight: float = 1.0) -> None:
         spark = self.edges.sparkSession
         add = spark.createDataFrame(
             [(int(u), int(v), float(weight))], "src BIGINT, dst BIGINT, weight DOUBLE"
         )
-        self.edges = self.edges.unionByName(add).localCheckpoint(eager=True)
+        self.edges = checkpoint(self.edges.unionByName(add))
         self._repair([int(u), int(v)])
 
     def remove_edge(self, u: int, v: int) -> None:
@@ -324,10 +316,10 @@ class DynamicBSuitorMatcher:
             (F.least("src", "dst") == min(u, v))
             & (F.greatest("src", "dst") == max(u, v))
         )
-        self.edges = self.edges.where(~gone).localCheckpoint(eager=True)
-        self.matching = self.matching.where(
+        self.edges = checkpoint(self.edges.where(~gone))
+        self.matching = checkpoint(self.matching.where(
             ~((F.col("u") == min(u, v)) & (F.col("v") == max(u, v)))
-        ).localCheckpoint(eager=True)
+        ))
         self._repair([int(u), int(v)])
 
 
@@ -368,12 +360,10 @@ class DynAPSP:
     sources in one scan of the cached table; only those re-run BFS."""
 
     def __init__(self, edges_undirected: DataFrame, sources: list[int], max_hops: int = 30):
-        self.eu = edges_undirected.select("src", "dst").localCheckpoint(eager=True)
+        self.eu = checkpoint(edges_undirected.select("src", "dst"))
         self.sources = [int(s) for s in sources]
         self.max_hops = max_hops
-        self.dist = multi_source_bfs(self.eu, self.sources, max_hops).localCheckpoint(
-            eager=True
-        )
+        self.dist = checkpoint(multi_source_bfs(self.eu, self.sources, max_hops))
 
     def distances(self) -> DataFrame:
         return self.dist
@@ -388,10 +378,9 @@ class DynAPSP:
             [(s,) for s in aff_ids], "source BIGINT"
         )
         new_dist = multi_source_bfs(self.eu, aff_ids, self.max_hops)
-        self.dist = (
+        self.dist = checkpoint(
             self.dist.join(F.broadcast(aff_df), "source", "left_anti")
             .unionByName(new_dist)
-            .localCheckpoint(eager=True)
         )
         return len(aff_ids)
 
@@ -445,9 +434,9 @@ class DynApproxBetweenness:
             import math as _math
 
             eu = edges_undirected.select("src", "dst")
-            eu = eu.union(
+            eu = checkpoint(eu.union(
                 eu.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).distinct().localCheckpoint(eager=True)
+            ).distinct())
             nodes = eu.select(F.col("src").alias("id")).distinct()
             n = nodes.count()
             vd = max(int(vd), 2)
@@ -460,21 +449,18 @@ class DynApproxBetweenness:
             r = max(1, min(r, max_samples))
             pairs = _rk_pairs(nodes, n, r, seed)
         self.eu = eu
-        self.nodes = nodes.localCheckpoint(eager=True)
+        self.nodes = checkpoint(nodes)
         self.vd = vd
         self.r = r
         self.seed = seed
         self.generation = 0
         self.pairs = pairs
-        self.members = _sampled_path_members(eu, pairs, vd, seed).localCheckpoint(
-            eager=True
-        )
+        self.members = checkpoint(_sampled_path_members(eu, pairs, vd, seed))
         self._sources = sorted(
             int(x["s"]) for x in pairs.select("s").distinct().collect()
         )
-        self.dist = (
+        self.dist = checkpoint(
             multi_source_bfs(self.eu, self._sources, max_hops=vd + 2)
-            .localCheckpoint(eager=True)
         )
 
     def scores(self) -> DataFrame:
@@ -509,12 +495,11 @@ class DynApproxBetweenness:
             keep = self.members.join(
                 F.broadcast(aff_pairs.select("pair")), "pair", "left_anti"
             )
-            self.members = keep.unionByName(new_members).localCheckpoint(eager=True)
+            self.members = checkpoint(keep.unionByName(new_members))
         aff_df = spark.createDataFrame([(s,) for s in aff_ids], "source BIGINT")
         new_dist = multi_source_bfs(self.eu, aff_ids, max_hops=self.vd + 2)
-        self.dist = (
+        self.dist = checkpoint(
             self.dist.join(F.broadcast(aff_df), "source", "left_anti")
             .unionByName(new_dist)
-            .localCheckpoint(eager=True)
         )
         return int(n_aff)

@@ -21,6 +21,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.streaming.dynamic import apply_events
 
 EVENT_SCHEMA = "seq LONG, type STRING, u LONG, v LONG, w DOUBLE"
@@ -31,14 +32,14 @@ class GraphUpdater:
 
     def __init__(self, initial_edges: DataFrame,
                  handlers: list[Callable[[DataFrame, int], None]] | None = None):
-        self.edges = initial_edges.localCheckpoint(eager=True)
+        self.edges = checkpoint(initial_edges)
         self.handlers = handlers or []
         self.n_batches = 0
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         # events within a micro-batch stay ordered by seq (last-wins
         # semantics inside apply_events); batches arrive in order
-        self.edges = apply_events(self.edges, batch_df).localCheckpoint(eager=True)
+        self.edges = checkpoint(apply_events(self.edges, batch_df))
         self.n_batches += 1
         for h in self.handlers:  # GraphEventProxy observer fan-out
             h(self.edges, batch_id)

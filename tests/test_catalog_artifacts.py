@@ -41,3 +41,23 @@ def test_artifact_consistency(spark, sf_dir):
     assert e <= eu <= 2 * e
     assert c <= eu // 2 + e  # canonical never exceeds one row per pair
     assert ew == e  # EW aggregates the same distinct (src, dst) pairs
+
+
+def test_build_keeps_callers_job_group(spark, sf_dir, tmp_path):
+    """The build's concurrent half runs on pool threads; they inherit the
+    caller's job group, so the build submits no untagged job. A fresh
+    copy of the inputs keeps the session memo cold."""
+    import shutil
+
+    for t in ("orders", "lineitem"):
+        shutil.copyfile(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("catalog-build", "catalog-build")
+    try:
+        build_derived_artifacts(spark, str(tmp_path))
+    finally:
+        sc.setJobGroup(None, None)
+    assert set(tracker.getJobIdsForGroup(None)) <= untagged
+    assert tracker.getJobIdsForGroup("catalog-build")

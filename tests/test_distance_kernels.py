@@ -1,8 +1,8 @@
 """Default-run checks of the BFS/SSSP family that runs on traversal's two
 round kernels (``expand_round`` / ``relax_round``): a point-to-point smoke
 test against the single-source searches, the ``dist`` dtype each search
-returns, and a lint that loop state in the kernel files is truncated only
-through ``plans.iterate``."""
+returns, and a lint that every module of the package truncates lineage
+only through ``plans.iterate``."""
 
 from __future__ import annotations
 
@@ -75,18 +75,20 @@ def test_point_to_point_searches_smoke(spark):
         assert _dtype(df) == "double"
 
 
+_REPO = pathlib.Path(__file__).resolve().parents[1]
+
+
 @pytest.mark.parametrize(
     "path",
-    [
-        "icebug_spark/operators/traversal.py",
-        "icebug_spark/operators/pointtopoint.py",
-        "icebug_spark/streaming/dynamic2.py",
-    ],
+    sorted(
+        p.relative_to(_REPO).as_posix()
+        for p in (_REPO / "icebug_spark").rglob("*.py")
+        if p != _REPO / "icebug_spark/plans/iterate.py"
+    ),
 )
 def test_no_direct_local_checkpoint(path):
-    """Loop state here goes through ``plans.iterate.checkpoint`` /
-    ``checkpoint_observe``, which honour
-    ``spark.icebug.reliableCheckpoint``; a direct ``localCheckpoint``
-    would silently ignore it."""
-    text = (pathlib.Path(__file__).resolve().parents[1] / path).read_text()
-    assert "localCheckpoint(" not in text
+    """Every eager materialization in the package goes through
+    ``plans.iterate`` (``checkpoint`` / ``pin`` and their ``*_observe``
+    variants), which honour ``spark.icebug.reliableCheckpoint``; a direct
+    ``localCheckpoint`` would silently ignore it."""
+    assert "localCheckpoint(" not in (_REPO / path).read_text()

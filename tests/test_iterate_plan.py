@@ -3,6 +3,7 @@
 reliable `checkpoint()` path must produce identical results to the
 defaults — they are plan-shape choices, not semantics."""
 
+import os
 import tempfile
 
 import pytest
@@ -134,15 +135,60 @@ def test_pin_public_api_fallback(eu, spark):
         spark._jsparkSession = real
 
 
-def test_reliable_checkpoint(eu, spark):
-    """`spark.icebug.reliableCheckpoint=true` routes lineage truncation
-    through `DataFrame.checkpoint` into the configured checkpoint dir —
-    the cluster fault-tolerance mode (SURVEY §7)."""
+def _entries(d):
+    return sum(len(dirs) + len(files) for _, dirs, files in os.walk(d))
+
+
+def test_reliable_checkpoint(eu, spark, monkeypatch):
+    """`spark.icebug.reliableCheckpoint=true` routes every eager
+    materialization — `checkpoint`, `pin`, their `*_observe` variants and
+    the `iterate()` runner — through `DataFrame.checkpoint` into the
+    configured checkpoint dir: the cluster fault-tolerance mode (SURVEY
+    §7). With the flag on, any `localCheckpoint` raises, and each output
+    equals its default-mode output."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from icebug_spark.llm import dedup
+    from icebug_spark.operators import centrality, centrality2, numerics, triangles
+    from icebug_spark.plans.iterate import pin
+
+    arcs = [(0, 1), (1, 2), (0, 2), (2, 3)]  # one triangle plus a tail
+    tri = spark.createDataFrame(arcs + [(b, a) for a, b in arcs], ["src", "dst"])
+    docs = spark.createDataFrame(
+        [(0, "a b c d e"), (1, "a b c d e"), (2, "a b c d f"), (3, "x y z w")],
+        "doc_id BIGINT, text STRING",
+    )
+    runs = {
+        "pagerank": lambda: centrality.pagerank(eu, max_iter=4),
+        "triangles": lambda: triangles.triangle_count(tri),
+        "exact_duplicates": lambda: dedup.exact_duplicates(docs),
+        "ngram_jaccard": lambda: dedup.ngram_jaccard_pairs(docs, threshold=0.3),
+        "katz": lambda: centrality2.katz_centrality(eu, max_iter=4),
+        "commute_time": lambda: numerics.commute_time_distances(
+            eu.withColumn("weight", F.lit(1.0)), [(0, 3)]
+        ),
+    }
+
+    def outputs():
+        return {k: sorted(map(tuple, f().collect())) for k, f in runs.items()}
+
+    default = outputs()
+    assert default["triangles"] == [(1,)] and default["ngram_jaccard"]
     with tempfile.TemporaryDirectory() as d:
         spark.sparkContext.setCheckpointDir(d)
         spark.conf.set("spark.icebug.reliableCheckpoint", "true")
+
+        def local_checkpoint(*a, **k):
+            raise AssertionError("localCheckpoint under reliableCheckpoint=true")
+
+        monkeypatch.setattr(DataFrame, "localCheckpoint", local_checkpoint)
         try:
             assert _cc(eu) == EXPECT_CC
             assert _bfs_dists(eu) == EXPECT_BFS
+            assert outputs() == default
+            before = _entries(d)
+            pin(spark.range(10))
+            assert _entries(d) > before
         finally:
+            monkeypatch.undo()
             spark.conf.unset("spark.icebug.reliableCheckpoint")

@@ -24,17 +24,23 @@ regime would put this ratio in the hundreds by depth 64 (~2.8x/round
 past the onset); anything under ~3 is scheduling noise. Value parity
 is asserted exactly (dist(i) == i on a path).
 
-Writes the ``high_diameter`` section of BENCH_SCALEUP.json.
+Writes the ``high_diameter`` section of the JSON file given by ``--out``
+(default: the repo's BENCH_SCALEUP.json); point ``--out`` elsewhere for
+A/B runs that should leave the committed file alone:
+
+    python tools/bench_highdiameter.py --out /tmp/highdiam.json
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -56,6 +62,13 @@ def _flat_ratio(intervals: list[float]) -> float:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--out",
+        default=os.path.join(ROOT, "BENCH_SCALEUP.json"),
+        help="JSON file whose high_diameter section is (re)written",
+    )
+    path = ap.parse_args().out
     spark = get_spark("bench-highdiameter")
     out: dict = {"path_n": PATH_N, "depth": DEPTH, "kernels": {}}
 
@@ -137,7 +150,6 @@ def main() -> None:
     assert abs(s - 1.0) < 1e-6, "rank mass conserved"
     record("pagerank", stamps, t0, {"parity": "sum(rank)==1 to 1e-6"})
 
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH_SCALEUP.json")
     doc = json.load(open(path)) if os.path.exists(path) else {}
     doc["high_diameter"] = out
     doc["high_diameter_method"] = (
