@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.traversal import multi_source_bfs, sigma_round
 from icebug_spark.plans.iterate import checkpoint, iterate, mirror
 
 
@@ -134,8 +135,6 @@ def closeness_sampled(
     GENERALIZED): c(u) = ((r-1)/Σd) · ((r-1)/(n-1)) where r = |reachable
     set incl. u| and n = |V| — well-defined on disconnected graphs. →
     (id, closeness) 6dp."""
-    from icebug_spark.operators.traversal import multi_source_bfs
-
     n_total = (
         edges_undirected.select(F.col("src").alias("id"))
         .distinct()
@@ -179,44 +178,31 @@ def sigma_levels(
     edges_undirected: DataFrame, sources: list[int], max_hops: int = 20
 ) -> tuple[list[DataFrame], DataFrame]:
     """Forward half of Brandes — level-synchronous multi-source BFS with
-    σ shortest-path counts. Returns (levels, eu): one (source, id, dist,
-    sigma) frame per BFS level (level 0 = the sources) plus the
-    checkpointed symmetric arc table. The SINGLE σ-BFS kernel behind
-    both ``bfs_sigma`` (flat table) and ``brandes_deltas`` (per-level
-    backward pass)."""
+    σ shortest-path counts, one ``traversal.sigma_round`` job per level.
+    Returns (levels, eu): one (source, id, dist, sigma) frame per BFS
+    level (level 0 = the de-duplicated sources; ``dist`` BIGINT, ``sigma``
+    DOUBLE) plus the checkpointed symmetric arc table. The SINGLE σ-BFS
+    behind both ``bfs_sigma`` (flat table) and ``brandes_deltas``
+    (per-level backward pass)."""
     eu = checkpoint(edges_undirected.select("src", "dst"))
     spark = edges_undirected.sparkSession
-    init = checkpoint(spark.createDataFrame(
-        [(int(s), int(s), 0, 1.0) for s in sources], ["source", "id", "dist", "sigma"]
+    # de-dup up front: a repeated source would double every σ below it
+    srcs = sorted({int(s) for s in sources})
+    state = checkpoint(spark.createDataFrame(
+        [(s, s, 0, 1.0, True) for s in srcs],
+        "source BIGINT, id BIGINT, dist BIGINT, sigma DOUBLE, frontier BOOLEAN",
     ))
-    levels = [init]
-    settled = init.select("source", "id")
-    frontier = init
-    from icebug_spark.plans.iterate import checkpoint_observe
-
+    cols = ("source", "id", "dist", "sigma")
+    # level h = the nodes new at round h: a zero-shuffle filter of that
+    # round's materialized state
+    levels = [state.select(*cols)]
+    rows = len(srcs)
     for _h in range(max_hops):
-        # the level's emptiness test is observed during its checkpoint —
-        # no separate limit(1).count job per level
-        nxt, m = checkpoint_observe(
-            frontier.join(eu, frontier.id == eu.src)
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                (F.col("dist") + 1).alias("dist"),
-                "sigma",
-            )
-            .join(settled, ["source", "id"], "left_anti")
-            .groupBy("source", "id", "dist")
-            .agg(F.sum("sigma").alias("sigma")),
-            F.count(F.lit(1)).alias("n"),
-        )
-        if int(m["n"] or 0) == 0:
+        state, m = sigma_round(state, eu, rows, key=("source",))
+        rows = int(m["nf"] or 0)
+        if rows == 0:
             break
-        levels.append(nxt)
-        # levels are disjoint and individually checkpointed: plain union
-        # keeps the visited filter flat with no extra jobs
-        settled = settled.union(nxt.select("source", "id"))
-        frontier = nxt
+        levels.append(state.where(F.col("frontier")).select(*cols))
     return levels, eu
 
 
@@ -256,12 +242,6 @@ def backward_deltas(spark, levels, eu) -> DataFrame:
     that also need the distance table (DynBetweenness keeps BOTH the
     dist cache and the delta cache) run sigma_levels ONCE instead of a
     separate multi-source BFS — a third of the per-update rounds."""
-    # backward accumulation level by level
-    all_nodes = levels[0]
-    for lv in levels[1:]:
-        all_nodes = all_nodes.union(lv)
-    all_nodes = checkpoint(all_nodes)
-
     delta = None  # (source, id, delta)
     acc = []
     for h in range(len(levels) - 1, 0, -1):

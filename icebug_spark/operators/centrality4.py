@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.distances import diameter_double_sweep
-from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
+from icebug_spark.operators.traversal import sigma_round
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
 
 
 def approx_betweenness(
@@ -184,13 +185,9 @@ def _sampled_path_members(
     the interior-node memberships (pair, id). All pairs advance together:
     one pair-keyed multi-source BFS forward (dist, σ), then a σ-weighted
     backward walk one level per round."""
-    # forward multi-source BFS with path counts sigma, keyed by pair —
-    # the fused level shape (see traversal.multi_source_bfs): the state
-    # rides the expansion's exchange as carrier rows, a node is NEW
-    # exactly when its group has no carrier, and σ(new node) is the sum
-    # of this level's message σ's (σ of seen nodes is carried through
-    # untouched). One job and one exchange per level, vs the old
-    # checkpoint + limit(1).count + settled-union-checkpoint triple.
+    # forward multi-source BFS with path counts sigma, keyed by pair: one
+    # traversal.sigma_round job per level. dist stays INT (the seed's
+    # literal) — the backward pass hashes it into each pick.
     state = checkpoint(
         pairs.select(
             "pair",
@@ -204,39 +201,7 @@ def _sampled_path_members(
     # the exact observed new-node count from each level's checkpoint
     frontier_rows = state.count()
     for _d in range(vd + 2):
-        frontier = state.where(F.col("frontier"))
-        msgs = (
-            mirror(frontier, frontier_rows)
-            .join(eu.withColumnRenamed("src", "id"), "id")
-            .select(
-                "pair",
-                F.col("dst").alias("id"),
-                (F.col("dist") + 1).alias("dist"),
-                "sigma",
-                F.lit(False).alias("seen"),
-            )
-        )
-        merged = (
-            state.select("pair", "id", "dist", "sigma", F.lit(True).alias("seen"))
-            .unionByName(msgs)
-            .groupBy("pair", "id")
-            .agg(
-                F.min(F.when(F.col("seen"), F.col("dist"))).alias("sd"),
-                F.min(F.when(~F.col("seen"), F.col("dist"))).alias("md"),
-                F.max(F.when(F.col("seen"), F.col("sigma"))).alias("ssig"),
-                F.sum(F.when(~F.col("seen"), F.col("sigma"))).alias("msig"),
-            )
-            .select(
-                "pair",
-                "id",
-                F.coalesce("sd", "md").alias("dist"),
-                F.coalesce("ssig", "msig").alias("sigma"),
-                F.col("sd").isNull().alias("frontier"),
-            )
-        )
-        state, m = checkpoint_observe(
-            merged, F.sum(F.col("frontier").cast("long")).alias("nf")
-        )
+        state, m = sigma_round(state, eu, frontier_rows, key=("pair",))
         frontier_rows = int(m["nf"] or 0)
         if frontier_rows == 0:
             break

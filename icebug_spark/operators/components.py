@@ -8,7 +8,8 @@ Algorithm ("hash-to-min" style): every node starts labeled with its own
 id; each round a node takes the min of its own label and its neighbors'
 labels; converges in O(diameter) rounds on the propagation tree. Each
 round is one shuffle (join + groupBy-min) with map-side partial
-aggregation; lineage is truncated every round via the iterate runner. At
+aggregation, materialized by one ``checkpoint_observe`` job that also
+carries the convergence scalar (a hand loop, not ``iterate()``). At
 100 TB scale the two-phase large-star/small-star algorithm (Kiveris et al.,
 "Connected Components in MapReduce") halves round count on high-diameter
 graphs; for the low-diameter graphs here min-label is already optimal and
@@ -20,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import checkpoint, checkpoint_observe, mirror
+from icebug_spark.plans.iterate import checkpoint_observe, mirror
 
 
 def connected_components(
@@ -41,10 +42,13 @@ def connected_components(
             .distinct()
             .withColumn("component", F.col("id"))
         )
-    lbl = checkpoint(labels.select("id", "component"))
-    # the label table has exactly n rows every round — count once on the
-    # checkpointed table and let mirror() pick broadcast vs shuffle-hash.
-    n = lbl.count()
+    # the label table has exactly n rows every round — count it once, on
+    # the seed's own checkpoint job, and let mirror() pick broadcast vs
+    # shuffle-hash.
+    lbl, m0 = checkpoint_observe(
+        labels.select("id", "component"), F.count(F.lit(1)).alias("n")
+    )
+    n = int(m0["n"] or 0)
     # Labels are monotone non-increasing, so the global label sum strictly
     # decreases until fixpoint — convergence is one cheap scalar aggregate
     # per round instead of a join against the previous state.

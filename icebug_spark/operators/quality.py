@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.components import connected_components
 from icebug_spark.plans.iterate import checkpoint
 
 
@@ -154,41 +155,20 @@ def partition_fragmentation(
 ) -> DataFrame:
     """(subset, fragmentation): 1 - |largest connected piece| / |C| on the
     cluster-induced subgraph (PartitionFragmentation.hpp:13). Connected
-    pieces via min-label propagation restricted to intra-cluster edges —
-    all clusters converge in one shared loop."""
-    intra = checkpoint(_labeled(eu, partition).where(F.col("cs") == F.col("cd")).select(
-        F.col("cs").alias("subset"), "src", "dst"
-    ))
-    labels = partition.select("subset", F.col("id"), F.col("id").alias("comp"))
-    for _ in range(max_iter):
-        nbr_min = (
-            intra.join(
-                labels.select("subset", F.col("id").alias("dst"), F.col("comp").alias("nc")),
-                ["subset", "dst"],
-            )
-            .groupBy("subset", F.col("src").alias("id"))
-            .agg(F.min("nc").alias("nbr_comp"))
-        )
-        new_labels = checkpoint(
-            labels.join(nbr_min, ["subset", "id"], "left")
-            .select(
-                "subset",
-                "id",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
-        )
-        changed = (
-            new_labels.join(
-                labels.select("subset", "id", F.col("comp").alias("old")),
-                ["subset", "id"],
-            )
-            .where(F.col("comp") != F.col("old"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if changed:
-            break
-    piece = labels.groupBy("subset", "comp").agg(F.count(F.lit(1)).alias("psz"))
+    pieces via ``connected_components`` over the intra-cluster arcs, each
+    node seeded with its own id — all clusters converge in one shared
+    loop, and no arc crosses a cluster."""
+    intra = _labeled(eu, partition).where(F.col("cs") == F.col("cd"))
+    comp = connected_components(
+        checkpoint(intra.select("src", "dst")),
+        max_iter,
+        labels=partition.select("id", F.col("id").alias("component")),
+    )
+    piece = (
+        comp.join(partition.select("id", "subset"), "id")
+        .groupBy("subset", "component")
+        .agg(F.count(F.lit(1)).alias("psz"))
+    )
     largest = piece.groupBy("subset").agg(F.max("psz").alias("max_piece"))
     sizes = partition.groupBy("subset").agg(F.count(F.lit(1)).alias("sz"))
     return sizes.join(largest, "subset", "left").select(

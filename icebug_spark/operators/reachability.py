@@ -10,32 +10,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.traversal import multi_source_bfs
 from icebug_spark.plans.iterate import checkpoint
 
 
 def reachable_nodes(
     edges: DataFrame, sources: list[int], max_hops: int = 64
 ) -> DataFrame:
-    """Exact |reachable(u)| for each source (directed closure), batched:
-    one multi-source frontier loop, state = (source, node). Returns
-    (source, n_reachable) counting the source itself."""
-    spark = edges.sparkSession
+    """Exact |reachable(u)| for each distinct source (directed closure),
+    batched as one ``multi_source_bfs``. Returns (source, n_reachable)
+    counting the source itself."""
     e = checkpoint(edges.select("src", "dst").distinct())
-    frontier = spark.createDataFrame(
-        [(s, s) for s in sources], "source BIGINT, node BIGINT"
+    return (
+        multi_source_bfs(e, sources, max_hops)
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n_reachable"))
     )
-    seen = frontier
-    for _ in range(max_hops):
-        frontier = checkpoint(
-            frontier.join(e, frontier.node == e.src)
-            .select("source", F.col("dst").alias("node"))
-            .distinct()
-            .join(seen, ["source", "node"], "left_anti")
-        )
-        if frontier.isEmpty():
-            break
-        seen = checkpoint(seen.union(frontier))
-    return seen.groupBy("source").agg(F.count(F.lit(1)).alias("n_reachable"))
 
 
 def reachable_nodes_estimate(

@@ -12,7 +12,8 @@ Parity target: reference ``components/StronglyConnectedComponents.hpp:22``
      on the single 1,000-node SCC; 322 s → ~15 s, the classic
      FW-BW-Trim observation from the parallel-SCC literature)
   1. propagate max node id forward to a fixpoint → color(v)
-  2. roots r (color(r)=r) backward-search within their color class;
+  2. roots r (color(r)=r) backward-search within their color class
+     (``traversal.expand_round`` levels keyed by color, frontier only);
      every node that reaches r inside the color = SCC(r)
   3. remove found SCCs, repeat on the remainder
 Every color class is processed in parallel in one round; rounds are
@@ -24,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.traversal import expand_round
 from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
 
 
@@ -96,32 +98,29 @@ def strongly_connected_components(
             if mp["s"] == prev_sum:
                 break
             prev_sum = mp["s"]
-        # 2. backward reachability to the color root within the color class
+        # 2. backward reachability to the color root within the color
+        # class: expand_round levels keyed by color over the reversed
+        # same-color arcs. Each node has exactly one color and the arcs
+        # join only same-color nodes, so the carried key is always the
+        # reached node's own color.
         ec = checkpoint(
             e.join(color.withColumnRenamed("id", "src").withColumnRenamed("color", "c1"), "src")
             .join(color.withColumnRenamed("id", "dst").withColumnRenamed("color", "c2"), "dst")
             .where(F.col("c1") == F.col("c2"))
-            .select("src", "dst", F.col("c1").alias("color"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         scc, ms = checkpoint_observe(
-            color.where(F.col("id") == F.col("color")).select("id", "color"),
+            color.where(F.col("id") == F.col("color")).select(
+                "color", "id", F.lit(True).alias("frontier")
+            ),
             F.count(F.lit(1)).alias("n"),
         )
-        prev_n = int(ms["n"] or 0)
+        rows = int(ms["n"] or 0)
         for _ in range(max_prop):
-            # grow backward: u joins if u→v for some v already in SCC(color)
-            # and color(u) == color
-            grow = (
-                ec.join(scc.withColumnRenamed("id", "dst"), ["dst", "color"])
-                .select(F.col("src").alias("id"), "color")
-                .distinct()
-            )
-            scc, mg = checkpoint_observe(
-                scc.union(grow).distinct(), F.count(F.lit(1)).alias("n")
-            )
-            if int(mg["n"] or 0) == prev_n:
+            scc, mg = expand_round(scc, ec, rows, key=("color",))
+            rows = int(mg["nf"] or 0)
+            if rows == 0:
                 break
-            prev_n = int(mg["n"] or 0)
         found = scc.select("id", F.col("color").alias("component"))
         result = found if result is None else result.union(found)
         result = checkpoint(result)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.traversal import multi_source_bfs
 from icebug_spark.plans.iterate import checkpoint
 
 
@@ -169,21 +170,10 @@ def pagerank_nibble(
 
 def random_bfs_community(eu: DataFrame, seeds: list[int], hops: int = 2) -> DataFrame:
     """RandomBFS (scd/RandomBFS.hpp:14): the k-hop BFS ball around each
-    seed as its community; (seed, id)."""
-    spark = eu.sparkSession
-    frontier = spark.createDataFrame([(s, s) for s in seeds], "seed BIGINT, id BIGINT")
-    members = frontier
-    for _ in range(hops):
-        frontier = checkpoint(
-            frontier.join(eu.select(F.col("src").alias("id"), "dst"), "id")
-            .select("seed", F.col("dst").alias("id"))
-            .distinct()
-            .join(members, ["seed", "id"], "left_anti")
-        )
-        if frontier.isEmpty():
-            break
-        members = checkpoint(members.union(frontier))
-    return members
+    distinct seed as its community; (seed, id)."""
+    return multi_source_bfs(eu, seeds, hops).select(
+        F.col("source").alias("seed"), "id"
+    )
 
 
 def set_conductance(eu: DataFrame, members: DataFrame) -> DataFrame:

@@ -9,18 +9,30 @@ Each round joins the *frontier only* (not the full distance table) against
 edges — frontier-restricted joins keep per-round shuffle proportional to
 the wavefront, the key property for scale-out BFS.
 
-Two round kernels serve the whole BFS/SSSP family, each one checkpoint
-job per round with the caller's convergence aggregates observed on it:
+Three round kernels serve the level-synchronous traversals, each one
+checkpoint job per round with the caller's convergence aggregates observed
+on it:
 
 - ``expand_round`` — one BFS level over ``(*key, id, frontier)`` state:
-  ``multi_source_bfs`` / ``bfs_distances`` here, ``pointtopoint``'s
-  ``bidirectional_bfs`` and ``multi_target_bfs``, and the affected cone of
-  ``streaming.dynamic2``;
+  ``multi_source_bfs`` / ``bfs_distances`` here (and through them
+  ``reachability.reachable_nodes``, ``scd.random_bfs_community`` and the
+  distance tables of the centrality, distance and layout modules),
+  ``pointtopoint``'s ``bidirectional_bfs`` and ``multi_target_bfs``, the
+  backward growth inside each colour class of ``scc``, and the affected
+  cone of ``streaming.dynamic2``;
+- ``sigma_round`` — one BFS level that also counts shortest paths, over
+  ``(*key, id, dist, sigma, frontier)`` state: ``centrality2.sigma_levels``
+  (``bfs_sigma``, ``brandes_deltas`` and the DynBetweenness caches) and
+  ``centrality4._sampled_path_members`` (ApproxBetweenness, group
+  betweenness, KADABRA);
 - ``relax_round`` — one Bellman-Ford relax round over ``(id, dist,
   changed)`` state: ``sssp_weighted`` here, ``pointtopoint``'s
   ``bidirectional_dijkstra``, ``multi_target_dijkstra`` and ``astar``, and
   the DynBFS / DynSSSP maintainers (``dynamic2.dyn_bfs_update``,
   ``dynamic3.dyn_sssp_update``).
+
+Min-label propagation has its own kernel, ``components.connected_components``
+(seedable through ``labels=``).
 """
 
 from __future__ import annotations
@@ -59,6 +71,50 @@ def expand_round(
         .unionByName(nxt)
         .groupBy(*key, "id")
         .agg((~F.max("seen")).alias("frontier"))
+    )
+    return checkpoint_observe(
+        merged, F.sum(F.col("frontier").cast("long")).alias("nf"), *aggs
+    )
+
+
+def sigma_round(
+    state: DataFrame, e: DataFrame, frontier_rows: int, *aggs, key=()
+) -> tuple[DataFrame, dict]:
+    """One σ-BFS level over ``(*key, id, dist, sigma, frontier)`` state and
+    ``(src, dst)`` edges → ``(state, metrics)``: ``expand_round``'s carrier
+    shape plus Brandes' shortest-path counts. ``metrics["nf"]`` is the new
+    frontier size and ``aggs`` ride the same job.
+
+    A node is NEW exactly when its group has no carrier row; its ``dist``
+    is the messages' min ``dist + 1`` and its σ the sum of the messages'
+    σ (every message comes from the same level). Seen nodes keep their
+    carried ``dist`` and σ. ``dist`` keeps the type of the caller's seed —
+    no cast here, so an INT seed stays INT wherever it is hashed."""
+    frontier = state.where(F.col("frontier"))
+    msgs = mirror(frontier, frontier_rows).join(e, frontier.id == e.src).select(
+        *key,
+        F.col("dst").alias("id"),
+        (F.col("dist") + 1).alias("dist"),
+        "sigma",
+        F.lit(False).alias("seen"),
+    )
+    merged = (
+        state.select(*key, "id", "dist", "sigma", F.lit(True).alias("seen"))
+        .unionByName(msgs)
+        .groupBy(*key, "id")
+        .agg(
+            F.min(F.when(F.col("seen"), F.col("dist"))).alias("sd"),
+            F.min(F.when(~F.col("seen"), F.col("dist"))).alias("md"),
+            F.max(F.when(F.col("seen"), F.col("sigma"))).alias("ssig"),
+            F.sum(F.when(~F.col("seen"), F.col("sigma"))).alias("msig"),
+        )
+        .select(
+            *key,
+            "id",
+            F.coalesce("sd", "md").alias("dist"),
+            F.coalesce("ssig", "msig").alias("sigma"),
+            F.col("sd").isNull().alias("frontier"),
+        )
     )
     return checkpoint_observe(
         merged, F.sum(F.col("frontier").cast("long")).alias("nf"), *aggs
@@ -140,16 +196,16 @@ def multi_source_bfs(
     e = edges.select("src", "dst")
     spark = edges.sparkSession
     # de-dup up front: a repeated source would otherwise emit two level-0 rows
+    srcs = sorted({int(s) for s in sources})
     state = checkpoint(
         spark.createDataFrame(
-            [(s, s) for s in sorted({int(s) for s in sources})],
-            "source BIGINT, id BIGINT",
+            [(s, s) for s in srcs], "source BIGINT, id BIGINT"
         ).withColumn("frontier", F.lit(True))
     )
     key = ("source",)
     levels = [level(state, 0, key)]
     # exact frontier sizes are free: each round observes the next one
-    rows = len(sources)
+    rows = len(srcs)
     for h in range(1, max_hops + 1):
         state, m = expand_round(state, e, rows, key=key)
         rows = int(m["nf"] or 0)

@@ -105,8 +105,9 @@ def test_reachable_nodes(spark):
     from icebug_spark.operators.reachability import reachable_nodes
 
     e = _edges(spark, [(0, 1), (1, 2), (3, 4)])
-    out = {r["source"]: r["n_reachable"] for r in reachable_nodes(e, [0, 3, 4]).collect()}
-    assert out == {0: 3, 3: 2, 4: 1}
+    # the repeated source 0 is counted once, not once per occurrence
+    rows = reachable_nodes(e, [0, 0, 3, 4]).collect()
+    assert sorted((r["source"], r["n_reachable"]) for r in rows) == [(0, 3), (3, 2), (4, 1)]
 
 
 def test_all_simple_paths(spark):

@@ -1,8 +1,9 @@
-"""Default-run checks of the BFS/SSSP family that runs on traversal's two
-round kernels (``expand_round`` / ``relax_round``): a point-to-point smoke
-test against the single-source searches, the ``dist`` dtype each search
-returns, and a lint that every module of the package truncates lineage
-only through ``plans.iterate``."""
+"""Default-run checks of the traversals that run on traversal's round
+kernels (``expand_round`` / ``sigma_round`` / ``relax_round``): a
+point-to-point smoke test against the single-source searches, a σ-BFS and
+Brandes smoke test, the ``dist`` dtype each search returns, and a lint
+that every module of the package truncates lineage only through
+``plans.iterate``."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import pathlib
 import pytest
 
 from icebug_spark.operators import pointtopoint as pp
+from icebug_spark.operators.centrality2 import bfs_sigma, brandes_deltas
 from icebug_spark.operators.traversal import (
     bfs_distances,
     multi_source_bfs,
@@ -73,6 +75,28 @@ def test_point_to_point_searches_smoke(spark):
         assert _dtype(df) == "bigint"
     for df in (sssp, dyn_s, mtd):
         assert _dtype(df) == "double"
+
+
+# diamond 0-{1,2}-3 plus the tail 3-4: two shortest paths reach 3 and 4
+DIAMOND = [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4)]
+
+
+def test_sigma_kernel_smoke(spark):
+    """``bfs_sigma`` and ``brandes_deltas`` on ``traversal.sigma_round``:
+    σ = 2 at the join node and below it, Brandes dependencies from 0, a
+    repeated source counted once, and ``dist`` BIGINT / ``sigma`` DOUBLE."""
+    eu = spark.createDataFrame(
+        DIAMOND + [(b, a) for a, b in DIAMOND], "src BIGINT, dst BIGINT"
+    )
+    tab = bfs_sigma(eu, [0, 0])
+    assert sorted(map(tuple, tab.collect())) == [
+        (0, 0, 0, 1.0), (0, 1, 1, 1.0), (0, 2, 1, 1.0), (0, 3, 2, 2.0), (0, 4, 3, 2.0)
+    ]
+    assert dict(tab.dtypes)["dist"] == "bigint"
+    assert dict(tab.dtypes)["sigma"] == "double"
+    # δ(3) = σ3/σ4·1, δ(1) = δ(2) = σ1/σ3·(1+δ3), δ(0) = Σ σ0/σw·(1+δw)
+    got = {r["id"]: r["delta"] for r in brandes_deltas(eu, [0]).collect()}
+    assert got == pytest.approx({0: 4.0, 1: 1.0, 2: 1.0, 3: 1.0})
 
 
 _REPO = pathlib.Path(__file__).resolve().parents[1]

@@ -192,3 +192,43 @@ def test_reliable_checkpoint(eu, spark, monkeypatch):
         finally:
             monkeypatch.undo()
             spark.conf.unset("spark.icebug.reliableCheckpoint")
+
+
+def test_reliable_checkpoint_traversal_smoke(eu, spark, monkeypatch, tmp_path):
+    """Default-run slice of ``test_reliable_checkpoint``: with the flag on
+    and ``localCheckpoint`` raising, the expand, σ and min-label kernels
+    (through ``reachable_nodes``, ``bfs_sigma`` and
+    ``partition_fragmentation``) return their default-mode outputs, pinned
+    here as literals so that only the reliable pass runs."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from icebug_spark.operators.centrality2 import bfs_sigma
+    from icebug_spark.operators.quality import partition_fragmentation
+    from icebug_spark.operators.reachability import reachable_nodes
+
+    part = spark.createDataFrame(
+        [(0, 0), (1, 0), (2, 1), (3, 1), (4, 1), (5, 1)], "id BIGINT, subset BIGINT"
+    )
+    runs = {
+        "reachable": (lambda: reachable_nodes(eu, [0, 4]), [(0, 4), (4, 2)]),
+        "sigma": (
+            lambda: bfs_sigma(eu, [0]),
+            [(0, h, h, 1.0) for h in range(4)],
+        ),
+        # pieces {0, 1} of cluster 0, {2, 3} and {4, 5} of cluster 1
+        "fragmentation": (lambda: partition_fragmentation(eu, part), [(0, 0.0), (1, 0.5)]),
+    }
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    spark.conf.set("spark.icebug.reliableCheckpoint", "true")
+
+    def local_checkpoint(*a, **k):
+        raise AssertionError("localCheckpoint under reliableCheckpoint=true")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", local_checkpoint)
+    try:
+        for name, (run, default) in runs.items():
+            assert sorted(map(tuple, run().collect())) == default, name
+        assert any(tmp_path.iterdir())
+    finally:
+        monkeypatch.undo()
+        spark.conf.unset("spark.icebug.reliableCheckpoint")

@@ -162,3 +162,49 @@ def test_point_to_point_marginal_jobs_per_round(spark, search):
     marginal = (_p2p_jobs(spark, search, 8) - _p2p_jobs(spark, search, 4)) / 4.0
     bound = _P2P_BOUNDS[search]
     assert marginal <= bound, f"{search} jobs/round regressed: {marginal} > {bound}"
+
+
+def _loop_jobs(spark, op: str, depth: int) -> int:
+    """Jobs of one call on the path 0..depth, whose loop runs one round
+    per unit of depth: reachability over the directed path from 0,
+    RandomBFS from 0 and fragmentation (the path as one cluster) over the
+    symmetric path."""
+    from icebug_spark.operators.quality import partition_fragmentation
+    from icebug_spark.operators.reachability import reachable_nodes
+    from icebug_spark.operators.scd import random_bfs_community
+
+    sc = spark.sparkContext
+    arcs = [(i, i + 1) for i in range(depth)]
+    if op != "reachable_nodes":
+        arcs += [(b, a) for a, b in arcs]
+    e = spark.createDataFrame(arcs, "src BIGINT, dst BIGINT").localCheckpoint(eager=True)
+    if op == "partition_fragmentation":
+        part = spark.createDataFrame(
+            [(i, 0) for i in range(depth + 1)], "id BIGINT, subset BIGINT"
+        ).localCheckpoint(eager=True)
+    run, expect = {
+        "reachable_nodes": (lambda: reachable_nodes(e, [0]), [(0, depth + 1)]),
+        "random_bfs_community": (
+            lambda: random_bfs_community(e, [0], hops=depth).groupBy("seed").count(),
+            [(0, depth + 1)],
+        ),
+        "partition_fragmentation": (lambda: partition_fragmentation(e, part), [(0, 0.0)]),
+    }[op]
+    group = f"{op}_jobs_{depth}"
+    sc.setJobGroup(group, "probe")
+    rows = [tuple(r) for r in run().collect()]
+    sc.setJobGroup(None, None)
+    assert rows == expect
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "op", ["partition_fragmentation", "random_bfs_community", "reachable_nodes"]
+)
+def test_traversal_loop_marginal_jobs_per_round(spark, op):
+    """Reachability and RandomBFS run on multi_source_bfs's expand rounds,
+    fragmentation on connected_components' min-label rounds: each unit of
+    path depth costs at most 4 jobs. Their own visited-set loops cost 9,
+    9 and 11."""
+    marginal = (_loop_jobs(spark, op, 8) - _loop_jobs(spark, op, 4)) / 4.0
+    assert marginal <= 4.0, f"{op} jobs/round regressed: {marginal}"

@@ -69,8 +69,9 @@ def test_random_bfs_community(spark):
     from icebug_spark.operators.scd import random_bfs_community
 
     eu = _eu(spark, [(0, 1), (1, 2), (2, 3), (3, 4)])
-    got = {r["id"] for r in random_bfs_community(eu, [0], hops=2).collect()}
-    assert got == {0, 1, 2}
+    # the repeated seed 0 yields one community, each member once
+    got = sorted(map(tuple, random_bfs_community(eu, [0, 0], hops=2).collect()))
+    assert got == [(0, 0), (0, 1), (0, 2)]
 
 
 def test_random_walks_shape_and_validity(spark):
