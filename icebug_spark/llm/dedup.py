@@ -45,10 +45,11 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
 def _gram_arrays(documents: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, grams ARRAY<STRING>): every word n-gram occurrence of the
     normalized text, in position order — the ZERO-shuffle kernel under
-    :func:`shingles`, :func:`_kgram_starts` and the MinHash signature
-    build. The token array is materialized once per row at the project
-    level, sliced into n shifted views and stitched via ``arrays_zip`` +
-    ``transform`` (the lambda touches only the zipped struct).
+    :func:`shingles`, :func:`_kgram_starts` and the MinHash shingle
+    sets of :func:`minhash_lsh_duplicates`. The token array is materialized once
+    per row at the project level, sliced into n shifted views and
+    stitched via ``arrays_zip`` + ``transform`` (the lambda touches only
+    the zipped struct).
 
     Two trip-wires the shape avoids: referencing the token array INSIDE
     a lambda (``transform(sequence(...), i -> element_at(toks, i+j))``)
@@ -158,6 +159,18 @@ def ngram_jaccard_pairs(
     )
 
 
+def _signatures(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc_id, sig ARRAY<BIGINT>) from a (doc_id, shingle) table — the
+    one MinHash kernel: slot i is ``min(xxhash64(i, shingle))`` over the
+    doc's rows, one codegen'd groupBy (map-side partial mins) instead of
+    ``num_hashes`` interpreted array folds per row."""
+    return sh.groupBy("doc_id").agg(
+        F.array(
+            *[F.min(F.xxhash64(F.lit(i), F.col("shingle"))) for i in range(num_hashes)]
+        ).alias("sig")
+    )
+
+
 def minhash_signatures(
     documents: DataFrame,
     n: int = 3,
@@ -167,36 +180,13 @@ def minhash_signatures(
     """(doc_id, sig ARRAY<BIGINT>): MinHash over word-n-gram shingles.
     Hash family: xxhash64 seeded by permutation index (JVM-side).
     ``shingle_df``: pre-computed ``shingles(documents, n)`` (or any
-    (doc_id, shingle) table, e.g. a capped one) — that path aggregates
-    with a groupBy. Without it, signatures are computed IN-ROW from the
-    gram arrays (min over a multiset equals min over its distinct set),
-    which removes the corpus-sized groupBy shuffle entirely — the
-    signature build becomes a narrow map stage. Docs with no shingles
-    produce no row on either path."""
-    if shingle_df is None:
-        ga = _gram_arrays(documents, n)
-        return ga.where(F.size("grams") > 0).select(
-            "doc_id",
-            F.array(
-                *[
-                    F.array_min(
-                        F.transform(
-                            F.col("grams"), lambda g: F.xxhash64(F.lit(i), g)
-                        )
-                    )
-                    for i in range(num_hashes)
-                ]
-            ).alias("sig"),
-        )
-    sh = shingle_df
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    agg = sh.groupBy("doc_id").agg(*mins)
-    return agg.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    (doc_id, shingle) table, e.g. a capped one); without it the
+    shingles are built from ``documents``. Both paths, and
+    :func:`minhash_lsh_duplicates`, aggregate through the same kernel
+    (:func:`_signatures`), so a signature depends only on the doc's
+    distinct shingle set. Docs with no shingles produce no row."""
+    sh = shingles(documents, n) if shingle_df is None else shingle_df
+    return _signatures(sh, num_hashes)
 
 
 def band_buckets(
@@ -252,63 +242,46 @@ def minhash_lsh_duplicates(
     true similarity s). Candidates are then verified exactly, so output
     precision is 1.0 and only recall depends on the sketch.
 
-    One GRAM-ARRAY table is materialized and shared by the signature
-    build and the exact-verify stage — the corpus is tokenized once, and
-    both consumers are zero-shuffle projections of the checkpoint: the
-    signatures are in-row array folds (no corpus-sized groupBy) and the
-    verify-stage shingle table is an in-row dedup + explode."""
-    ga = checkpoint(_gram_arrays(documents, n))
-    sig = ga.where(F.size("grams") > 0).select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(F.col("grams"), lambda g: F.xxhash64(F.lit(i), g))
-                )
-                for i in range(num_hashes)
-            ]
-        ).alias("sig"),
+    Each per-document quantity is computed once: one checkpointed table
+    of distinct shingle SETS ``(doc_id, s)`` feeds both the signatures
+    (exploded into the shared :func:`_signatures` kernel, the same path
+    :func:`band_buckets` takes) and the verify, which joins each
+    candidate pair to both docs' sets and scores it in-row —
+    ``common = size(array_intersect(sa, sb))``, Jaccard
+    ``common / (|sa| + |sb| - common)`` rounded 6 dp. No shingle
+    self-join: verify cost scales with the candidate count, not with
+    shingle co-occurrences."""
+    sets = checkpoint(
+        _gram_arrays(documents, n)
+        .where(F.size("grams") > 0)
+        .select("doc_id", F.array_distinct("grams").alias("s"))
     )
+    sig = _signatures(sets.select("doc_id", F.explode("s").alias("shingle")), num_hashes)
     band_rows = _bands_from_sig(sig, num_hashes, bands)
-    sh_all = ga.select(
-        "doc_id", F.explode(F.array_distinct("grams")).alias("shingle")
-    )
     a = band_rows.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     b = band_rows.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-    candidates = checkpoint(
+    candidates = (
         a.join(b, ["band", "bucket"])
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # Verify ONLY the candidate pairs (the whole point of LSH at scale):
-    # restrict the shingle table to docs that appear in some candidate,
-    # then compute exact Jaccard on that small subset.
-    cand_docs = (
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .union(candidates.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh = checkpoint(sh_all.join(cand_docs, "doc_id", "leftsemi"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a2 = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b2 = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        a2.join(b2, "shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .join(candidates, ["doc_a", "doc_b"], "leftsemi")
-    )
-    return (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"))
+    scored = (
+        candidates.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
             "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
             "doc_b",
+            F.size(F.array_intersect("sa", "sb")).alias("common"),
+            F.size("sa").alias("na"),
+            F.size("sb").alias("nb"),
         )
+    )
+    # a pair sharing no shingle is not a duplicate, whatever the threshold
+    return (
+        scored.where(F.col("common") > 0)
         .select(
             "doc_a",
             "doc_b",

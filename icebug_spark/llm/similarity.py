@@ -45,12 +45,21 @@ def cosine_topk(
     ``query_filter``: Column predicate over vec_id selecting the probe set
     (kept small → broadcast). Returns (query_id, vec_id, cosine, rnk) with
     cosine rounded 6dp and rank ties broken by vec_id (deterministic).
-    Self-matches are excluded."""
+    Self-matches are excluded. Each vector's norm is computed once,
+    before the cross join, so a pair costs one dot product."""
     from pyspark.sql import Window
 
-    base = embeddings.select("vec_id", "embedding")
+    # each norm once per vector (the probe's from the same column), not
+    # twice per pair; dot / (qnrm * nrm) keeps the per-pair formula's
+    # operand order, so every double — and its 6 dp rounding — is
+    # unchanged (unit-normalizing first would move the last bits)
+    base = embeddings.select(
+        "vec_id", "embedding", F.sqrt(_norm2(F.col("embedding"))).alias("nrm")
+    )
     q = base.where(query_filter(F.col("vec_id"))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qemb"),
+        F.col("nrm").alias("qnrm"),
     )
     scored = (
         F.broadcast(q)
@@ -61,10 +70,7 @@ def cosine_topk(
             "vec_id",
             F.round(
                 _dot(F.col("qemb"), F.col("embedding"))
-                / (
-                    F.sqrt(_norm2(F.col("qemb")))
-                    * F.sqrt(_norm2(F.col("embedding")))
-                ),
+                / (F.col("qnrm") * F.col("nrm")),
                 6,
             ).alias("cosine"),
         )

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -197,9 +198,12 @@ def multi_source_bfs(
     spark = edges.sparkSession
     # de-dup up front: a repeated source would otherwise emit two level-0 rows
     srcs = sorted({int(s) for s in sources})
+    # seeds go through the Arrow pandas path: the JVM decodes the batch,
+    # where a Python list is unpickled by Python worker tasks
+    ids = pd.Series(srcs, dtype="int64")
     state = checkpoint(
         spark.createDataFrame(
-            [(s, s) for s in srcs], "source BIGINT, id BIGINT"
+            pd.DataFrame({"source": ids, "id": ids}), "source BIGINT, id BIGINT"
         ).withColumn("frontier", F.lit(True))
     )
     key = ("source",)
@@ -226,7 +230,8 @@ def sssp_weighted(
     spark = edges_weighted.sparkSession
     state = checkpoint(
         spark.createDataFrame(
-            [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
+            pd.DataFrame({"id": [int(source)], "dist": [0.0], "changed": [True]}),
+            "id BIGINT, dist DOUBLE, changed BOOLEAN",
         )
     )
     rows = 1

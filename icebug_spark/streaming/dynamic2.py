@@ -148,10 +148,23 @@ def dyn_bfs_update(
     lengthen paths — detected by dropping the affected nodes' labels and
     re-relaxing from their still-settled neighbors (bounded recompute; the
     reference tracks the same 'affected' set per event). Unit weights keep
-    ``dist`` BIGINT."""
+    ``dist`` BIGINT.
+
+    ``max_rounds`` is also the depth cap, as ``max_hops`` is for
+    ``bfs_distances``: the result holds exactly the nodes within
+    ``max_rounds`` hops of the source. The relax rounds alone would keep
+    labels past the cap, e.g. on a path an addition hangs onto a node at
+    depth ``max_rounds``. The rounds still settle every node within the
+    cap. Every label within the cap is the length of a real path in the
+    new graph: an old label whose path crossed a removed edge lies within
+    ``max_rounds`` hops of the last such edge, so the cone dropped it,
+    and a relaxed label exceeds the label it came from. The source keeps
+    0, and round r ends with every label at most the length of the
+    shortest path of r or fewer edges, as a relax of all rows would. So
+    a node at depth d <= ``max_rounds`` holds d after d rounds."""
     ew = checkpoint(_sym(edges_new)).select("src", "dst", F.lit(1).alias("weight"))
     dist = dist.select("id", F.col("dist").cast("long").alias("dist"))
-    return _resume(dist, ew, batch, max_rounds)
+    return _resume(dist, ew, batch, max_rounds).where(F.col("dist") <= max_rounds)
 
 
 def dyn_cc_update(

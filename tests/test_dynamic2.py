@@ -207,3 +207,17 @@ def test_dyn_bfs_mixed_batch(spark):
     assert got == want
     # 2 and 3 now reached only via the new shortcut 0-4
     assert got[4] == 1 and got[3] == 2 and got[2] == 3
+
+
+def test_dyn_bfs_update_caps_depth_at_max_rounds(spark):
+    # path 0..4 from the source and a separate path 5..9; the added edge
+    # (4, 5) hangs the second path at depth 5..9, past the cap of 4, so
+    # like bfs_distances(max_hops=4) the update keeps nodes 0..4 only
+    pairs = [(i, i + 1) for i in range(4)] + [(i, i + 1) for i in range(5, 9)]
+    old = _sym_df(spark, pairs)
+    dist0 = spark.createDataFrame([(i, i) for i in range(5)], "id LONG, dist LONG")
+    batch = _batch(spark, [("EDGE_ADDITION", 4, 5), ("EDGE_ADDITION", 5, 4)])
+    new = apply_edge_events(old, batch)
+    got = _dists(dyn_bfs_update(dist0, new, batch, max_rounds=4))
+    assert got == {i: i for i in range(5)}
+    assert got == _dists(bfs_distances(new, source=0, max_hops=4))

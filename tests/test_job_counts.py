@@ -208,3 +208,33 @@ def test_traversal_loop_marginal_jobs_per_round(spark, op):
     9 and 11."""
     marginal = (_loop_jobs(spark, op, 8) - _loop_jobs(spark, op, 4)) / 4.0
     assert marginal <= 4.0, f"{op} jobs/round regressed: {marginal}"
+
+
+def test_minhash_lsh_jobs(spark):
+    """MinHash LSH on a 60-doc near-duplicate corpus: one checkpoint of the
+    shingle sets, then the candidate join and the in-row verify in one
+    query (its adaptive stages run as their own jobs). The shingle
+    self-join verify it replaced cost 17 jobs here."""
+    import random
+
+    from icebug_spark.llm.dedup import minhash_lsh_duplicates
+
+    rnd = random.Random(3)
+    texts = []
+    for i in range(60):
+        t = list(texts[i - 1]) if i % 4 == 1 else [f"w{rnd.randrange(40)}" for _ in range(12)]
+        if i % 8 == 1:
+            t[rnd.randrange(12)] = "edit"
+        texts.append(t)
+    docs = spark.createDataFrame(
+        [(i, " ".join(t)) for i, t in enumerate(texts)], "doc_id BIGINT, text STRING"
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash_jobs", "probe")
+    pairs = minhash_lsh_duplicates(docs, threshold=0.5).collect()
+    sc.setJobGroup(None, None)
+    assert {(r["doc_a"], r["doc_b"]) for r in pairs if r["jaccard"] == 1.0} >= {
+        (i - 1, i) for i in range(5, 60, 8)
+    }
+    jobs = len(sc.statusTracker().getJobIdsForGroup("minhash_jobs"))
+    assert jobs <= 8, f"minhash_lsh_duplicates jobs regressed: {jobs}"

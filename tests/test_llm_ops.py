@@ -46,6 +46,70 @@ def test_minhash_lsh_recovers_exact_dup(docs):
     assert (0, 1) in pairs
 
 
+def _near_dup_corpus(spark, n_docs=40, seed=7):
+    """Seeded documents over a 60-word vocabulary: every 5th doc is an
+    exact copy of its predecessor, every 3rd an earlier doc with 1-3
+    tokens replaced, so exact, near and unrelated pairs all occur; every
+    7th doc's words are double-spaced. → (documents, token lists)."""
+    import random
+
+    rnd = random.Random(seed)
+    words = [f"w{i}" for i in range(60)]
+    texts = []
+    for i in range(n_docs):
+        if i and i % 5 == 0:
+            t = list(texts[-1])
+        elif i and i % 3 == 0:
+            t = list(texts[rnd.randrange(i)])
+            for p in rnd.sample(range(len(t)), rnd.randint(1, 3)):
+                t[p] = rnd.choice(words)
+        else:
+            t = [rnd.choice(words) for _ in range(rnd.randint(8, 20))]
+        texts.append(t)
+    rows = [(i, "  ".join(t) if i % 7 == 0 else " ".join(t)) for i, t in enumerate(texts)]
+    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING"), texts
+
+
+def test_minhash_signatures_in_row_equals_shingle_path(docs):
+    """The documents path and the precomputed-shingle path build the same
+    signature for every doc."""
+    from icebug_spark.llm.dedup import minhash_signatures, shingles
+
+    got = {r["doc_id"]: list(r["sig"]) for r in minhash_signatures(docs).collect()}
+    via = {
+        r["doc_id"]: list(r["sig"])
+        for r in minhash_signatures(docs, shingle_df=shingles(docs)).collect()
+    }
+    assert got == via and len(got) == 5 and all(len(s) == 16 for s in got.values())
+
+
+def test_minhash_lsh_jaccard_equals_python_sets(spark):
+    """Every verified pair carries the exact Jaccard of the two docs'
+    distinct trigram sets, rounded half-up at 6 dp as Spark's round is;
+    every identical pair is found and no pair is below the threshold."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from icebug_spark.llm.dedup import minhash_lsh_duplicates
+
+    df, toks = _near_dup_corpus(spark)
+    sets = [{" ".join(t[j : j + 3]) for j in range(len(t) - 2)} for t in toks]
+
+    def jac(a, b):
+        x = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in minhash_lsh_duplicates(df, threshold=0.3).collect()
+    }
+    assert got and all(v == jac(a, b) and v >= 0.3 for (a, b), v in got.items())
+    ident = {
+        (a, b) for a in range(len(sets)) for b in range(a + 1, len(sets)) if sets[a] == sets[b]
+    }
+    assert ident and ident <= set(got)
+    assert any(v < 1.0 for v in got.values())
+
+
 def test_simhash_identical_for_dups(docs):
     from icebug_spark.llm.dedup import simhash
 
@@ -81,6 +145,56 @@ def test_cosine_topk_self_similarity(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     top = cosine_topk(emb, query_filter=lambda c: c == 0, k=2).collect()
     assert [r["vec_id"] for r in sorted(top, key=lambda r: r["rnk"])] == [1, 2]
+
+
+def test_cosine_topk_bit_identical_to_per_pair_norms(spark):
+    """Per-vector norms give every cosine bit-for-bit the value of the
+    per-pair formula round(dot / (sqrt(|q|^2) * sqrt(|v|^2)), 6), and
+    equal cosines rank by vec_id."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from icebug_spark.llm.similarity import _dot, _norm2, cosine_topk
+
+    rnd = random.Random(11)
+    vecs = [[rnd.gauss(0.0, 1.0) for _ in range(64)] for _ in range(200)]
+    for i in (50, 51, 120):  # exact copies of a probe's neighbour: tied cosines
+        vecs[i] = list(vecs[7])
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id BIGINT, embedding ARRAY<FLOAT>"
+    )
+    probes = [3, 7, 150]
+    got = cosine_topk(emb, lambda c: c.isin(probes), k=200).collect()
+    q = emb.where(F.col("vec_id").isin(probes)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")
+    )
+    old = {
+        (r["query_id"], r["vec_id"]): r["cosine"]
+        for r in q.crossJoin(emb)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(
+                _dot(F.col("qemb"), F.col("embedding"))
+                / (F.sqrt(_norm2(F.col("qemb"))) * F.sqrt(_norm2(F.col("embedding")))),
+                6,
+            ).alias("cosine"),
+        )
+        .collect()
+    }
+    assert len(got) == len(old) == 3 * 199
+    assert all(r["cosine"] == old[(r["query_id"], r["vec_id"])] for r in got)
+    for p in probes:
+        ranked = sorted((r for r in got if r["query_id"] == p), key=lambda r: r["rnk"])
+        assert [r["rnk"] for r in ranked] == list(range(1, 200))
+        assert [r["vec_id"] for r in ranked] == [
+            v for _, v in sorted((-r["cosine"], r["vec_id"]) for r in ranked)
+        ]
+    ties = [r for r in got if r["query_id"] == 3 and r["vec_id"] in (7, 50, 51, 120)]
+    assert len({r["cosine"] for r in ties}) == 1
+    assert [r["vec_id"] for r in sorted(ties, key=lambda r: r["rnk"])] == [7, 50, 51, 120]
 
 
 def test_repetition_filter_flags_repeats(spark):
